@@ -206,18 +206,12 @@ object IngestQueries {
     // between-snapshot freshness analog. The engine applies the segment
     // distributed (chunked latest-wins merges + prefix-projection
     // renames/deletes); the oracle is the INDEPENDENT sequential replay
-    // (tools/gen_editlog.py) a namenode would perform, row-for-row —
+    // (tools/gen_editlog.py) a namenode would perform, row-for-row over
+    // all 26 columns, derived ones included —
     // distributed-chunked ≡ sequential is exactly the claim being checked
     "nna_editlog_apply" -> ((s, _) =>
       graft.ingest.EditLogSource.applyEdits(
-          xmlInodes(s), graft.ingest.EditLogSource.ops(s, EditLogPath))
-        .select(col("id"), col("path"), col("name"),
-          col("depth").cast("long").as("depth"), col("isFile"),
-          col("user"), col("group"), col("permission"),
-          col("accessTime"), col("modTime"), col("fileSize"),
-          col("blockSize"), col("numBlocks"), col("fileReplica"),
-          col("storagePolicyId"), col("isUnderConstruction"),
-          col("nsQuota"), col("dsQuota"))))
+        xmlInodes(s), graft.ingest.EditLogSource.ops(s, EditLogPath))))
 
   /** Checked-in edit-log segment fixture + its authored op table and
     * sequential-replay post-state (provenance: `tools/gen_editlog.py`). */
@@ -247,10 +241,14 @@ WITH eops AS (
 
     "nna_editlog_apply" ->
       (graft.ingest.FsImageXmlSource.oracleCte(EditLogPostCsv) + """
-      SELECT id, path, name, CAST(depth AS BIGINT) AS depth, isFile,
-        "user", "group", permission, accessTime, modTime, fileSize,
-        blockSize, numBlocks, fileReplica, storagePolicyId,
-        isUnderConstruction, nsQuota, dsQuota
+      SELECT id, path, name,
+        CASE WHEN path = '/' THEN NULL WHEN depth = 1 THEN '/'
+             ELSE substr(path, 1, length(path) - length(name) - 1) END AS parent,
+        CAST(depth AS BIGINT) AS depth, isFile, "user", "group", permission,
+        accessTime, modTime, fileSize, blockSize, numBlocks, fileReplica,
+        storagePolicyId, isUnderConstruction, isWithSnapshot, hasAcl,
+        hasEcPolicy, hasQuota, nsQuota, dsQuota, nsQuotaUsed, dsQuotaUsed,
+        dirNumChildren
       FROM oivxml"""),
     "nna_ingest_oiv" -> oracle("""
       SELECT "user", COUNT(*) AS cnt,

@@ -56,7 +56,14 @@ import org.apache.spark.sql.types._
   * length + mtime (block count untouched). OP_TIMES honors the −1 =
   * unchanged sentinel. OP_SET_QUOTA applies both values as given (−1
   * clears). Parent-directory mtime side-effects of create/rename/delete
-  * are not propagated (neither tracks them per-inode).
+  * are not propagated (neither tracks them per-inode). `hasAcl`,
+  * `hasEcPolicy` and `isWithSnapshot` ride along as stored attributes of
+  * the inode: no ACL, erasure-coding or snapshot op is modeled, so a
+  * creation sets all three false — a file created under a snapshottable
+  * directory is not flagged, and a rename across a snapshot root keeps
+  * its flag. The derived columns (name, parent, depth, hasQuota, child
+  * count, quota usage) are recomputed from the replayed tree by
+  * [[graft.inodes.InodeView.derive]].
   */
 object EditLogSource {
 
@@ -164,18 +171,13 @@ object EditLogSource {
         col("DATA.NEWLENGTH").as("newLength"),
         coalesce(col("DATA.OVERWRITE"), lit(false)).as("overwrite"))
 
-  /** The core inode columns the apply maintains; the derived ones (name,
-    * parent, depth) are recomputed from `path` at the end. */
-  private val core = Seq("id", "path", "isFile", "user", "group",
-    "permission", "accessTime", "modTime", "fileSize", "blockSize",
-    "numBlocks", "fileReplica", "storagePolicyId", "isUnderConstruction",
-    "nsQuota", "dsQuota")
-
   /** Replay a parsed ops frame onto a snapshot (any frame carrying the
-    * [[core]] columns — [[graft.inodes.InodeView.columns]] qualifies).
-    * Returns the post-edit namespace with the core columns plus
-    * re-derived (name, parent, depth). See the class doc for the
-    * chunked-apply shape and scope. */
+    * [[graft.inodes.InodeView.stored]] columns —
+    * [[graft.inodes.InodeView.columns]] qualifies). The replay maintains
+    * the stored columns; the post-edit namespace then goes through
+    * [[graft.inodes.InodeView.derive]] once, so it has the exact
+    * [[graft.inodes.InodeView.columns]] schema of an ingested image. See
+    * the class doc for the chunked-apply shape and scope. */
   def applyEdits(snapshot: DataFrame, rawOps: DataFrame): DataFrame = {
     // normalize the structural-payload columns a caller-built ops frame
     // may lack (parse() always emits them; a frame carrying only
@@ -221,7 +223,7 @@ object EditLogSource {
       .map(_.toInt).getOrElse(64)
     require(ckptEvery > 0, "spark.graft.editlog.checkpointEveryOps must be > 0")
 
-    var cur = snapshot.select(core.map(col): _*)
+    var cur = snapshot.select(graft.inodes.InodeView.stored.map(col): _*)
     var lo = Long.MinValue
     var chunk = 0
     var sinceCkpt = 0
@@ -284,14 +286,10 @@ object EditLogSource {
     flushRenames()
     if (occupied(chunk))
       cur = applyBulk(cur, ops.where(col("txid") > lo))
-    cur
-      .withColumn("name", when(col("path") === "/", lit("/"))
-        .otherwise(element_at(split(col("path"), "/"), -1)))
-      .withColumn("depth", when(col("path") === "/", lit(0))
-        .otherwise(size(split(col("path"), "/")) - 1))
-      .withColumn("parent", when(col("path") === "/", lit(null).cast(StringType))
-        .when(col("depth") === 1, lit("/"))
-        .otherwise(expr("substring(path, 1, length(path) - length(name) - 1)")))
+    // derive reads the replayed rows three times (the rows, the child
+    // counts, the quota usage): replay the chunks once, and keep the
+    // plan one replay deep
+    graft.inodes.InodeView.derive(cur.localCheckpoint(eager = true))
   }
 
   /** Tail a directory of OEV-XML edit segments with Structured Streaming,
@@ -302,20 +300,16 @@ object EditLogSource {
     * same way), so FileStreamSource's one-batch-per-new-file matches the
     * real arrival unit. The republished snapshot is locally checkpointed
     * per batch: downstream queries never re-replay the op chain, and the
-    * k-chunk lineage cannot grow unboundedly across segments. */
-  def tail(spark: SparkSession, initial: DataFrame, segmentsDir: String,
-           publish: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    tailWithOps(spark, initial, segmentsDir, (snap, _) => publish(snap))
-
-  /** [[tail]] variant that also hands each batch's TYPED OPS frame to the
-    * callback alongside the post-apply snapshot — what an incremental
-    * consumer needs: `api.IncrementalCensus.touchedPredicate(ops)` turns
-    * the batch into a pushdown scan predicate and the census cycle folds
-    * the ops-bounded slices instead of rescanning the namespace. The ops
-    * frame is locally checkpointed (it is consumed at least twice:
-    * replay + predicate). */
-  /** @param availableNow true (default) drains what exists and stops —
+    * k-chunk lineage cannot grow unboundedly across segments.
+    *
+    * Each batch's TYPED OPS frame goes to the callback alongside the
+    * post-apply snapshot — what an incremental consumer needs:
+    * `api.IncrementalCensus.touchedPredicate(ops)` turns the batch into a
+    * pushdown scan predicate and the census cycle folds the ops-bounded
+    * slices instead of rescanning the namespace. The ops frame is locally
+    * checkpointed (it is consumed at least twice: replay + predicate).
+    *
+    * @param availableNow true (default) drains what exists and stops —
     *   the one-shot catch-up; false keeps the query live for a namenode
     *   that keeps rolling segments (callers stop it). */
   def tailWithOps(spark: SparkSession, initial: DataFrame,
@@ -340,7 +334,7 @@ object EditLogSource {
       .start()
   }
 
-  /** Durable variant of [[tail]]: survives a restart without re-replaying
+  /** Durable variant of [[tailWithOps]]: survives a restart without re-replaying
     * history. The plain tail keeps the replayed snapshot in a driver
     * `var` — correct only because its temp checkpoint dies with the
     * query; give it a durable `checkpointLocation` naively and a restart
@@ -559,6 +553,8 @@ object EditLogSource {
         .otherwise(lit(0L)).as("fileReplica"),
       lit(0L).as("storagePolicyId"),
       col("isFile").as("isUnderConstruction"),
+      lit(false).as("isWithSnapshot"), lit(false).as("hasAcl"),
+      lit(false).as("hasEcPolicy"),
       lit(-1L).as("nsQuota"), lit(-1L).as("dsQuota"))
     // creation replaces any existing inode at the path (create/overwrite)
     val merged = cur.join(newRows.select(col("path")), Seq("path"), "left_anti")
@@ -611,6 +607,7 @@ object EditLogSource {
           .as("storagePolicyId"),
         coalesce(col("p_uc"), col("isUnderConstruction"))
           .as("isUnderConstruction"),
+        col("isWithSnapshot"), col("hasAcl"), col("hasEcPolicy"),
         coalesce(col("p_nsq"), col("nsQuota")).as("nsQuota"),
         coalesce(col("p_dsq"), col("dsQuota")).as("dsQuota"))
   }

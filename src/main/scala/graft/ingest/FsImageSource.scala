@@ -20,17 +20,15 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * dump (~billions of rows, ~100s of GB of TSV) ingests as an ordinary
   * distributed scan + two linear shuffles (children counts, quota usage).
   *
-  * Column semantics mirror `AbstractQueryEngine.java:155-379`:
-  * permission → octal, mod/access times → epoch ms, derived `name` /
-  * `parent` / `depth` from the path, `hasQuota`/`nsQuota`/`dsQuota` from
-  * the dump's quota columns, and the two usage columns recomputed from the
-  * tree itself (the dump does not carry them):
-  *   - `nsQuotaUsed` = 1 + #descendants (HDFS counts the dir itself),
-  *   - `dsQuotaUsed` = Σ descendant fileSize × replication.
-  * Fields absent from the delimited format (storage policy, EC flag,
-  * under-construction, snapshot flag) default to 0/false — the same
-  * defaults the reference reports for pre-2.7 images via its VersionContext
-  * fallbacks.
+  * Column semantics mirror `AbstractQueryEngine.java:155-379`: this door
+  * parses the stored columns (permission → octal, mod/access times →
+  * epoch ms, `nsQuota`/`dsQuota` from the dump's quota columns); `name`,
+  * `parent`, `depth`, `hasQuota`, the child count and the two quota-usage
+  * columns (the dump does not carry them) come from the tree by the
+  * shared [[graft.inodes.InodeView.derive]]. Fields absent from the
+  * delimited format (storage policy, EC flag, under-construction,
+  * snapshot flag) default to 0/false — the same defaults the reference
+  * reports for pre-2.7 images via its VersionContext fallbacks.
   */
 object FsImageSource {
 
@@ -79,26 +77,14 @@ object FsImageSource {
   private def epochMs(c: Column): Column =
     unix_millis(to_timestamp(c, "yyyy-MM-dd HH:mm"))
 
-  /** Ingest a delimited dump into the full inodes schema.
-    *
-    * Plan shape: one narrow projection over the scan (all scalar
-    * derivations codegen), plus two bounded shuffles —
-    * `groupBy(parent)` for `dirNumChildren` and one ancestor-prefix
-    * explode + `groupBy` for quota usage (only joined back to quota
-    * dirs). Both are linear in the inode count; nothing is collected.
-    */
+  /** Ingest a delimited dump into the full inodes schema: one narrow
+    * projection over the scan (all scalar parses codegen) to the
+    * [[graft.inodes.InodeView.stored]] columns, then the shared
+    * [[graft.inodes.InodeView.derive]]. */
   def inodes(spark: SparkSession, path: String): DataFrame = {
-    val raw = readDelimited(spark, path)
-
     val p = col("Path")
     val perm = col("Permission")
     val isFile = !perm.startsWith("d")
-    val name = when(p === "/", "/").otherwise(regexp_extract(p, "[^/]*$", 0))
-    val depth = when(p === "/", 0L)
-      .otherwise(length(p) - length(regexp_replace(p, "/", "")))
-    val parent = when(p === "/", "")
-      .when(depth === 1, "/")
-      .otherwise(substring(p, lit(1), (length(p) - length(name) - 1).cast("int")))
     // The delimited format drops inode ids; derive a stable synthetic one.
     // COLLISION BOUND: a 64-bit hash over n paths collides with probability
     // ≈ n²/2⁶⁵ (birthday) — ~0.3% at 100M inodes, ~3% at 1B, ~50% at 4B; a
@@ -107,16 +93,9 @@ object FsImageSource {
     // use the XML front door ([[FsImageXmlSource]]), which carries the REAL
     // inode ids (unique by construction in the NameNode); the delimited path
     // is kept for quick looks at dump files where ids are absent anyway.
-    val id = xxhash64(p)
-    val nsQuota = when(isFile, -1L).otherwise(col("NSQUOTA"))
-    val dsQuota = when(isFile, -1L).otherwise(col("DSQUOTA"))
-
-    val base = raw.select(
-      id.as("id"),
+    graft.inodes.InodeView.derive(readDelimited(spark, path).select(
+      xxhash64(p).as("id"),
       p.as("path"),
-      name.as("name"),
-      parent.as("parent"),
-      depth.as("depth"),
       isFile.as("isFile"),
       col("UserName").as("user"),
       col("GroupName").as("group"),
@@ -133,40 +112,8 @@ object FsImageSource {
       lit(false).as("isWithSnapshot"),
       perm.endsWith("+").as("hasAcl"),
       lit(false).as("hasEcPolicy"),
-      (!isFile && (nsQuota >= 0 || dsQuota >= 0)).as("hasQuota"),
-      nsQuota.as("nsQuota"),
-      dsQuota.as("dsQuota"))
-
-    // dirNumChildren: one groupBy(parent), joined back to dirs
-    val children = base.groupBy(col("parent").as("path"))
-      .agg(count(lit(1)).as("__nchild"))
-
-    // quota usage: explode each inode's proper-ancestor prefixes once,
-    // aggregate per ancestor, join back to quota dirs only
-    val usage = graft.engine.PathStructure.withAncestors(
-        base.select(col("path"), col("isFile"), col("fileSize"), col("fileReplica")))
-      .groupBy(col("ancestor").as("path"))
-      .agg(
-        count(lit(1)).as("__nsDesc"),
-        sum(when(col("isFile"), col("fileSize") * col("fileReplica"))
-          .otherwise(0L)).as("__dsUsed"))
-
-    base
-      .join(children, Seq("path"), "left")
-      .join(usage, Seq("path"), "left")
-      .select(
-        graft.inodes.InodeView.columns.map {
-          case "nsQuotaUsed" =>
-            when(col("hasQuota"), coalesce(col("__nsDesc"), lit(0L)) + 1L)
-              .otherwise(0L).as("nsQuotaUsed")
-          case "dsQuotaUsed" =>
-            when(col("hasQuota"), coalesce(col("__dsUsed"), lit(0L)))
-              .otherwise(0L).as("dsQuotaUsed")
-          case "dirNumChildren" =>
-            when(!col("isFile"), coalesce(col("__nchild"), lit(0L)))
-              .otherwise(0L).as("dirNumChildren")
-          case c => col(c)
-        }: _*)
+      when(isFile, -1L).otherwise(col("NSQUOTA")).as("nsQuota"),
+      when(isFile, -1L).otherwise(col("DSQUOTA")).as("dsQuota")))
   }
 
   /** Convert-once path: materialize an ingested namespace as parquet in
@@ -179,10 +126,11 @@ object FsImageSource {
     inodes(spark, dumpPath).write.mode("overwrite").parquet(outDir)
 
   // ---------------------------------------------------------------------------
-  // DuckDB mirror of the derivation above, for oracle checks over the SAME
-  // dump file. `oiv` is the final CTE (quota-usage columns mirrored via a
-  // prefix-LIKE join — quadratic but fine at fixture size; the Spark side is
-  // the scalable ancestor-explode). Any edit here MUST be mirrored above.
+  // DuckDB mirror of the derivation above and of InodeView.derive, for
+  // oracle checks over the SAME dump file. `oiv` is the final CTE
+  // (quota-usage columns mirrored via a prefix-LIKE join — quadratic but
+  // fine at fixture size; the Spark side is the scalable ancestor-explode).
+  // Any edit here MUST be mirrored in the Spark code and vice versa.
   // ---------------------------------------------------------------------------
   def oracleCte(dumpPath: String): String = s"""
 WITH raw AS (
@@ -234,8 +182,8 @@ WITH raw AS (
 ), usage AS (
   SELECT q.path,
          COUNT(*) AS nsDesc,
-         CAST(SUM(CASE WHEN d.isFile THEN d.fileSize * d.fileReplica ELSE 0 END)
-           AS BIGINT) AS dsUsed
+         CAST(SUM(CASE WHEN d.isFile THEN d.fileSize * GREATEST(d.fileReplica, 1)
+           ELSE 0 END) AS BIGINT) AS dsUsed
   FROM base q JOIN base d ON d.path LIKE q.path || '/%'
   WHERE q.hasQuota GROUP BY q.path
 ), oiv AS (

@@ -192,9 +192,8 @@ object FsImageXmlSource {
 
   /** Ingest an XML dump into the full inodes schema. Plan shape: the
     * per-level path joins (≤ depth, linear each), then one projection for
-    * scalar fields, one `groupBy(parentId)` for children counts, one
-    * ancestor explode + groupBy for quota usage, and one broadcast-ranged
-    * membership check for snapshot subtrees. */
+    * scalar fields, one broadcast-ranged membership check for snapshot
+    * subtrees, and the two shuffles of [[graft.inodes.InodeView.derive]]. */
   def inodes(spark: SparkSession, path: String): DataFrame = {
     // Parse the XML ONCE: the inode records feed the path loop, the field
     // projection, the quota-usage explode and the snapshot join — without
@@ -232,33 +231,25 @@ object FsImageXmlSource {
     derive(spark, raw, links, snapRoots)
   }
 
-  /** Shared derivation from a (checkpointed) [[normSchema]] relation +
+  /** Shared assembly from a (checkpointed) [[normSchema]] relation +
     * parent→child links + snapshottable-root ids — both the XML parse and
     * the binary decode ([[FsImageBinary.inodes]]) land here, so the two
-    * front doors are field-for-field identical by construction. */
+    * front doors are field-for-field identical by construction. Paths come
+    * from the links; the stored columns from the normalized fields; the
+    * rest from [[graft.inodes.InodeView.derive]]. */
   def derive(spark: SparkSession, raw: DataFrame, links: DataFrame,
              snapRootIds: DataFrame): DataFrame = {
     val paths = resolvePaths(spark, raw, links)
 
     val isFile = col("type") === "FILE"
-    val nsQuota = when(isFile, -1L)
-      .when(col("nsquota") === QuotaUnlimited, -1L)
-      .otherwise(coalesce(col("nsquota"), lit(-1L)))
-    val dsQuota = when(isFile, -1L)
-      .when(col("dsquota") === QuotaUnlimited, -1L)
-      .otherwise(coalesce(col("dsquota"), lit(-1L)))
+    def quota(c: String) = when(isFile, -1L)
+      .when(col(c) === QuotaUnlimited, -1L)
+      .otherwise(coalesce(col(c), lit(-1L)))
 
     val base = raw.join(paths, Seq("id"))
       .select(
         col("id"),
         col("path"),
-        when(col("path") === "/", "/")
-          .otherwise(substring_index(col("path"), "/", -1)).as("name"),
-        when(col("path") === "/", "")
-          .when(col("depth") === 1, "/")
-          .otherwise(expr("substring(path, 1, length(path) - length(substring_index(path, '/', -1)) - 1)"))
-          .as("parent"),
-        col("depth"),
         isFile.as("isFile"),
         substring_index(col("permission"), ":", 1).as("user"),
         substring_index(substring_index(col("permission"), ":", 2), ":", -1)
@@ -274,58 +265,23 @@ object FsImageXmlSource {
         col("isUC").as("isUnderConstruction"),
         col("hasAcl"),
         col("hasEc").as("hasEcPolicy"),
-        (!isFile && (nsQuota >= 0 || dsQuota >= 0)).as("hasQuota"),
-        nsQuota.as("nsQuota"),
-        dsQuota.as("dsQuota"),
+        quota("nsquota").as("nsQuota"),
+        quota("dsquota").as("dsQuota"),
         // extra full-fidelity column beyond the canonical schema: the
         // snapshot projection drops it, EC-name reports keep it
         coalesce(col("ecPolicyId"), lit(0L)).as("ecPolicyId"))
-
-    // children counts: one groupBy over the edge table
-    val children = links.groupBy(col("parentId"))
-      .agg(count(lit(1)).as("__nchild"))
-
-    // quota usage recomputed from the tree (same shape as the Delimited path)
-    val usage = graft.engine.PathStructure.withAncestors(
-        base.select(col("path"), col("isFile"), col("fileSize"),
-          col("fileReplica"), col("hasEcPolicy")))
-      .groupBy(col("ancestor").as("path"))
-      .agg(
-        count(lit(1)).as("__nsDesc"),
-        // EC files consume fileSize (no replication factor in this model)
-        sum(when(col("isFile"),
-            col("fileSize") * greatest(col("fileReplica"), lit(1L)))
-          .otherwise(0L)).as("__dsUsed"))
 
     // snapshot membership: snapshottable roots are FEW (admin-enabled);
     // resolve their paths and broadcast the prefix set
     val snapRoots = snapRootIds
       .join(paths, Seq("id")).select(col("path").as("__snapRoot"))
-    val withSnap = base
+    graft.inodes.InodeView.derive(base
       .join(broadcast(snapRoots),
         col("path") === col("__snapRoot") ||
           col("path").startsWith(concat(col("__snapRoot"), lit("/"))),
         "left")
       .withColumn("isWithSnapshot", col("__snapRoot").isNotNull)
-      .drop("__snapRoot")
-
-    withSnap
-      .join(children, withSnap("id") === children("parentId"), "left")
-      .drop("parentId")
-      .join(usage, Seq("path"), "left")
-      .select(
-        graft.inodes.InodeView.columns.map {
-          case "nsQuotaUsed" =>
-            when(col("hasQuota"), coalesce(col("__nsDesc"), lit(0L)) + 1L)
-              .otherwise(0L).as("nsQuotaUsed")
-          case "dsQuotaUsed" =>
-            when(col("hasQuota"), coalesce(col("__dsUsed"), lit(0L)))
-              .otherwise(0L).as("dsQuotaUsed")
-          case "dirNumChildren" =>
-            when(!col("isFile"), coalesce(col("__nchild"), lit(0L)))
-              .otherwise(0L).as("dirNumChildren")
-          case c => col(c)
-        } :+ col("ecPolicyId"): _*)
+      .drop("__snapRoot"))
   }
 
   // ---------------------------------------------------------------------------

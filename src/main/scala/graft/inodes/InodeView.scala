@@ -51,6 +51,64 @@ object InodeView {
     "isWithSnapshot", "hasAcl", "hasEcPolicy", "hasQuota", "nsQuota",
     "dsQuota", "nsQuotaUsed", "dsQuotaUsed", "dirNumChildren")
 
+  /** The columns an inode carries by itself. Every other column of
+    * [[columns]] follows from these and the tree, by [[derive]]. */
+  val stored: Seq[String] = Seq(
+    "id", "path", "isFile", "user", "group", "permission", "accessTime",
+    "modTime", "fileSize", "blockSize", "numBlocks", "fileReplica",
+    "storagePolicyId", "isUnderConstruction", "isWithSnapshot", "hasAcl",
+    "hasEcPolicy", "nsQuota", "dsQuota")
+
+  /** The full [[columns]] relation from the [[stored]] ones — the single
+    * derivation every fsimage front door and the edit-log replay share:
+    *   - `name`, `parent`, `depth` from the path (root: `/`, null, 0);
+    *   - `hasQuota` = a directory with either quota set (≥ 0);
+    *   - `dirNumChildren` = one `groupBy(parent)`;
+    *   - `nsQuotaUsed` = 1 + #descendants (HDFS counts the dir itself) and
+    *     `dsQuotaUsed` = Σ descendant fileSize × max(replication, 1) (an EC
+    *     file has no replication factor and consumes its size), both from
+    *     one ancestor explode + `groupBy`, kept on quota dirs only.
+    * Returns [[columns]] in order, then any extra input column unchanged.
+    * Two linear shuffles; nothing is collected. */
+  def derive(df: DataFrame): DataFrame = {
+    val path = col("path")
+    val base = df
+      .withColumn("name", when(path === "/", "/")
+        .otherwise(substring_index(path, "/", -1)))
+      .withColumn("depth", when(path === "/", 0L)
+        .otherwise(size(split(path, "/")).cast("long") - 1))
+      .withColumn("parent", when(path === "/", lit(null).cast("string"))
+        .when(col("depth") === 1, "/")
+        .otherwise(expr("substring(path, 1, length(path) - length(name) - 1)")))
+      .withColumn("hasQuota",
+        !col("isFile") && (col("nsQuota") >= 0 || col("dsQuota") >= 0))
+    val children = base.groupBy(col("parent").as("path"))
+      .agg(count(lit(1)).as("__nchild"))
+    val usage = graft.engine.PathStructure.withAncestors(
+        base.select(path, col("isFile"), col("fileSize"), col("fileReplica")))
+      .groupBy(col("ancestor").as("path"))
+      .agg(
+        count(lit(1)).as("__nsDesc"),
+        sum(when(col("isFile"),
+            col("fileSize") * greatest(col("fileReplica"), lit(1L)))
+          .otherwise(0L)).as("__dsUsed"))
+    base
+      .join(children, Seq("path"), "left")
+      .join(usage, Seq("path"), "left")
+      .select(columns.map {
+        case "nsQuotaUsed" =>
+          when(col("hasQuota"), coalesce(col("__nsDesc"), lit(0L)) + 1L)
+            .otherwise(0L).as("nsQuotaUsed")
+        case "dsQuotaUsed" =>
+          when(col("hasQuota"), coalesce(col("__dsUsed"), lit(0L)))
+            .otherwise(0L).as("dsQuotaUsed")
+        case "dirNumChildren" =>
+          when(!col("isFile"), coalesce(col("__nchild"), lit(0L)))
+            .otherwise(0L).as("dirNumChildren")
+        case c => col(c)
+      } ++ df.columns.filterNot(columns.contains).map(col): _*)
+  }
+
   /** The inodes DataFrame for a source locator:
     *   - `oiv:<path>` → a real namespace, ingested from an OIV delimited
     *     dump ([[graft.ingest.FsImageSource]]) — the production front door;
@@ -74,7 +132,6 @@ object InodeView {
         .select(columns.map(col): _*)
     else if (dir.startsWith("oiv:"))
       graft.ingest.FsImageSource.inodes(spark, dir.stripPrefix("oiv:"))
-        .select(columns.map(col): _*)
     else if (dir.startsWith("inodes:"))
       spark.read.parquet(dir.stripPrefix("inodes:"))
         .select(columns.map(col): _*)

@@ -92,9 +92,9 @@ class EditLogSpec extends AnyFunSuite {
     writeSeg("seg_0000001.xml", body.map(_.replace("</EDITS>", "")))
     writeSeg("seg_0000012.xml", tailRecs)
     var published = List.empty[org.apache.spark.sql.DataFrame]
-    val q = EditLogSource.tail(spark,
+    val q = EditLogSource.tailWithOps(spark,
       graft.inodes.InodeView.snapshot(spark, s"oivxml:${IngestQueries.XmlPath}"),
-      dir.toString, snap => published = snap :: published)
+      dir.toString, (snap, _) => published = snap :: published)
     q.awaitTermination()
     assert(published.nonEmpty)
     val got = published.head.select("id", "path").collect()

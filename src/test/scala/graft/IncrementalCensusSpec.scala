@@ -135,17 +135,12 @@ class IncrementalCensusSpec extends AnyFunSuite {
     val allOps = EditLogSource.ops(spark, IngestQueries.EditLogPath)
     val ops1 = allOps.where(col("txid") <= 11)
     val ops2 = allOps.where(col("txid") >= 12)
-    def widen(df: org.apache.spark.sql.DataFrame) = df
-      .withColumn("hasQuota", col("nsQuota") > 0 || col("dsQuota") > 0)
-      .withColumn("dirNumChildren", lit(0L))
-      .withColumn("nsQuotaUsed", lit(0L))
-      .withColumn("dsQuotaUsed", lit(0L))
-    val s0 = widen(graft.inodes.InodeView
-      .snapshot(spark, s"oivxml:${IngestQueries.XmlPath}"))
+    val s0 = graft.inodes.InodeView
+      .snapshot(spark, s"oivxml:${IngestQueries.XmlPath}")
     var census = Suggestions.cachedValues(s0, asOf)
     var cur = s0
     for (ops <- Seq(ops1, ops2)) {
-      val next = widen(EditLogSource.applyEdits(cur, ops))
+      val next = EditLogSource.applyEdits(cur, ops)
       val pred = IncrementalCensus.touchedPredicate(ops)
       census = IncrementalCensus.fold(
         census, cur.where(pred), next.where(pred), next, asOf)
@@ -183,27 +178,19 @@ class IncrementalCensusSpec extends AnyFunSuite {
     // first micro-batch is fully processed (explicit batch boundary —
     // AvailableNow would coalesce both files into one batch)
     writeSeg("seg_0000001.xml", body.map(_.replace("</EDITS>", "")))
-    def widen(df: org.apache.spark.sql.DataFrame) = df
-      .withColumn("hasQuota", col("nsQuota") > 0 || col("dsQuota") > 0)
-      .withColumn("dirNumChildren", lit(0L))
-      .withColumn("nsQuotaUsed", lit(0L))
-      .withColumn("dsQuotaUsed", lit(0L))
     val s0 = graft.inodes.InodeView
       .snapshot(spark, s"oivxml:${IngestQueries.XmlPath}")
-    var prevW = widen(s0)
-    var census = Suggestions.cachedValues(prevW, asOf)
+    var prev = s0
+    var census = Suggestions.cachedValues(prev, asOf)
       .localCheckpoint(true)
     var batches = 0
-    var finalSnap: org.apache.spark.sql.DataFrame = null
     val q = EditLogSource.tailWithOps(spark, s0, segDir.toString,
       (snap, ops) => {
         val pred = IncrementalCensus.touchedPredicate(ops)
-        val nextW = widen(snap)
         census = IncrementalCensus.fold(census,
-          prevW.where(pred), nextW.where(pred), nextW, asOf)
+          prev.where(pred), snap.where(pred), snap, asOf)
           .localCheckpoint(true)
-        prevW = nextW
-        finalSnap = snap
+        prev = snap
         batches += 1
       }, availableNow = false)
     q.processAllAvailable()
@@ -212,7 +199,7 @@ class IncrementalCensusSpec extends AnyFunSuite {
     q.stop()
     assert(batches === 2, s"expected one fold per segment, got $batches")
     val folded = census.head()
-    val full = Suggestions.cachedValues(widen(finalSnap), asOf).head()
+    val full = Suggestions.cachedValues(prev, asOf).head()
     IncrementalCensus.fileMetricNames(census).zipWithIndex.foreach {
       case (f, i) =>
         assert(folded.getLong(i) === full.getLong(i), s"metric $f drifted")
@@ -227,22 +214,10 @@ class IncrementalCensusSpec extends AnyFunSuite {
       .snapshot(spark, s"oivxml:${IngestQueries.XmlPath}")
     val after = EditLogSource.applyEdits(before, ops)
     val pred = IncrementalCensus.touchedPredicate(ops)
-    // the replay output carries the core columns (fileMetrics derives
-    // diskspace/memory from those) but not the dir-census columns —
-    // supply deterministic ones on BOTH sides so the schemas agree; the
-    // comparison below is over the FILE metrics, and the dir halves of
-    // fold and full run over the same widened frame anyway
-    def widen(df: org.apache.spark.sql.DataFrame) = df
-      .withColumn("hasQuota", col("nsQuota") > 0 || col("dsQuota") > 0)
-      .withColumn("dirNumChildren", lit(0L))
-      .withColumn("nsQuotaUsed", lit(0L))
-      .withColumn("dsQuotaUsed", lit(0L))
-    val b = widen(before)
-    val a = widen(after)
-    val prev = Suggestions.cachedValues(b, asOf)
+    val prev = Suggestions.cachedValues(before, asOf)
     val folded = IncrementalCensus
-      .fold(prev, b.where(pred), a.where(pred), a, asOf).head()
-    val full = Suggestions.cachedValues(a, asOf).head()
+      .fold(prev, before.where(pred), after.where(pred), after, asOf).head()
+    val full = Suggestions.cachedValues(after, asOf).head()
     IncrementalCensus.fileMetricNames(prev).zipWithIndex.foreach {
       case (f, i) =>
         assert(folded.getLong(i) === full.getLong(i), s"metric $f drifted")

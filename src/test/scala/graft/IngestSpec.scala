@@ -13,13 +13,20 @@ class IngestSpec extends AnyFunSuite {
   test("ingested frame has the exact InodeView schema") {
     assert(inodes.columns.toSeq === InodeView.columns)
     val expect = InodeView.snapshot(spark, "/root/testdata/sf0.001").schema
-    assert(inodes.schema.map(f => f.name -> f.dataType) ===
-      expect.map(f => f.name -> f.dataType))
+      .map(f => f.name -> f.dataType)
+    // an edit-log replay publishes the same relation as an ingested image
+    val replayed = graft.ingest.EditLogSource.applyEdits(
+      InodeView.snapshot(spark, s"oivxml:${IngestQueries.XmlPath}"),
+      graft.ingest.EditLogSource.ops(spark, IngestQueries.EditLogPath))
+    for (df <- Seq(inodes, replayed))
+      assert(df.schema.map(f => f.name -> f.dataType) === expect)
   }
 
   test("path split: root, name, parent, depth") {
     val root = inodes.where(col("path") === "/").head()
     assert(root.getAs[Long]("depth") === 0L)
+    assert(root.getAs[String]("name") === "/")
+    assert(root.isNullAt(root.fieldIndex("parent")))
     assert(!root.getAs[Boolean]("isFile"))
     val d = inodes.where(col("path") === "/data/raw/2024").head()
     assert(d.getAs[String]("name") === "2024")
