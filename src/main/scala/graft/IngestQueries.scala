@@ -241,10 +241,7 @@ WITH eops AS (
 
     "nna_editlog_apply" ->
       (graft.ingest.FsImageXmlSource.oracleCte(EditLogPostCsv) + """
-      SELECT id, path, name,
-        CASE WHEN path = '/' THEN NULL WHEN depth = 1 THEN '/'
-             ELSE substr(path, 1, length(path) - length(name) - 1) END AS parent,
-        CAST(depth AS BIGINT) AS depth, isFile, "user", "group", permission,
+      SELECT id, path, name, parent, CAST(depth AS BIGINT) AS depth, isFile, "user", "group", permission,
         accessTime, modTime, fileSize, blockSize, numBlocks, fileReplica,
         storagePolicyId, isUnderConstruction, isWithSnapshot, hasAcl,
         hasEcPolicy, hasQuota, nsQuota, dsQuota, nsQuotaUsed, dsQuotaUsed,

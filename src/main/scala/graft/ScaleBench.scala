@@ -490,7 +490,9 @@ object ScaleBench {
     // segment (creations + attribute patches) with 2 structural ops
     // mid-stream — 3 chunks. The claim under test: apply cost is
     // O(snapshot + ops) path-keyed shuffles with the structural ops as
-    // free narrow projections, NOT O(ops) sequential passes.
+    // free narrow projections, NOT O(ops) sequential passes. The timing
+    // includes the one InodeView.derive over the result (child counts and
+    // quota usage: two more namespace-wide shuffles).
     tm("editlog_apply_1m_100k") {
       val n = 1000000L
       val m = 100000L
@@ -507,6 +509,8 @@ object ScaleBench {
         lit(1L).as("numBlocks"), lit(3L).as("fileReplica"),
         lit(0L).as("storagePolicyId"),
         lit(false).as("isUnderConstruction"),
+        lit(false).as("isWithSnapshot"), lit(false).as("hasAcl"),
+        lit(false).as("hasEcPolicy"),
         lit(-1L).as("nsQuota"), lit(-1L).as("dsQuota"))
         .localCheckpoint(true)
       // ops: 50k creations, [rename d7->e7], 25k patches, [delete d8],

@@ -56,14 +56,19 @@ import org.apache.spark.sql.types._
   * length + mtime (block count untouched). OP_TIMES honors the −1 =
   * unchanged sentinel. OP_SET_QUOTA applies both values as given (−1
   * clears). Parent-directory mtime side-effects of create/rename/delete
-  * are not propagated (neither tracks them per-inode). `hasAcl`,
-  * `hasEcPolicy` and `isWithSnapshot` ride along as stored attributes of
-  * the inode: no ACL, erasure-coding or snapshot op is modeled, so a
-  * creation sets all three false — a file created under a snapshottable
-  * directory is not flagged, and a rename across a snapshot root keeps
-  * its flag. The derived columns (name, parent, depth, hasQuota, child
-  * count, quota usage) are recomputed from the replayed tree by
-  * [[graft.inodes.InodeView.derive]].
+  * are not propagated (neither tracks them per-inode). `hasAcl` and
+  * `hasEcPolicy` ride along as stored attributes of the inode: no ACL or
+  * erasure-coding op is modeled, so a creation sets both false.
+  * `isWithSnapshot` follows the tree, as on the XML door: the top-most
+  * flagged directories of the input are taken as the snapshottable roots
+  * (they keep their identity through renames; no snapshot op is modeled,
+  * so the set never grows), and after the replay every inode below one is
+  * flagged — a creation under a snapshottable directory included, a
+  * rename out of one cleared. A flagged inode outside those directories
+  * (a flagged file in an unflagged directory) keeps its flag as a stored
+  * attribute; a creation is never flagged on its own. The derived
+  * columns (name, parent, depth, hasQuota, child count, quota usage) are
+  * recomputed from the replayed tree by [[graft.inodes.InodeView.derive]].
   */
 object EditLogSource {
 
@@ -223,7 +228,17 @@ object EditLogSource {
       .map(_.toInt).getOrElse(64)
     require(ckptEvery > 0, "spark.graft.editlog.checkpointEveryOps must be > 0")
 
-    var cur = snapshot.select(graft.inodes.InodeView.stored.map(col): _*)
+    // isWithSnapshot follows the tree. The replay carries the flag only
+    // on the roots of the flagged subtrees (the top-most flagged
+    // directories, and any flagged inode outside them) and flags their
+    // subtrees again at the end, so a creation under a snapshottable
+    // directory and a rename into or out of one come out right
+    val snapDirs = snapshotRoots(snapshot)
+    var cur = snapshot.select(graft.inodes.InodeView.stored.map {
+      case "isWithSnapshot" =>
+        (col("isWithSnapshot") && !strictlyUnder(snapDirs)).as("isWithSnapshot")
+      case c => col(c)
+    }: _*)
     var lo = Long.MinValue
     var chunk = 0
     var sinceCkpt = 0
@@ -289,8 +304,32 @@ object EditLogSource {
     // derive reads the replayed rows three times (the rows, the child
     // counts, the quota usage): replay the chunks once, and keep the
     // plan one replay deep
-    graft.inodes.InodeView.derive(cur.localCheckpoint(eager = true))
+    val replayed = cur.localCheckpoint(eager = true)
+    val movedDirs =
+      if (snapDirs.isEmpty) Nil
+      else replayed.where(col("isWithSnapshot") && !col("isFile"))
+        .select(col("path")).collect().map(_.getString(0)).toSeq
+    graft.inodes.InodeView.derive(replayed.withColumn("isWithSnapshot",
+      col("isWithSnapshot") || strictlyUnder(movedDirs)))
   }
+
+  /** Paths of the top-most snapshot-flagged directories (a flagged
+    * directory whose parent is not flagged): the snapshottable roots, one
+    * per directory an administrator enabled, so the collect is small. */
+  private def snapshotRoots(snapshot: DataFrame): Seq[String] = {
+    val dirs = snapshot.where(col("isWithSnapshot") && !col("isFile"))
+      .select(col("path"))
+    dirs.join(dirs.select(col("path").as("__dir")),
+        graft.inodes.InodeView.parentOf(col("path")) === col("__dir"),
+        "left_anti")
+      .collect().map(_.getString(0)).toSeq
+  }
+
+  /** `path` lies strictly below one of `dirs`. */
+  private def strictlyUnder(dirs: Seq[String]): Column =
+    dirs.map(d => col("path") =!= d &&
+        col("path").startsWith(if (d == "/") "/" else d + "/"))
+      .foldLeft(lit(false))(_ || _)
 
   /** Tail a directory of OEV-XML edit segments with Structured Streaming,
     * applying each micro-batch through [[applyEdits]] and republishing the

@@ -292,7 +292,12 @@ object FsImageXmlSource {
   // ---------------------------------------------------------------------------
   def oracleCte(flatCsvPath: String): String = s"""
 WITH flat AS (
-  SELECT * FROM read_csv('$flatCsvPath', header=true, columns={
+  SELECT *,
+    CASE WHEN path = '/' THEN NULL
+         WHEN length(path) - length(replace(path, '/', '')) = 1 THEN '/'
+         ELSE substr(path, 1, length(path) - length(regexp_extract(path, '[^/]*$$')) - 1)
+    END AS parent
+  FROM read_csv('$flatCsvPath', header=true, columns={
     'id':'BIGINT','path':'VARCHAR','is_file':'BOOLEAN','usr':'VARCHAR',
     'grp':'VARCHAR','perm':'BIGINT','mtime_ms':'BIGINT','atime_ms':'BIGINT',
     'block_size':'BIGINT','num_blocks':'BIGINT','file_size':'BIGINT',
@@ -300,10 +305,8 @@ WITH flat AS (
     'is_uc':'BOOLEAN','has_acl':'BOOLEAN','ns_quota':'BIGINT',
     'ds_quota':'BIGINT','is_snap_root':'BOOLEAN','ec_policy':'BIGINT'})
 ), children AS (
-  SELECT CASE WHEN length(path) - length(replace(path, '/', '')) = 1 THEN '/'
-              ELSE substr(path, 1, length(path) - length(regexp_extract(path, '[^/]*$$')) - 1)
-         END AS parent, COUNT(*) AS nchild
-  FROM flat WHERE path <> '/' GROUP BY 1
+  SELECT parent, COUNT(*) AS nchild
+  FROM flat WHERE parent IS NOT NULL GROUP BY 1
 ), usage AS (
   SELECT q.path, COUNT(*) AS nsDesc,
     CAST(SUM(CASE WHEN d.is_file
@@ -315,6 +318,7 @@ WITH flat AS (
 ), oivxml AS (
   SELECT f.id, f.path,
     CASE WHEN f.path = '/' THEN '/' ELSE regexp_extract(f.path, '[^/]*$$') END AS name,
+    f.parent,
     CASE WHEN f.path = '/' THEN 0
          ELSE length(f.path) - length(replace(f.path, '/', '')) END AS depth,
     f.is_file AS isFile, f.usr AS "user", f.grp AS "group",

@@ -59,6 +59,14 @@ object InodeView {
     "storagePolicyId", "isUnderConstruction", "isWithSnapshot", "hasAcl",
     "hasEcPolicy", "nsQuota", "dsQuota")
 
+  /** The parent directory of an absolute path: null for the root, `/` at
+    * depth 1. */
+  def parentOf(path: Column): Column = {
+    val up = regexp_extract(path, "^(.*)/[^/]*$", 1)
+    when(path === "/", lit(null).cast("string"))
+      .when(up === "", "/").otherwise(up)
+  }
+
   /** The full [[columns]] relation from the [[stored]] ones — the single
     * derivation every fsimage front door and the edit-log replay share:
     *   - `name`, `parent`, `depth` from the path (root: `/`, null, 0);
@@ -77,9 +85,7 @@ object InodeView {
         .otherwise(substring_index(path, "/", -1)))
       .withColumn("depth", when(path === "/", 0L)
         .otherwise(size(split(path, "/")).cast("long") - 1))
-      .withColumn("parent", when(path === "/", lit(null).cast("string"))
-        .when(col("depth") === 1, "/")
-        .otherwise(expr("substring(path, 1, length(path) - length(name) - 1)")))
+      .withColumn("parent", parentOf(path))
       .withColumn("hasQuota",
         !col("isFile") && (col("nsQuota") >= 0 || col("dsQuota") >= 0))
     val children = base.groupBy(col("parent").as("path"))

@@ -20,16 +20,16 @@ class EditLogSpec extends AnyFunSuite {
 
   test("ops parse: every record typed, opcodes and txids intact") {
     val rows = ops.collect()
-    assert(rows.length === 25)
-    assert(rows.map(_.getAs[Long]("txid")).sorted.toSeq === (1L to 25L))
+    assert(rows.length === 30)
+    assert(rows.map(_.getAs[Long]("txid")).sorted.toSeq === (1L to 30L))
     // concat: TRG lands in path, numbered SOURCES children in srcs
     val cat = rows.find(_.getAs[String]("opcode") == "OP_CONCAT_DELETE").get
     assert(cat.getAs[String]("path") === "/data/raw/2024/f007.log")
     assert(cat.getAs[Seq[String]]("srcs") ===
       Seq("/data/raw/2024/f000.parquet", "/data/raw/2024/f014"))
     val byOp = rows.groupBy(_.getAs[String]("opcode")).view.mapValues(_.length)
-    assert(byOp("OP_ADD") === 4 && byOp("OP_CLOSE") === 4)
-    assert(byOp("OP_RENAME_OLD") === 2 && byOp("OP_DELETE") === 1)
+    assert(byOp("OP_ADD") === 5 && byOp("OP_CLOSE") === 5)
+    assert(byOp("OP_RENAME_OLD") === 4 && byOp("OP_DELETE") === 1)
     // MODE decimal→octal-triad: 493 → 755
     val mk = rows.find(r => r.getAs[String]("opcode") == "OP_MKDIR" &&
       r.getAs[String]("path") == "/data/raw/2026").get
@@ -141,6 +141,14 @@ class EditLogSpec extends AnyFunSuite {
     // subtree delete removed dir + descendants; the parent survived
     assert(!byPath.keys.exists(_.startsWith("/snap/deep")))
     assert(byPath.contains("/snap"))
+    // snapshot membership follows the tree: a file renamed out of the
+    // snapshottable /snap loses the flag; a creation under it and a
+    // subtree renamed into it gain it
+    def snap(p: String) = byPath(p).getAs[Boolean]("isWithSnapshot")
+    assert(snap("/snap") && !snap("/data/f020.parquet"))
+    assert(snap("/snap/inbox") && snap("/snap/inbox/a.csv"))
+    assert(snap("/snap/proj") && snap("/snap/proj/f004"))
+    assert(!snap("/user/bob") && !snap("/data/raw/2025/late.log"))
     // file rename (no subtree)
     assert(byPath.contains("/tmp/renamed_f012.log"))
     assert(!byPath.contains("/tmp/f012.log"))

@@ -123,7 +123,7 @@ class IncrementalCensusSpec extends AnyFunSuite {
     val oa = outside(after)
     assert(ob === oa, "a changed row escaped the touched predicate")
     // and the predicate selects a proper subset (ops-bounded by
-    // construction — the mini fixture's 25 ops deliberately touch much
+    // construction — the mini fixture's 30 ops deliberately touch much
     // of its 44-inode namespace, so only strictness is asserted here)
     val touched = before.where(pred).count()
     assert(touched > 0L && touched < before.count())

@@ -25,7 +25,10 @@ SET_REPLICATION, SET_PERMISSIONS, SET_OWNER, TIMES (-1 = unchanged),
 SET_QUOTA, SET_STORAGE_POLICY, TRUNCATE (new length + mtime), APPEND
 (reopen, uc=true). The sequence deliberately RECREATES a renamed-away path and then
 adds into it — the interleaving that breaks any apply that reorders
-creations across structural ops.
+creations across structural ops. It also renames a file out of the
+snapshottable /snap, creates under /snap and renames a subtree into it:
+`isWithSnapshot` follows the tree (the oracle derives it from the carried
+`is_snap_root` flag), so these three cases pin that the engine does too.
 
 MODE in OEV XML is the decimal of the full octal mode (0755 -> 493); the
 engine keeps the octal digits as decimal digits INCLUDING the special-bits
@@ -79,29 +82,47 @@ OPS = [
                           usr="carol", grp="data", mode="644", repl=3,
                           bs=134217728, ts=1735700900000,
                           blocks=[777216])),
-    (16, "OP_DELETE", dict(path="/snap/deep", ts=1735701000000)),
-    (17, "OP_ADD", dict(path="/user/alice/f003.gz", inode_id=16505,
+    # a flagged inode leaves the snapshottable /snap: no longer flagged
+    (16, "OP_RENAME_OLD", dict(path="/snap/deep/f020.parquet",
+                               dst="/data/f020.parquet",
+                               ts=1735700950000)),
+    (17, "OP_DELETE", dict(path="/snap/deep", ts=1735701000000)),
+    (18, "OP_ADD", dict(path="/user/alice/f003.gz", inode_id=16505,
                         usr="alice", grp="eng", mode="644", repl=2,
                         bs=268435456, ts=1735701100000, overwrite=True)),
-    (18, "OP_CLOSE", dict(path="/user/alice/f003.gz", inode_id=16505,
+    (19, "OP_CLOSE", dict(path="/user/alice/f003.gz", inode_id=16505,
                           usr="alice", grp="eng", mode="644", repl=2,
                           bs=268435456, ts=1735701200000,
                           blocks=[123456])),
-    (19, "OP_TIMES", dict(path="/tmp/f005.parquet", mtime=1735701300000,
+    (20, "OP_TIMES", dict(path="/tmp/f005.parquet", mtime=1735701300000,
                           atime=1735701400000)),
-    (20, "OP_RENAME_OLD", dict(path="/tmp/f012.log",
+    (21, "OP_RENAME_OLD", dict(path="/tmp/f012.log",
                                dst="/tmp/renamed_f012.log",
                                ts=1735701500000)),
-    (21, "OP_SET_STORAGE_POLICY", dict(path="/data/clean/f002.log",
+    (22, "OP_SET_STORAGE_POLICY", dict(path="/data/clean/f002.log",
                                        policy=7)),
-    (22, "OP_TRUNCATE", dict(path="/data/clean/f023.gz",
+    (23, "OP_TRUNCATE", dict(path="/data/clean/f023.gz",
                              newlength=1000000, ts=1735701600000)),
-    (23, "OP_APPEND", dict(path="/tmp/f019")),
-    (24, "OP_CONCAT_DELETE", dict(path="/data/raw/2024/f007.log",
+    (24, "OP_APPEND", dict(path="/tmp/f019")),
+    (25, "OP_CONCAT_DELETE", dict(path="/data/raw/2024/f007.log",
                                   srcs=["/data/raw/2024/f000.parquet",
                                         "/data/raw/2024/f014"],
                                   ts=1735701700000)),
-    (25, "OP_END_LOG_SEGMENT", {}),
+    # a creation under the snapshottable /snap, and an unflagged subtree
+    # renamed into it: both flagged in the post-state
+    (26, "OP_MKDIR", dict(path="/snap/inbox", inode_id=16506,
+                          usr="hdfs", grp="hdfs", mode="755",
+                          ts=1735701800000)),
+    (27, "OP_ADD", dict(path="/snap/inbox/a.csv", inode_id=16507,
+                        usr="alice", grp="eng", mode="644", repl=2,
+                        bs=134217728, ts=1735701900000, overwrite=False)),
+    (28, "OP_CLOSE", dict(path="/snap/inbox/a.csv", inode_id=16507,
+                          usr="alice", grp="eng", mode="644", repl=2,
+                          bs=134217728, ts=1735702000000,
+                          blocks=[4096])),
+    (29, "OP_RENAME_OLD", dict(path="/user/bob/proj", dst="/snap/proj",
+                               ts=1735702100000)),
+    (30, "OP_END_LOG_SEGMENT", {}),
 ]
 
 
