@@ -37,13 +37,18 @@ object PipelineQueries {
   private[graft] def inParallel(fs: (() => Unit)*): Unit = {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(fs.size)
     try {
+      val done =
+        new java.util.concurrent.ExecutorCompletionService[Unit](pool)
       val futs = fs.map { f =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
+        done.submit(new java.util.concurrent.Callable[Unit] {
           def call(): Unit = f()
         })
       }
-      // surface the ORIGINAL exception (bench/verify print getMessage;
-      // an ExecutionException wrapper would blank it). On failure, STOP
+      // await in COMPLETION order, so the first failure anywhere stops
+      // the siblings at once — in submission order a long first chain
+      // would hide a later chain's failure until it finished. Surface
+      // the ORIGINAL exception (bench/verify print getMessage; an
+      // ExecutionException wrapper would blank it). On failure, STOP
       // the sibling chains before unwinding: a plain shutdown() lets
       // them keep running Spark jobs and writing their temp store dirs
       // while the caller (bench/verify) is already deleting those dirs
@@ -52,8 +57,8 @@ object PipelineQueries {
       // the failure path quiet; chains are fixture-sized, so the drain
       // bound is generous, and timing out only degrades to the old
       // behavior (unwind with a straggler alive), logged by the await.
-      futs.foreach { fut =>
-        try fut.get()
+      futs.foreach { _ =>
+        try done.take().get()
         catch {
           case e: java.util.concurrent.ExecutionException =>
             futs.foreach(_.cancel(true))
@@ -1043,8 +1048,8 @@ object PipelineQueries {
     }),
 
     // the CODE-STORE tuning sweep ([[pipeline.Retrieval
-    // .annPqRecallSweep]]): recall/MRR/MAP of the pruned ADC probe +
-    // exact-rerank tail at (nprobe, rerankC) ∈ {2,8}×{10,25} against
+    // .annRecallSweep]] over PQ legs): recall/MRR/MAP of the pruned
+    // ADC probe + exact-rerank tail at (nprobe, rerankC) ∈ {2,8}×{10,25} against
     // the brute-force top-5 — the 2-D operating surface (cells scanned
     // × full-vector bytes touched) a code-store deployment reads its
     // knobs off, one integer-exact macro row per point
@@ -1057,11 +1062,14 @@ object PipelineQueries {
       val cbs = pipeline.Similarity.pqCodebooksFromSeeds(
         cents.map(_._2).toArray, 8)
       val index = pipeline.Similarity.ivfPqAssign(emb, cents, cbs)
-      pipeline.Retrieval.annPqRecallSweep(q, index, cents, cbs,
-        Seq((2, 10), (2, 25), (8, 10), (8, 25)), 5,
+      val vectors = emb.select(col("vec_id"), col("embedding"))
+      pipeline.Retrieval.annRecallSweep(q, Seq("nprobe", "rerank_c"),
+        Seq((2, 10), (2, 25), (8, 10), (8, 25)).map { case (np, rc) =>
+          Seq(np.toLong, rc.toLong) ->
+            pipeline.VectorLeg.Pq(index, cents, cbs, np, rc, vectors)
+        }, 5,
         pipeline.Similarity.bruteForceTopK(q, emb, 5)
-          .select(col("qid"), col("nid")),
-        emb.select(col("vec_id"), col("embedding")))
+          .select(col("qid"), col("nid")))
     }),
 
     // the SCHEDULED-REBUILD door ([[graft.streaming
@@ -1331,17 +1339,18 @@ object PipelineQueries {
     }),
 
     // the SQ8 tier's own recall-vs-cost curve ([[pipeline.Retrieval
-    // .annSq8RecallSweep]]) — completes the per-tier sweep set (IVF
-    // 1-D, PQ 2-D, SQ8 here): the pruned int8 probe at nprobe ∈
+    // .annRecallSweep]] over SQ8 legs) — completes the per-tier
+    // sweep set (IVF 1-D, PQ 2-D, SQ8 here): the pruned int8 probe at nprobe ∈
     // {1,2,4,8} scored against the exact brute-force top-5 through
     // the integer-exact metric chain
     "ann_sq8_recall_sweep" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val q = emb.where(col("vec_id") < 5)
       val cents = pipeline.Similarity.centroids(emb, 16)
-      pipeline.Retrieval.annSq8RecallSweep(q,
-        pipeline.Similarity.sq8Assign(emb, cents), cents,
-        Seq(1, 2, 4, 8), 5,
+      val index = pipeline.Similarity.sq8Assign(emb, cents)
+      pipeline.Retrieval.annRecallSweep(q, Seq("nprobe"),
+        Seq(1, 2, 4, 8).map(np =>
+          Seq(np.toLong) -> pipeline.VectorLeg.Sq8(index, cents, np)), 5,
         pipeline.Similarity.bruteForceTopK(q, emb, 5)
           .select(col("qid"), col("nid")))
     }),
@@ -1376,8 +1385,9 @@ object PipelineQueries {
       val q = emb.where(col("vec_id") < 5)
       val cents = pipeline.Similarity.centroids(emb, 16)
       val index = pipeline.Similarity.ivfAssign(emb, cents)
-      pipeline.Retrieval.annRecallSweep(q, index, cents,
-        Seq(1, 2, 4, 8), 5,
+      pipeline.Retrieval.annRecallSweep(q, Seq("nprobe"),
+        Seq(1, 2, 4, 8).map(np =>
+          Seq(np.toLong) -> pipeline.VectorLeg.Ivf(index, cents, np)), 5,
         pipeline.Similarity.bruteForceTopK(q, emb, 5)
           .select(col("qid"), col("nid")))
     }),
@@ -3250,7 +3260,7 @@ object PipelineQueries {
     }),
 
     // METADATA-FILTERED IVF probe ([[pipeline.Similarity
-    // .ivfTopKIndexedPrunedFiltered]], FAISS-IDSelector semantics):
+    // .ivfTopKIndexedPruned]] with `allowed`, FAISS-IDSelector semantics):
     // the mask applies before the per-query rank window under the
     // frozen quantizer — the oracle assigns and probes only the
     // allowed slice, so filtered probe ≡ index-of-the-slice
@@ -3258,9 +3268,9 @@ object PipelineQueries {
       val emb = Tables.embeddings(s, d)
       val cents = pipeline.Similarity.centroids(emb, 16)
       val index = pipeline.Similarity.ivfAssign(emb, cents)
-      pipeline.Similarity.ivfTopKIndexedPrunedFiltered(
+      pipeline.Similarity.ivfTopKIndexedPruned(
         emb.where(col("vec_id") < 5), index, cents, 5, 4,
-        emb.where(col("vec_id") % 3 === 0).select("vec_id"))
+        Some(emb.where(col("vec_id") % 3 === 0).select("vec_id")))
         .orderBy("qid", "rank")
     }),
 
@@ -3282,8 +3292,8 @@ object PipelineQueries {
         k = 10, legK = 20, nprobe = 4)
     }),
 
-    // BATCHED STORE-BACKED hybrid ([[pipeline.Retrieval
-    // .hybridFromStoresBatch]]): both tailer-maintained stores run
+    // BATCHED STORE-BACKED hybrid ([[pipeline.Retrieval.storeHybrid]]
+    // over an IVF leg): both tailer-maintained stores run
     // their two lifecycle mutation batches through the versioned
     // parquet layout, then five queries are answered in ONE pass over
     // each store at one consistent asOf (min committed batch) — the
@@ -3365,10 +3375,10 @@ object PipelineQueries {
       // result so both temp stores can be dropped before the caller's
       // action runs (the tailer-fixture discipline)
       val result = pipeline.Dedup.checkpointCorpus(
-        pipeline.Retrieval.hybridFromStoresBatch(
-          s, bmDoor, bmDir, 64, ivfDoor, ivfDir, cents,
-          emb.where(col("vec_id") < 5), hybridBatchTerms,
-          k = 10, legK = 20, nprobe = 4)
+        pipeline.Retrieval.storeHybrid(s, bmDoor, bmDir, 64,
+          pipeline.VectorLeg.ivfStore(ivfDoor, ivfDir, cents, 4),
+          pipeline.Retrieval.BatchQuery(emb.where(col("vec_id") < 5),
+            hybridBatchTerms), k = 10, legK = 20)
           .orderBy("qid", "rank"))
       org.apache.commons.io.FileUtils.deleteQuietly(
         new java.io.File(bmDir))
@@ -3378,7 +3388,7 @@ object PipelineQueries {
     }),
 
     // HYBRID SERVING FROM THE CODE-STORE TIER ([[pipeline.Retrieval
-    // .hybridFromStoresPq]]): the memory-bounded deployment triple —
+    // .storeHybrid]] over a PQ leg, one query): the memory-bounded deployment triple —
     // BM25 postings, the PQ-code store (8+m bytes/vector ADC working
     // set), and the full-vector store that funds the exact-rerank tail
     // — all bootstrapped through the versioned layout, mutated by one
@@ -3465,11 +3475,13 @@ object PipelineQueries {
         })
       // ---- one consistent code-tier serving read
       val result = pipeline.Dedup.checkpointCorpus(
-        pipeline.Retrieval.hybridFromStoresPq(
-          s, bmDoor, bmDir, 64, pqDoor, pqDir, cents, cbs,
-          vecDoor, vecDir, emb.where(col("vec_id") === 0L),
-          Seq("data", "stream", "shuffle"),
-          k = 10, legK = 20, rerankC = 40, nprobe = 4))
+        pipeline.Retrieval.storeHybrid(s, bmDoor, bmDir, 64,
+          pipeline.VectorLeg.pqStore(pqDoor, pqDir, cents, cbs,
+            vecDoor, vecDir, nprobe = 4, rerankC = 40),
+          pipeline.Retrieval.BatchQuery(emb.where(col("vec_id") === 0L),
+            Seq(0L -> Seq("data", "stream", "shuffle"))),
+          k = 10, legK = 20)
+          .select("doc_id", "rrf_ppm", "n_legs"))
       Seq(bmDir, pqDir, vecDir).foreach(p =>
         org.apache.commons.io.FileUtils.deleteQuietly(
           new java.io.File(p)))
@@ -3477,7 +3489,7 @@ object PipelineQueries {
     }),
 
     // HYBRID SERVING FROM THE SQ8 TIER ([[pipeline.Retrieval
-    // .hybridFromStoresSq8]]): the quantized middle tier serving the
+    // .storeHybrid]] over an SQ8 leg, one query): the quantized middle tier serving the
     // fused ranker — BM25 postings + the int8 store (both mutated by
     // one mixed batch through the versioned layout) at one
     // min-committed batch; the vector leg is the int8-cosine pruned
@@ -3542,11 +3554,12 @@ object PipelineQueries {
             knownDeltaEmpty = Some(false))
         })
       val result = pipeline.Dedup.checkpointCorpus(
-        pipeline.Retrieval.hybridFromStoresSq8(
-          s, bmDoor, bmDir, 64, sq8Door, sq8Dir, cents,
-          emb.where(col("vec_id") === 0L),
-          Seq("data", "stream", "shuffle"),
-          k = 10, legK = 20, nprobe = 4))
+        pipeline.Retrieval.storeHybrid(s, bmDoor, bmDir, 64,
+          pipeline.VectorLeg.sq8Store(sq8Door, sq8Dir, cents, 4),
+          pipeline.Retrieval.BatchQuery(emb.where(col("vec_id") === 0L),
+            Seq(0L -> Seq("data", "stream", "shuffle"))),
+          k = 10, legK = 20)
+          .select("doc_id", "rrf_ppm", "n_legs"))
       Seq(bmDir, sq8Dir).foreach(p =>
         org.apache.commons.io.FileUtils.deleteQuietly(
           new java.io.File(p)))
@@ -3554,7 +3567,7 @@ object PipelineQueries {
     }),
 
     // the ADAPTIVE-TIER hybrid ([[pipeline.Retrieval
-    // .hybridFromStoresSq8Adaptive]]): the margin router serving the
+    // .storeHybrid]] over an SQ8-adaptive leg, one query): the margin router serving the
     // fused ranker from THREE mutated stores (BM25 + SQ8 codes + full
     // vectors) at one min-committed batch — the vector leg int8-ranks
     // 40 candidates and routes through the exact full-vector tail
@@ -3629,12 +3642,13 @@ object PipelineQueries {
             knownDeltaEmpty = Some(false))
         })
       val result = pipeline.Dedup.checkpointCorpus(
-        pipeline.Retrieval.hybridFromStoresSq8Adaptive(
-          s, bmDoor, bmDir, 64, sq8Door, sq8Dir, cents,
-          vecDoor, vecDir, emb.where(col("vec_id") === 0L),
-          Seq("data", "stream", "shuffle"),
-          k = 10, legK = 20, nprobe = 4, rerankC = 40,
-          marginPpm = 3000L))
+        pipeline.Retrieval.storeHybrid(s, bmDoor, bmDir, 64,
+          pipeline.VectorLeg.sq8AdaptiveStore(sq8Door, sq8Dir, cents,
+            vecDoor, vecDir, nprobe = 4, rerankC = 40, marginPpm = 3000L),
+          pipeline.Retrieval.BatchQuery(emb.where(col("vec_id") === 0L),
+            Seq(0L -> Seq("data", "stream", "shuffle"))),
+          k = 10, legK = 20)
+          .select("doc_id", "rrf_ppm", "n_legs"))
       Seq(bmDir, sq8Dir, vecDir).foreach(p =>
         org.apache.commons.io.FileUtils.deleteQuietly(
           new java.io.File(p)))
@@ -3642,7 +3656,7 @@ object PipelineQueries {
     }),
 
     // the code-tier hybrid BATCHED and FILTERED together ([[pipeline
-    // .Retrieval.hybridFromStoresPqBatch]] with `allowed`): five
+    // .Retrieval.storeHybrid]] over a PQ leg with `allowed`): five
     // queries in one pass over the three mutated stores, the slice
     // mask (base ids ≡ 0 mod 3) applied to the lexical pool, the ADC
     // candidates, AND therefore the rerank tail — global scoring
@@ -3722,11 +3736,11 @@ object PipelineQueries {
             knownDeltaEmpty = Some(false))
         })
       val result = pipeline.Dedup.checkpointCorpus(
-        pipeline.Retrieval.hybridFromStoresPqBatch(
-          s, bmDoor, bmDir, 64, pqDoor, pqDir, cents, cbs,
-          vecDoor, vecDir, emb.where(col("vec_id") < 5),
-          hybridBatchTerms, k = 10, legK = 20, rerankC = 40,
-          nprobe = 4,
+        pipeline.Retrieval.storeHybrid(s, bmDoor, bmDir, 64,
+          pipeline.VectorLeg.pqStore(pqDoor, pqDir, cents, cbs,
+            vecDoor, vecDir, nprobe = 4, rerankC = 40),
+          pipeline.Retrieval.BatchQuery(emb.where(col("vec_id") < 5),
+            hybridBatchTerms), k = 10, legK = 20,
           allowed = Some(docs.where(col("doc_id") % 3 === 0)
             .select("doc_id")))
           .orderBy("qid", "rank"))

@@ -1789,8 +1789,8 @@ object ScaleBench {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     }
 
-    // ---- BATCHED STORE-BACKED hybrid at 1M (Retrieval
-    // .hybridFromStoresBatch): the round-14 batch amortization and the
+    // ---- BATCHED STORE-BACKED hybrid at 1M (Retrieval.storeHybrid
+    // over an IVF leg): the round-14 batch amortization and the
     // round-14 min-committed-batch store consistency COMPOSED — both
     // gen stores carry a mixed mutation batch (1,000 tombstoned
     // deletes + 1,000 gen updates + 1,000 adds each), so the probes
@@ -1869,12 +1869,13 @@ object ScaleBench {
         (i * m + 500L, Seq("w7", "w42", s"w${2900 + i}")))
       val qvecs = gvecs(spark.range(16).toDF()
         .select((col("id") * m + 500L).as("id"))).localCheckpoint(true)
+      val ivfLeg = pipeline.VectorLeg.ivfStore(ivfDoor, ivfDir, cents, 8)
       pin()
       var batched: Map[(Long, Long), Long] = Map.empty
       ti("hybrid_store_batch_batched_1m") {
-        val rows = pipeline.Retrieval.hybridFromStoresBatch(spark,
-          bmDoor, bmDir, 256, ivfDoor, ivfDir, cents, qvecs, qbatch,
-          k = 10, legK = 20, nprobe = 8).collect()
+        val rows = pipeline.Retrieval.storeHybrid(spark, bmDoor, bmDir,
+          256, ivfLeg, pipeline.Retrieval.BatchQuery(qvecs, qbatch),
+          k = 10, legK = 20).collect()
         batched = rows.map(r =>
           (r.getLong(0), r.getLong(4)) -> r.getLong(1)).toMap
         s"rows=${rows.length} queries=${qbatch.size}"
@@ -1882,10 +1883,10 @@ object ScaleBench {
       ti("hybrid_store_batch_sequential_1m") {
         var total = 0
         for ((qid, ts) <- qbatch) {
-          val alone = pipeline.Retrieval.hybridFromStores(spark,
-            bmDoor, bmDir, 256, ivfDoor, ivfDir, cents,
-            qvecs.where(col("vec_id") === qid), ts,
-            k = 10, legK = 20, nprobe = 8).collect()
+          val alone = pipeline.Retrieval.storeHybrid(spark, bmDoor,
+            bmDir, 256, ivfLeg, pipeline.Retrieval.BatchQuery(
+              qvecs.where(col("vec_id") === qid), Seq(qid -> ts)),
+            k = 10, legK = 20).orderBy("rank").select("doc_id").collect()
           total += alone.length
           // batched ≡ alone, spot-checked on every query's top row; a
           // MISSING batched rank-1 row is itself the divergence being
@@ -2208,20 +2209,20 @@ object ScaleBench {
         .localCheckpoint(true)
       val exact = pipeline.Similarity.bruteForceTopK(q8, corpus, 10)
         .select(col("qid"), col("nid")).localCheckpoint(true)
+      def sweep(nprobes: Int*) = pipeline.Retrieval.annRecallSweep(q8,
+        Seq("nprobe"), nprobes.map(np => Seq(np.toLong) ->
+          pipeline.VectorLeg.Ivf(reloaded, cents, np)), 10, exact)
       pin()
       ti("ann_sweep_np4_1m") {
-        val r = pipeline.Retrieval.annRecallSweep(q8, reloaded, cents,
-          Seq(4), 10, exact).collect().head
+        val r = sweep(4).collect().head
         s"nprobe=4 recall=${r.getLong(2)}ppm"
       }
       ti("ann_sweep_np64_1m") {
-        val r = pipeline.Retrieval.annRecallSweep(q8, reloaded, cents,
-          Seq(64), 10, exact).collect().head
+        val r = sweep(64).collect().head
         s"nprobe=64 recall=${r.getLong(2)}ppm"
       }
       ti("ann_sweep_curve_1m") {
-        val rows = pipeline.Retrieval.annRecallSweep(q8, reloaded,
-          cents, Seq(1, 4, 16, 64), 10, exact).collect()
+        val rows = sweep(1, 4, 16, 64).collect()
         rows.map(r => s"np${r.getLong(0)}=${r.getLong(2)}ppm")
           .mkString(" ")
       }
@@ -2229,7 +2230,7 @@ object ScaleBench {
     }
 
     // ---- the CODE-STORE tuning sweep at 1M (Retrieval
-    // .annPqRecallSweep): the 2-D operating surface of the
+    // .annRecallSweep over PQ legs): the 2-D operating surface of the
     // memory-bounded tier — nprobe scales the ADC records scanned off
     // the persisted code store (the partition pruning), rerankC scales
     // the full-vector rows the exact tail refetches (queries×rerankC —
@@ -2268,22 +2269,23 @@ object ScaleBench {
       val exact = pipeline.Similarity.bruteForceTopK(q8, corpus, 10)
         .select(col("qid"), col("nid")).localCheckpoint(true)
       val vectors = spark.read.parquet(s"$dir.fullvec")
+      def sweep(grid: (Int, Int)*) = pipeline.Retrieval.annRecallSweep(q8,
+        Seq("nprobe", "rerank_c"), grid.map { case (np, rc) =>
+          Seq(np.toLong, rc.toLong) ->
+            pipeline.VectorLeg.Pq(reloaded, cents, cbs, np, rc, vectors)
+        }, 10, exact)
       pin()
       ti("pq_sweep_np4_rc100_1m") {
-        val r = pipeline.Retrieval.annPqRecallSweep(q8, reloaded, cents,
-          cbs, Seq((4, 100)), 10, exact, vectors).collect().head
+        val r = sweep((4, 100)).collect().head
         s"np=4 rc=100 recall=${r.getLong(3)}ppm"
       }
       ti("pq_sweep_np32_rc100_1m") {
-        val r = pipeline.Retrieval.annPqRecallSweep(q8, reloaded, cents,
-          cbs, Seq((32, 100)), 10, exact, vectors).collect().head
+        val r = sweep((32, 100)).collect().head
         s"np=32 rc=100 recall=${r.getLong(3)}ppm"
       }
       ti("pq_sweep_surface_1m") {
-        val rows = pipeline.Retrieval.annPqRecallSweep(q8, reloaded,
-          cents, cbs,
-          Seq((4, 10), (4, 100), (32, 10), (32, 100), (32, 400)), 10,
-          exact, vectors).collect()
+        val rows = sweep((4, 10), (4, 100), (32, 10), (32, 100),
+          (32, 400)).collect()
         rows.map(r => s"np${r.getLong(0)}rc${r.getLong(1)}=" +
           s"${r.getLong(3)}ppm").mkString(" ")
       }
@@ -2339,20 +2341,23 @@ object ScaleBench {
         .localCheckpoint(true)
       val exact = pipeline.Similarity.bruteForceTopK(q10, corpus, 10)
         .select(col("qid"), col("nid")).localCheckpoint(true)
+      val tail = Some((50, fullIndex.select(col("cell"), col("nid"),
+        col("ne"))))
+      def sweep(nprobes: Seq[Int], leg: Int => pipeline.VectorLeg) =
+        pipeline.Retrieval.annRecallSweep(q10, Seq("nprobe"),
+          nprobes.map(np => Seq(np.toLong) -> leg(np)), 10, exact)
       pin()
       if (only("sq8_clustered")) {
         ti("sq8_clustered_bare_vs_full_1m") {
-          val bare = pipeline.Retrieval.annSq8RecallSweep(q10, sq8Index,
-            cents, Seq(8), 10, exact).collect().head.getLong(2)
-          val full = pipeline.Retrieval.annRecallSweep(q10, fullIndex,
-            cents, Seq(8), 10, exact).collect().head.getLong(2)
+          val bare = sweep(Seq(8), pipeline.VectorLeg.Sq8(sq8Index, cents,
+            _)).collect().head.getLong(2)
+          val full = sweep(Seq(8), pipeline.VectorLeg.Ivf(fullIndex,
+            cents, _)).collect().head.getLong(2)
           s"np=8 sq8Recall=${bare}ppm fullVecRecall=${full}ppm"
         }
         ti("sq8_clustered_rerank_1m") {
-          val tailed = pipeline.Retrieval.annSq8RecallSweep(q10,
-            sq8Index, cents, Seq(8), 10, exact,
-            rerank = Some((50, fullIndex.select(col("cell"), col("nid"),
-              col("ne"))))).collect().head.getLong(2)
+          val tailed = sweep(Seq(8), pipeline.VectorLeg.Sq8(sq8Index,
+            cents, _, tail)).collect().head.getLong(2)
           s"np=8 rerankC=50 recall=${tailed}ppm (cell-pruned refetch)"
         }
         ti("sq8_clustered_adaptive_1m") {
@@ -2378,16 +2383,14 @@ object ScaleBench {
       }
       if (only("sq8_sweep")) {
         ti("sq8_sweep_curve_1m") {
-          val rows = pipeline.Retrieval.annSq8RecallSweep(q10, sq8Index,
-            cents, Seq(4, 8, 32), 10, exact).collect()
+          val rows = sweep(Seq(4, 8, 32), pipeline.VectorLeg.Sq8(sq8Index,
+            cents, _)).collect()
           rows.map(r => s"np${r.getLong(0)}=${r.getLong(2)}ppm")
             .mkString(" ")
         }
         ti("sq8_sweep_tailed_curve_1m") {
-          val rows = pipeline.Retrieval.annSq8RecallSweep(q10, sq8Index,
-            cents, Seq(4, 8, 32), 10, exact,
-            rerank = Some((50, fullIndex.select(col("cell"), col("nid"),
-              col("ne"))))).collect()
+          val rows = sweep(Seq(4, 8, 32), pipeline.VectorLeg.Sq8(sq8Index,
+            cents, _, tail)).collect()
           rows.map(r => s"np${r.getLong(0)}=${r.getLong(2)}ppm")
             .mkString(" ")
         }

@@ -44,7 +44,9 @@ object Tables {
     * fixture directory in-JVM). */
   def invalidateSchemaCache(dir: Option[String] = None): Unit = dir match {
     case None => schemaCache.clear()
-    case Some(d) => schemaCache.keySet.removeIf(_.startsWith(d)); ()
+    case Some(d) =>
+      val prefix = d.stripSuffix("/") + "/"
+      schemaCache.keySet.removeIf(_.startsWith(prefix)); ()
   }
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {

@@ -469,9 +469,10 @@ object Maintenance {
     // the compaction trigger ([[Dedup.compactNeededFromCount]] =
     // count × bytesPerRow vs threshold) needs exactly this number, and
     // riding it on the write lets the streaming applyBatch skip the
-    // trigger's separate count() job per batch. Bounded await, the
-    // VersionedStore.append discipline — a timeout degrades to the
-    // caller re-counting, never a hang or a silently wrong decision.
+    // trigger's separate count() job per batch. Bounded, logged and
+    // counted await (IndexMaintenanceStream.observedRows, shared with
+    // VersionedStore.append) — a timeout degrades to the caller
+    // re-counting, never a hang or a silently wrong decision.
     var observed = 0L
     if (!tombstonesKnownEmpty) {
       val obs = org.apache.spark.sql.Observation()
@@ -482,18 +483,12 @@ object Maintenance {
       st.tombstones.observe(obs, count(lit(1)).as("rows"))
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$dir/tombstones")
-      val timeoutSec = st.tombstones.sparkSession.conf.get(
-        "spark.graft.appendObserveTimeoutSec", "30").toLong
       // await cost measured at 1-4 ms per call (the execution-end
       // listener event lands right behind the action) — not a latency
       // hazard at any batch cadence the stream runs at
-      observed = try {
-        scala.concurrent.Await.result(obs.future,
-          scala.concurrent.duration.Duration(timeoutSec, "s"))
-          .getAs[Long]("rows")
-      } catch {
-        case _: java.util.concurrent.TimeoutException => -1L
-      }
+      observed = graft.streaming.IndexMaintenanceStream.observedRows(
+        st.tombstones.sparkSession, obs, s"tombstone write to $dir",
+        "the caller re-counts the tombstones")
     }
     // through the Hadoop FS layer like the parquet half, so the
     // whole snapshot may live on HDFS/S3A (java.nio would silently

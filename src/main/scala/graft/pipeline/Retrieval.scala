@@ -22,6 +22,13 @@ import org.apache.spark.sql.functions._
   * div (k0 + rank)` over bigint ranks, so the fused ordering mirrors
   * in ANSI SQL for the DuckDB oracle; ranks inside each leg carry the
   * engine's deterministic tie-break (score desc, id asc).
+  *
+  * Serving from tailer-maintained stores is ONE composition,
+  * [[storeHybrid]]: resolve every store at the min-committed batch,
+  * run the lexical leg, run the tier's [[VectorLeg]] probe (IVF, PQ
+  * with rerank, SQ8, SQ8-adaptive; batch or scalar), fuse per qid. The
+  * same legs over in-memory indexes are the points of the one recall
+  * sweep, [[annRecallSweep]].
   */
 object Retrieval {
 
@@ -39,7 +46,7 @@ object Retrieval {
     val ids = queryVecs.select(col("vec_id")).limit(2).collect()
     require(ids.length <= 1, "this entry point fuses a SINGLE query; " +
       s"got ${ids.length}+ rows in queryVecs — use the " +
-      "batched variant (hybridTopKBatch / hybridFromStoresBatch) for " +
+      "batched variant (hybridTopKBatch / storeHybrid) for " +
       "multi-query frames")
   }
 
@@ -79,66 +86,80 @@ object Retrieval {
       .limit(k)
   }
 
-  /** CONSISTENT hybrid over two tailer-maintained stores
-    * ([[graft.streaming.IndexMaintenanceStream]] layouts under
-    * `bmDir` and `ivfDir`, fed by the same logical mutation stream):
-    * both stores resolve AT THE SAME COMMITTED BATCH — the newest
-    * batch BOTH state pointers have committed — so a mutation that
-    * landed in one store but not yet the other is invisible to the
-    * fused answer instead of serving a lexical leg and a vector leg
-    * from different corpus versions. Rides [[graft.streaming
-    * .IndexMaintenanceStream.viewAt]], so the older store's view costs
-    * nothing extra and the newer store's view is reconstructable for
-    * at least the reader-grace window (the two pointers can only drift
-    * by the stream's in-flight batches — far inside it). */
-  def hybridFromStores(spark: org.apache.spark.sql.SparkSession,
-                       bmDoor: Maintenance.Door, bmDir: String,
-                       nBuckets: Int,
-                       ivfDoor: Maintenance.Door, ivfDir: String,
-                       cents: Seq[(Long, Array[Double])],
-                       queryVecs: DataFrame, qTerms: Seq[String],
-                       k: Int, legK: Int = 20, nprobe: Int = 4,
-                       k0: Int = 60): DataFrame = {
+  /** A hybrid query for [[storeHybrid]]: a batch — the query frame
+    * `(vec_id, embedding)` plus each qid's terms — or one scalar
+    * `(qid, vector)` with its terms. A single query is a batch of one
+    * (per-qid fusion is correct for any number of rows); the scalar
+    * shape keeps the vector leg's driver-side cell resolution. */
+  sealed trait HybridQuery
+  final case class BatchQuery(vecs: DataFrame,
+                              terms: Seq[(Long, Seq[String])])
+      extends HybridQuery
+  final case class ScalarQuery(qid: Long, vec: Seq[Double],
+                               terms: Seq[String]) extends HybridQuery
+
+  /** The CONSISTENT store-backed hybrid — every served tier × shape:
+    *
+    *  1. the BM25 store under `bmDir` and every store the vector `leg`
+    *     reads ([[graft.streaming.IndexMaintenanceStream]] layouts fed
+    *     by the same logical mutation stream) resolve AT ONE committed
+    *     batch, the min over their state pointers — a mutation landed
+    *     in one store but not yet another is invisible to the fused
+    *     answer, and the PQ/SQ8 exact tails never refetch from a
+    *     different corpus version than their codes. Rides
+    *     [[graft.streaming.IndexMaintenanceStream.viewAt]], so the
+    *     oldest store's view costs nothing extra (the pointers drift
+    *     only by in-flight batches, far inside the reader-grace window);
+    *  2. the lexical leg — [[Bm25Index.searchBatch]] reads the UNION of
+    *     all queries' posting buckets once;
+    *  3. the leg's probe — one partition-pruned scan over the union of
+    *     the queries' cells ([[VectorLeg.batch]]), or the scalar probe
+    *     with driver-side cell resolution ([[VectorLeg.scalar]]);
+    *  4. per-qid RRF fusion ([[rrfFuseByQuery]]; `weights` = per-leg
+    *     ppm, lexical then vector).
+    *
+    * `allowed` (optional — first column = allowed doc/vector ids) is
+    * the metadata slice: it semi-joins each leg's probe-sized
+    * candidates BEFORE its per-qid top-k, scoring stays global on both
+    * legs (Lucene-filter / FAISS-IDSelector semantics), so filtering
+    * and batch amortization compose. Output `(qid, doc_id, rrf_ppm,
+    * n_legs, rank)`. */
+  def storeHybrid(spark: org.apache.spark.sql.SparkSession,
+                  bmDoor: Maintenance.Door, bmDir: String, nBuckets: Int,
+                  leg: VectorLeg.Stored, query: HybridQuery, k: Int,
+                  legK: Int = 20, k0: Int = 60, weights: Seq[Long] = Nil,
+                  allowed: Option[DataFrame] = None): DataFrame = {
     import graft.streaming.IndexMaintenanceStream
-    requireSingleQuery(queryVecs)
-    val asOf = math.min(
-      IndexMaintenanceStream.committedBatch(spark, bmDir),
-      IndexMaintenanceStream.committedBatch(spark, ivfDir))
-    val (bmView, bmStats) =
-      IndexMaintenanceStream.viewAt(spark, bmDoor, bmDir, asOf)
-    val (ivfView, _) =
-      IndexMaintenanceStream.viewAt(spark, ivfDoor, ivfDir, asOf)
+    val stores = (bmDoor -> bmDir) +: leg.stores
+    val asOf = stores
+      .map(s => IndexMaintenanceStream.committedBatch(spark, s._2)).min
+    val views = stores.map { case (door, dir) =>
+      IndexMaintenanceStream.viewAt(spark, door, dir, asOf) }
+    val (bmView, bmStats) = views.head
+    val probe = leg.at(views.tail.map(_._1))
+    val (terms, vec) = query match {
+      case BatchQuery(vecs, ts) => (ts, probe.batch(vecs, legK, allowed))
+      case ScalarQuery(qid, v, ts) =>
+        (Seq(qid -> ts), probe.scalar(qid, v, legK, allowed))
+    }
     // bmView goes to search UNMATERIALIZED: search's own lazy
     // localCheckpoint holds only the bucket-pruned probe-sized posting
     // subset — an eager corpus-sized checkpoint here would defeat the
     // pruning on every serving query (and, under reliableCheckpoint,
     // leak one durable checkpoint dir per query)
-    val lex = rankLex(Bm25Index.search(bmView,
-      bmStats.get, qTerms, legK, nBuckets))
-    val vec = Similarity.ivfTopKIndexedPruned(queryVecs, ivfView, cents,
-      legK, nprobe)
-      .select(col("nid").as("doc_id"), col("rank"))
-    rrfFuse(Seq(lex, vec), k, k0)
+    val lex = allowed.fold(
+      Bm25Index.searchBatch(bmView, bmStats.get, terms, legK, nBuckets))(
+      a => Bm25Index.searchBatchFiltered(bmView, bmStats.get, terms, legK,
+        nBuckets, a))
+    rrfFuseByQuery(Seq(
+      lex.select(col("qid"), col("doc_id"), col("rank")),
+      vec.select(col("qid"), col("nid").as("doc_id"), col("rank"))),
+      k, k0, weights)
   }
 
-  /** The BATCHED store-backed hybrid — the deployment tier's shape:
-    * B queries answered from the two tailer-maintained stores at ONE
-    * consistent `asOf` (the min-committed-batch rule of
-    * [[hybridFromStores]]), with both index scans amortized across the
-    * batch — [[Bm25Index.searchBatch]] reads the UNION of all queries'
-    * posting buckets once, and the IVF probe resolves the union of all
-    * queries' cells into one partition-pruned scan
-    * ([[Similarity.ivfTopKIndexedPruned]] batches natively). Work is
-    * O(touched buckets + probed cells), not O(B × either) — the batch
-    * amortization [[Bm25Index.searchBatch]]'s spec pins, now riding the
-    * tombstone-filtered serving views. `weights` = per-leg ppm
-    * (lexical, vector), the same knob as [[rrfFuse]]. `allowed`
-    * (optional — first column = allowed doc/vector ids) is the
-    * metadata slice of [[hybridTopKIndexedFiltered]] on the batch
-    * tier: the mask semi-joins each leg's probe-sized candidates
-    * BEFORE its per-qid top-k (scoring stays global on both legs —
-    * Lucene-filter / FAISS-IDSelector semantics), so filtering and
-    * batch amortization compose instead of excluding each other. */
+  /** [[storeHybrid]] over a full-vector IVF store, batched. Kept with
+    * this exact signature as a one-expression delegate because the
+    * benchmark harness under `perfbench/` calls it positionally. */
   def hybridFromStoresBatch(spark: org.apache.spark.sql.SparkSession,
                             bmDoor: Maintenance.Door, bmDir: String,
                             nBuckets: Int,
@@ -150,29 +171,33 @@ object Retrieval {
                             k0: Int = 60,
                             weights: Seq[Long] = Nil,
                             allowed: Option[DataFrame] = None)
-      : DataFrame = {
-    import graft.streaming.IndexMaintenanceStream
-    val asOf = math.min(
-      IndexMaintenanceStream.committedBatch(spark, bmDir),
-      IndexMaintenanceStream.committedBatch(spark, ivfDir))
-    val (bmView, bmStats) =
-      IndexMaintenanceStream.viewAt(spark, bmDoor, bmDir, asOf)
-    val (ivfView, _) =
-      IndexMaintenanceStream.viewAt(spark, ivfDoor, ivfDir, asOf)
-    val lex = allowed.fold(
-      Bm25Index.searchBatch(bmView, bmStats.get, queries, legK,
-        nBuckets))(a =>
-      Bm25Index.searchBatchFiltered(bmView, bmStats.get, queries, legK,
-        nBuckets, a))
-      .select(col("qid"), col("doc_id"), col("rank"))
-    val vec = allowed.fold(
-      Similarity.ivfTopKIndexedPruned(queryVecs, ivfView, cents,
-        legK, nprobe))(a =>
-      Similarity.ivfTopKIndexedPrunedFiltered(queryVecs, ivfView, cents,
-        legK, nprobe, a))
-      .select(col("qid"), col("nid").as("doc_id"), col("rank"))
-    rrfFuseByQuery(Seq(lex, vec), k, k0, weights)
-  }
+      : DataFrame =
+    storeHybrid(spark, bmDoor, bmDir, nBuckets,
+      VectorLeg.ivfStore(ivfDoor, ivfDir, cents, nprobe),
+      BatchQuery(queryVecs, queries), k, legK, k0, weights, allowed)
+
+  /** [[storeHybrid]] over the PQ code store with its full-vector rerank
+    * store, batched. Kept with this exact signature as a one-expression
+    * delegate because the benchmark harness under `perfbench/` calls it
+    * positionally. */
+  def hybridFromStoresPqBatch(spark: org.apache.spark.sql.SparkSession,
+                              bmDoor: Maintenance.Door, bmDir: String,
+                              nBuckets: Int,
+                              pqDoor: Maintenance.Door, pqDir: String,
+                              cents: Seq[(Long, Array[Double])],
+                              cbs: Array[Array[Array[Double]]],
+                              vecDoor: Maintenance.Door, vecDir: String,
+                              queryVecs: DataFrame,
+                              queries: Seq[(Long, Seq[String])], k: Int,
+                              legK: Int = 20, rerankC: Int = 100,
+                              nprobe: Int = 4, k0: Int = 60,
+                              weights: Seq[Long] = Nil,
+                              allowed: Option[DataFrame] = None)
+      : DataFrame =
+    storeHybrid(spark, bmDoor, bmDir, nBuckets,
+      VectorLeg.pqStore(pqDoor, pqDir, cents, cbs, vecDoor, vecDir, nprobe,
+        rerankC),
+      BatchQuery(queryVecs, queries), k, legK, k0, weights, allowed)
 
   /** Index-free hybrid top-k: BM25-score `docs` for `qTerms` and
     * cosine-rank `emb` against the embedding of `qid`, fuse with RRF
@@ -252,7 +277,7 @@ object Retrieval {
         nBuckets, a))
       .select(col("qid"), col("doc_id"), col("rank"))
     // the mask on the vector leg sits under the probe exactly like
-    // ivfTopKIndexedPrunedFiltered's: filtering a vector out never
+    // ivfTopKIndexedPruned's: filtering a vector out never
     // changes another's cell or score, so masked-probe ≡ probe of an
     // index built from only the allowed vectors
     val maskedIvf = allowed.fold(ivfIndex)(a => ivfIndex.join(
@@ -313,349 +338,6 @@ object Retrieval {
       ivfIndex, cents, legK, nprobe, ids)
       .select(col("nid").as("doc_id"), col("rank"))
     rrfFuse(Seq(lex, vec), k, k0, weights)
-  }
-
-  /** [[hybridFromStores]]' scalar twin: the consistent two-store
-    * serving read with the scalar door's job cuts (no guard job, no
-    * cell-resolution job — see [[hybridTopKIndexedScalar]]). */
-  def hybridFromStoresScalar(spark: org.apache.spark.sql.SparkSession,
-                             bmDoor: Maintenance.Door, bmDir: String,
-                             nBuckets: Int,
-                             ivfDoor: Maintenance.Door, ivfDir: String,
-                             cents: Seq[(Long, Array[Double])],
-                             query: (Long, Seq[Double]),
-                             qTerms: Seq[String],
-                             k: Int, legK: Int = 20, nprobe: Int = 4,
-                             k0: Int = 60,
-                             weights: Seq[Long] = Nil,
-                             allowed: Option[DataFrame] = None)
-      : DataFrame = {
-    import graft.streaming.IndexMaintenanceStream
-    val asOf = math.min(
-      IndexMaintenanceStream.committedBatch(spark, bmDir),
-      IndexMaintenanceStream.committedBatch(spark, ivfDir))
-    val (bmView, bmStats) =
-      IndexMaintenanceStream.viewAt(spark, bmDoor, bmDir, asOf)
-    val (ivfView, _) =
-      IndexMaintenanceStream.viewAt(spark, ivfDoor, ivfDir, asOf)
-    val ids = allowed.map(a =>
-      a.select(col(a.columns.head).as("doc_id")))
-    val lex = rankLex(ids.fold(
-      Bm25Index.search(bmView, bmStats.get, qTerms, legK, nBuckets))(a =>
-      Bm25Index.searchFiltered(bmView, bmStats.get, qTerms, legK,
-        nBuckets, a)))
-    val vec = Similarity.ivfTopKIndexedScalar(query._1, query._2,
-      ivfView, cents, legK, nprobe, ids)
-      .select(col("nid").as("doc_id"), col("rank"))
-    rrfFuse(Seq(lex, vec), k, k0, weights)
-  }
-
-  /** Hybrid serving from the MEMORY-BOUNDED code-store tier — the
-    * [[hybridFromStores]] contract with the vector leg served from a
-    * tailer-maintained PQ-CODE store ([[Maintenance.IvfPqDoor]] rows:
-    * 8 + m bytes/vector in the ADC working set) plus the exact-rerank
-    * tail funded by the full-vector store
-    * ([[Similarity.ivfPqTopKIndexedPrunedRerank]]): ADC ranks `rerankC`
-    * candidates from the code store, only those queries × rerankC ids
-    * refetch full vectors from `vecDir`'s live view. ALL THREE stores
-    * (BM25, PQ codes, full vectors) resolve at ONE committed batch —
-    * the min-committed rule — so the fused answer never mixes corpus
-    * versions across legs or between the ADC stage and its rerank
-    * refetch. When `rerankC` covers the probed candidate pool this
-    * serves EXACTLY what the full-vector [[hybridFromStores]] serves
-    * (spec-pinned) — the knob trades full-vector bytes touched for
-    * recall, measured on the 1M ledger. */
-  def hybridFromStoresPq(spark: org.apache.spark.sql.SparkSession,
-                         bmDoor: Maintenance.Door, bmDir: String,
-                         nBuckets: Int,
-                         pqDoor: Maintenance.Door, pqDir: String,
-                         cents: Seq[(Long, Array[Double])],
-                         cbs: Array[Array[Array[Double]]],
-                         vecDoor: Maintenance.Door, vecDir: String,
-                         queryVecs: DataFrame, qTerms: Seq[String],
-                         k: Int, legK: Int = 20, rerankC: Int = 100,
-                         nprobe: Int = 4, k0: Int = 60,
-                         weights: Seq[Long] = Nil,
-                         allowed: Option[DataFrame] = None): DataFrame = {
-    requireSingleQuery(queryVecs)
-    val (bmView, bmStats, pqView, vectors) =
-      pqStoreViews(spark, bmDoor, bmDir, pqDoor, pqDir, vecDoor, vecDir)
-    val ids = allowed.map(a =>
-      a.select(col(a.columns.head).as("doc_id")))
-    val lex = rankLex(ids.fold(
-      Bm25Index.search(bmView, bmStats.get, qTerms, legK, nBuckets))(a =>
-      Bm25Index.searchFiltered(bmView, bmStats.get, qTerms, legK,
-        nBuckets, a)))
-    val vec = Similarity.ivfPqTopKIndexedPrunedRerank(queryVecs, pqView,
-      cents, cbs, legK, nprobe, rerankC, vectors, ids)
-      .select(col("nid").as("doc_id"), col("rank"))
-    rrfFuse(Seq(lex, vec), k, k0, weights)
-  }
-
-  /** The BATCHED code-store hybrid — [[hybridFromStoresBatch]]'s shape
-    * on the PQ tier: B queries, one union-of-buckets lexical pass, one
-    * union-of-probed-cells ADC pass over the code store, ONE
-    * queries × rerankC full-vector refetch for the whole batch, all
-    * three stores at the min-committed batch. */
-  def hybridFromStoresPqBatch(spark: org.apache.spark.sql.SparkSession,
-                              bmDoor: Maintenance.Door, bmDir: String,
-                              nBuckets: Int,
-                              pqDoor: Maintenance.Door, pqDir: String,
-                              cents: Seq[(Long, Array[Double])],
-                              cbs: Array[Array[Array[Double]]],
-                              vecDoor: Maintenance.Door, vecDir: String,
-                              queryVecs: DataFrame,
-                              queries: Seq[(Long, Seq[String])], k: Int,
-                              legK: Int = 20, rerankC: Int = 100,
-                              nprobe: Int = 4, k0: Int = 60,
-                              weights: Seq[Long] = Nil,
-                              allowed: Option[DataFrame] = None)
-      : DataFrame = {
-    val (bmView, bmStats, pqView, vectors) =
-      pqStoreViews(spark, bmDoor, bmDir, pqDoor, pqDir, vecDoor, vecDir)
-    val lex = allowed.fold(
-      Bm25Index.searchBatch(bmView, bmStats.get, queries, legK,
-        nBuckets))(a =>
-      Bm25Index.searchBatchFiltered(bmView, bmStats.get, queries, legK,
-        nBuckets, a))
-      .select(col("qid"), col("doc_id"), col("rank"))
-    val vec = Similarity.ivfPqTopKIndexedPrunedRerank(queryVecs, pqView,
-      cents, cbs, legK, nprobe, rerankC, vectors, allowed)
-      .select(col("qid"), col("nid").as("doc_id"), col("rank"))
-    rrfFuseByQuery(Seq(lex, vec), k, k0, weights)
-  }
-
-  /** [[hybridFromStoresPq]]'s scalar twin: the code-store serving read
-    * with the scalar door's job cuts — no guard job, no cell-resolution
-    * job ([[Similarity.ivfPqTopKIndexedScalar]] resolves probe cells
-    * driver-side and builds the ADC LUT from the LocalRelation query
-    * frame). */
-  def hybridFromStoresPqScalar(spark: org.apache.spark.sql.SparkSession,
-                               bmDoor: Maintenance.Door, bmDir: String,
-                               nBuckets: Int,
-                               pqDoor: Maintenance.Door, pqDir: String,
-                               cents: Seq[(Long, Array[Double])],
-                               cbs: Array[Array[Array[Double]]],
-                               vecDoor: Maintenance.Door, vecDir: String,
-                               query: (Long, Seq[Double]),
-                               qTerms: Seq[String],
-                               k: Int, legK: Int = 20, rerankC: Int = 100,
-                               nprobe: Int = 4, k0: Int = 60,
-                               weights: Seq[Long] = Nil,
-                               allowed: Option[DataFrame] = None)
-      : DataFrame = {
-    val (bmView, bmStats, pqView, vectors) =
-      pqStoreViews(spark, bmDoor, bmDir, pqDoor, pqDir, vecDoor, vecDir)
-    val ids = allowed.map(a =>
-      a.select(col(a.columns.head).as("doc_id")))
-    val lex = rankLex(ids.fold(
-      Bm25Index.search(bmView, bmStats.get, qTerms, legK, nBuckets))(a =>
-      Bm25Index.searchFiltered(bmView, bmStats.get, qTerms, legK,
-        nBuckets, a)))
-    val vec = Similarity.ivfPqTopKIndexedScalar(query._1, query._2,
-      pqView, cents, cbs, legK, nprobe,
-      rerank = Some((rerankC, vectors)), allowed = ids)
-      .select(col("nid").as("doc_id"), col("rank"))
-    rrfFuse(Seq(lex, vec), k, k0, weights)
-  }
-
-  /** Hybrid serving from the SQ8 tier — the middle of the
-    * bytes-vs-recall spectrum serving the fused ranker: the vector leg
-    * probes a tailer-maintained [[Maintenance.IvfSq8Door]] store
-    * ([[Similarity.sq8TopKIndexedPruned]] — int8 cosine, no rerank
-    * tail needed at this tier), both stores at the min-committed
-    * batch. `allowed` masks both legs; `weights` the per-leg ppm
-    * knob. */
-  def hybridFromStoresSq8(spark: org.apache.spark.sql.SparkSession,
-                          bmDoor: Maintenance.Door, bmDir: String,
-                          nBuckets: Int,
-                          sq8Door: Maintenance.Door, sq8Dir: String,
-                          cents: Seq[(Long, Array[Double])],
-                          queryVecs: DataFrame, qTerms: Seq[String],
-                          k: Int, legK: Int = 20, nprobe: Int = 4,
-                          k0: Int = 60,
-                          weights: Seq[Long] = Nil,
-                          allowed: Option[DataFrame] = None): DataFrame = {
-    requireSingleQuery(queryVecs)
-    val (bmView, bmStats, sq8View) =
-      sq8StoreViews(spark, bmDoor, bmDir, sq8Door, sq8Dir)
-    val ids = allowed.map(a =>
-      a.select(col(a.columns.head).as("doc_id")))
-    val lex = rankLex(ids.fold(
-      Bm25Index.search(bmView, bmStats.get, qTerms, legK, nBuckets))(a =>
-      Bm25Index.searchFiltered(bmView, bmStats.get, qTerms, legK,
-        nBuckets, a)))
-    val vec = Similarity.sq8TopKIndexedPruned(queryVecs, sq8View, cents,
-      legK, nprobe, ids)
-      .select(col("nid").as("doc_id"), col("rank"))
-    rrfFuse(Seq(lex, vec), k, k0, weights)
-  }
-
-  /** The BATCHED SQ8-tier hybrid: B queries, one union-of-buckets
-    * lexical pass, one union-of-probed-cells int8-cosine pass, fusion
-    * per qid — [[hybridFromStoresBatch]]'s shape on the quantized
-    * store. */
-  def hybridFromStoresSq8Batch(spark: org.apache.spark.sql.SparkSession,
-                               bmDoor: Maintenance.Door, bmDir: String,
-                               nBuckets: Int,
-                               sq8Door: Maintenance.Door, sq8Dir: String,
-                               cents: Seq[(Long, Array[Double])],
-                               queryVecs: DataFrame,
-                               queries: Seq[(Long, Seq[String])], k: Int,
-                               legK: Int = 20, nprobe: Int = 4,
-                               k0: Int = 60,
-                               weights: Seq[Long] = Nil,
-                               allowed: Option[DataFrame] = None)
-      : DataFrame = {
-    val (bmView, bmStats, sq8View) =
-      sq8StoreViews(spark, bmDoor, bmDir, sq8Door, sq8Dir)
-    val lex = allowed.fold(
-      Bm25Index.searchBatch(bmView, bmStats.get, queries, legK,
-        nBuckets))(a =>
-      Bm25Index.searchBatchFiltered(bmView, bmStats.get, queries, legK,
-        nBuckets, a))
-      .select(col("qid"), col("doc_id"), col("rank"))
-    val vec = Similarity.sq8TopKIndexedPruned(queryVecs, sq8View, cents,
-      legK, nprobe, allowed)
-      .select(col("qid"), col("nid").as("doc_id"), col("rank"))
-    rrfFuseByQuery(Seq(lex, vec), k, k0, weights)
-  }
-
-  /** [[hybridFromStoresSq8]]'s scalar twin — no guard job, no
-    * cell-resolution job ([[Similarity.sq8TopKIndexedScalar]]). */
-  def hybridFromStoresSq8Scalar(spark: org.apache.spark.sql.SparkSession,
-                                bmDoor: Maintenance.Door, bmDir: String,
-                                nBuckets: Int,
-                                sq8Door: Maintenance.Door, sq8Dir: String,
-                                cents: Seq[(Long, Array[Double])],
-                                query: (Long, Seq[Double]),
-                                qTerms: Seq[String],
-                                k: Int, legK: Int = 20, nprobe: Int = 4,
-                                k0: Int = 60,
-                                weights: Seq[Long] = Nil,
-                                allowed: Option[DataFrame] = None)
-      : DataFrame = {
-    val (bmView, bmStats, sq8View) =
-      sq8StoreViews(spark, bmDoor, bmDir, sq8Door, sq8Dir)
-    val ids = allowed.map(a =>
-      a.select(col(a.columns.head).as("doc_id")))
-    val lex = rankLex(ids.fold(
-      Bm25Index.search(bmView, bmStats.get, qTerms, legK, nBuckets))(a =>
-      Bm25Index.searchFiltered(bmView, bmStats.get, qTerms, legK,
-        nBuckets, a)))
-    val vec = Similarity.sq8TopKIndexedScalar(query._1, query._2,
-      sq8View, cents, legK, nprobe, ids)
-      .select(col("nid").as("doc_id"), col("rank"))
-    rrfFuse(Seq(lex, vec), k, k0, weights)
-  }
-
-  private def sq8StoreViews(spark: org.apache.spark.sql.SparkSession,
-                            bmDoor: Maintenance.Door, bmDir: String,
-                            sq8Door: Maintenance.Door, sq8Dir: String)
-      : (DataFrame, Option[DataFrame], DataFrame) = {
-    import graft.streaming.IndexMaintenanceStream
-    val asOf = math.min(
-      IndexMaintenanceStream.committedBatch(spark, bmDir),
-      IndexMaintenanceStream.committedBatch(spark, sq8Dir))
-    val (bmView, bmStats) =
-      IndexMaintenanceStream.viewAt(spark, bmDoor, bmDir, asOf)
-    val (sq8View, _) =
-      IndexMaintenanceStream.viewAt(spark, sq8Door, sq8Dir, asOf)
-    (bmView, bmStats, sq8View)
-  }
-
-  /** The ADAPTIVE-TIER hybrid — the margin router serving the fused
-    * ranker from THREE stores at one min-committed batch: the vector
-    * leg probes the SQ8 store and routes only margin-uncertain
-    * queries' candidates through the exact tail funded by the
-    * FULL-VECTOR store ([[Similarity.sq8TopKIndexedAdaptiveRerank]]),
-    * so the deployment's full-vector bytes scale with the query mix's
-    * actual cut-line uncertainty (read `marginPpm` off the
-    * [[Similarity.sq8CutMargins]] census). The min-committed rule
-    * covers the refetch: the int8 ranking and the exact tail can
-    * never mix corpus versions. At marginPpm = 0 this serves exactly
-    * [[hybridFromStoresSq8]]; at a covering margin it is the SQ8 tier
-    * with the full tail. */
-  def hybridFromStoresSq8Adaptive(spark: org.apache.spark.sql.SparkSession,
-                                  bmDoor: Maintenance.Door, bmDir: String,
-                                  nBuckets: Int,
-                                  sq8Door: Maintenance.Door,
-                                  sq8Dir: String,
-                                  cents: Seq[(Long, Array[Double])],
-                                  vecDoor: Maintenance.Door,
-                                  vecDir: String,
-                                  queryVecs: DataFrame,
-                                  qTerms: Seq[String],
-                                  k: Int, legK: Int = 20,
-                                  nprobe: Int = 4, rerankC: Int = 100,
-                                  marginPpm: Long = 0L, k0: Int = 60,
-                                  weights: Seq[Long] = Nil,
-                                  allowed: Option[DataFrame] = None)
-      : DataFrame = {
-    requireSingleQuery(queryVecs)
-    val (bmView, bmStats, sq8View, vectors) =
-      sq8AdaptiveStoreViews(spark, bmDoor, bmDir, sq8Door, sq8Dir,
-        vecDoor, vecDir)
-    val ids = allowed.map(a =>
-      a.select(col(a.columns.head).as("doc_id")))
-    val lex = rankLex(ids.fold(
-      Bm25Index.search(bmView, bmStats.get, qTerms, legK, nBuckets))(a =>
-      Bm25Index.searchFiltered(bmView, bmStats.get, qTerms, legK,
-        nBuckets, a)))
-    val vec = Similarity.sq8TopKIndexedAdaptiveRerank(queryVecs,
-      sq8View, cents, legK, nprobe, rerankC, marginPpm, vectors, ids)
-      .select(col("nid").as("doc_id"), col("rank"))
-    rrfFuse(Seq(lex, vec), k, k0, weights)
-  }
-
-  /** Resolve the adaptive tier's three stores (BM25 postings, SQ8
-    * codes, full vectors) at ONE committed batch, shaping the
-    * full-vector view as the cell-carrying side table the adaptive
-    * tail's cell-pruned refetch takes. */
-  private def sq8AdaptiveStoreViews(
-      spark: org.apache.spark.sql.SparkSession,
-      bmDoor: Maintenance.Door, bmDir: String,
-      sq8Door: Maintenance.Door, sq8Dir: String,
-      vecDoor: Maintenance.Door, vecDir: String)
-      : (DataFrame, Option[DataFrame], DataFrame, DataFrame) = {
-    import graft.streaming.IndexMaintenanceStream
-    val asOf = Seq(bmDir, sq8Dir, vecDir)
-      .map(IndexMaintenanceStream.committedBatch(spark, _)).min
-    val (bmView, bmStats) =
-      IndexMaintenanceStream.viewAt(spark, bmDoor, bmDir, asOf)
-    val (sq8View, _) =
-      IndexMaintenanceStream.viewAt(spark, sq8Door, sq8Dir, asOf)
-    val (vecView, _) =
-      IndexMaintenanceStream.viewAt(spark, vecDoor, vecDir, asOf)
-    (bmView, bmStats, sq8View,
-      vecView.select(col("cell"), col("nid"), col("ne")))
-  }
-
-  /** Resolve the three code-tier stores (BM25 postings, PQ codes, full
-    * vectors) at ONE committed batch — min over the three pointers, the
-    * [[hybridFromStores]] consistency rule extended to the rerank
-    * refetch — and shape the full-vector view as the `(nid, ne)` side
-    * table the rerank tail takes. */
-  private def pqStoreViews(spark: org.apache.spark.sql.SparkSession,
-                           bmDoor: Maintenance.Door, bmDir: String,
-                           pqDoor: Maintenance.Door, pqDir: String,
-                           vecDoor: Maintenance.Door, vecDir: String)
-      : (DataFrame, Option[DataFrame], DataFrame, DataFrame) = {
-    import graft.streaming.IndexMaintenanceStream
-    val asOf = Seq(bmDir, pqDir, vecDir)
-      .map(IndexMaintenanceStream.committedBatch(spark, _)).min
-    val (bmView, bmStats) =
-      IndexMaintenanceStream.viewAt(spark, bmDoor, bmDir, asOf)
-    val (pqView, _) =
-      IndexMaintenanceStream.viewAt(spark, pqDoor, pqDir, asOf)
-    val (vecView, _) =
-      IndexMaintenanceStream.viewAt(spark, vecDoor, vecDir, asOf)
-    // the cell column rides along: the rerank tail pushes its literal
-    // probe-cell filter into the refetch scan too (both stores assign
-    // under the same frozen quantizer, so every candidate's current
-    // vector lives in a probed cell — Similarity.pruneVectors)
-    (bmView, bmStats, pqView,
-      vecView.select(col("cell"), col("nid"), col("ne")))
   }
 
   /** RETRIEVAL EVALUATION — the harness that closes the loop on every
@@ -755,100 +437,39 @@ object Retrieval {
       .orderBy(col("macro_map_ppm").desc, col("variant_id").asc)
   }
 
-  /** The ANN-side tuning loop — [[evalSweep]]'s twin for the knob the
-    * PQ/IVF recall ledgers expose: score the partition-pruned IVF
-    * probe at each `nprobe` variant against an EXACT reference top-k
-    * (`exact` = `(qid, nid)` rows, e.g. [[Similarity.bruteForceTopK]]
-    * output on a held-out query sample) and rank the accuracy curve.
-    * One row per variant `(nprobe, n_queries, macro_recall_ppm,
-    * macro_mrr_ppm, macro_map_ppm)` ordered by nprobe — the measured
-    * recall-vs-cost curve a deployment reads the operating point off.
-    * Cost shape: the reference is materialized ONCE (query-sample ×
-    * k rows); each variant pays exactly one pruned probe (≤
-    * |queries|·nprobe of the nlist cell partitions — nprobe IS the
-    * cost being swept, so per-variant index work is the measurement,
-    * not overhead) plus a qrels-sized metric pass. Integer-exact end
-    * to end, so the whole sweep mirrors in ANSI SQL. */
-  def annRecallSweep(queries: DataFrame, index: DataFrame,
-                     cents: Seq[(Long, Array[Double])],
-                     nprobes: Seq[Int], k: Int,
+  /** The ANN-side tuning loop — [[evalSweep]]'s twin for the knobs
+    * the recall ledgers expose: score each operating point's
+    * [[VectorLeg]] probe against an EXACT reference top-k (`exact` =
+    * `(qid, nid)` rows, e.g. [[Similarity.bruteForceTopK]] output on a
+    * held-out query sample) and lay out the accuracy curve. `labels`
+    * names the knob columns (e.g. `nprobe`, or `nprobe`, `rerank_c` for
+    * the code-store surface); each point gives their values and the leg
+    * built at them. One row per point `(labels…, n_queries,
+    * macro_recall_ppm, macro_mrr_ppm, macro_map_ppm)` ordered by the
+    * labels — the measured recall-vs-cost curve a deployment reads the
+    * operating point off. Cost shape: the reference is materialized
+    * ONCE (query-sample × k rows); each point pays exactly one pruned
+    * probe (≤ |queries|·nprobe of the nlist cell partitions, plus
+    * queries × rerankC refetches on a tail — the cost being swept, so
+    * per-point index work is the measurement, not overhead) plus a
+    * qrels-sized metric pass. Integer-exact end to end, so the whole
+    * sweep mirrors in ANSI SQL. */
+  def annRecallSweep(queries: DataFrame, labels: Seq[String],
+                     points: Seq[(Seq[Long], VectorLeg)], k: Int,
                      exact: DataFrame): DataFrame = {
-    require(nprobes.nonEmpty, "annRecallSweep needs at least one variant")
+    require(points.nonEmpty, "annRecallSweep needs at least one point")
+    require(points.forall(_._1.size == labels.size),
+      s"every point needs one value per label (${labels.mkString(", ")})")
     val qrels = Dedup.checkpointCorpus(
       exact.select(col("qid"), col("nid").as("doc_id")))
-    nprobes.map { np =>
-      val res = Similarity.ivfTopKIndexedPruned(queries, index, cents,
-        k, np)
+    points.map { case (values, leg) =>
+      val res = leg.batch(queries, k)
         .select(col("qid"), col("nid").as("doc_id"), col("rank"))
-      evalMacro(evalMetrics(res, qrels, k))
-        .select(lit(np.toLong).as("nprobe"), col("n_queries"),
-          col("macro_recall_ppm"), col("macro_mrr_ppm"),
-          col("macro_map_ppm"))
-    }.reduce(_ unionByName _).orderBy(col("nprobe").asc)
-  }
-
-  /** [[annRecallSweep]] extended to the CODE-store serving probe — the
-    * operating surface of the memory-bounded tier is TWO-dimensional
-    * (`nprobe` = cells scanned, `rerankC` = full-vector bytes touched
-    * by the exact tail), so the grid sweeps both: each point runs
-    * [[Similarity.ivfPqTopKIndexedPrunedRerank]] over the persisted PQ
-    * code index at that (nprobe, rerankC) and scores it against the
-    * exact reference. Per-point cost IS the operating point being
-    * measured: ≤ |queries|·nprobe cell partitions ADC-scanned +
-    * queries × rerankC full-vector refetches; the reference
-    * materializes once. Output `(nprobe, rerank_c, n_queries,
-    * macro_recall_ppm, macro_mrr_ppm, macro_map_ppm)` ordered by
-    * (nprobe, rerank_c) — the measured recall-vs-bytes-vs-cost curve a
-    * deployment reads its knobs off. Integer-exact end to end. */
-  def annPqRecallSweep(queries: DataFrame, index: DataFrame,
-                       cents: Seq[(Long, Array[Double])],
-                       cbs: Array[Array[Array[Double]]],
-                       grid: Seq[(Int, Int)], k: Int,
-                       exact: DataFrame, vectors: DataFrame): DataFrame = {
-    require(grid.nonEmpty, "annPqRecallSweep needs at least one point")
-    val qrels = Dedup.checkpointCorpus(
-      exact.select(col("qid"), col("nid").as("doc_id")))
-    grid.map { case (np, rc) =>
-      val res = Similarity.ivfPqTopKIndexedPrunedRerank(queries, index,
-        cents, cbs, k, np, rc, vectors)
-        .select(col("qid"), col("nid").as("doc_id"), col("rank"))
-      evalMacro(evalMetrics(res, qrels, k))
-        .select(lit(np.toLong).as("nprobe"), lit(rc.toLong).as("rerank_c"),
-          col("n_queries"), col("macro_recall_ppm"),
-          col("macro_mrr_ppm"), col("macro_map_ppm"))
-    }.reduce(_ unionByName _)
-      .orderBy(col("nprobe").asc, col("rerank_c").asc)
-  }
-
-  /** [[annRecallSweep]] on the SQ8 tier — the middle tier's own
-    * recall-vs-cost curve, completing the per-tier set (IVF 1-D grid,
-    * PQ 2-D grid, SQ8 here): each nprobe variant runs the pruned int8
-    * probe ([[Similarity.sq8TopKIndexedPruned]]) over the persisted
-    * quantized index and scores against the exact reference; `rerank`
-    * threads the optional exact tail through every variant, so the
-    * same sweep measures the tail's recall payback where the
-    * clustered-fixture ledger says int8 rounding reorders the cut
-    * line. One row per nprobe, integer-exact end to end; per-variant
-    * index work IS the operating point being measured. */
-  def annSq8RecallSweep(queries: DataFrame, index: DataFrame,
-                        cents: Seq[(Long, Array[Double])],
-                        nprobes: Seq[Int], k: Int,
-                        exact: DataFrame,
-                        rerank: Option[(Int, DataFrame)] = None)
-      : DataFrame = {
-    require(nprobes.nonEmpty,
-      "annSq8RecallSweep needs at least one variant")
-    val qrels = Dedup.checkpointCorpus(
-      exact.select(col("qid"), col("nid").as("doc_id")))
-    nprobes.map { np =>
-      val res = Similarity.sq8TopKIndexedPruned(queries, index, cents,
-        k, np, rerank = rerank)
-        .select(col("qid"), col("nid").as("doc_id"), col("rank"))
-      evalMacro(evalMetrics(res, qrels, k))
-        .select(lit(np.toLong).as("nprobe"), col("n_queries"),
-          col("macro_recall_ppm"), col("macro_mrr_ppm"),
-          col("macro_map_ppm"))
-    }.reduce(_ unionByName _).orderBy(col("nprobe").asc)
+      evalMacro(evalMetrics(res, qrels, k)).select(
+        labels.zip(values).map { case (l, v) => lit(v).as(l) } ++
+          Seq(col("n_queries"), col("macro_recall_ppm"),
+            col("macro_mrr_ppm"), col("macro_map_ppm")): _*)
+    }.reduce(_ unionByName _).orderBy(labels.map(col(_).asc): _*)
   }
 
   /** METADATA-FILTERED hybrid — the "search within a slice" query every
@@ -859,8 +480,8 @@ object Retrieval {
     * hybrid top-k over the slice. Scoring semantics follow each leg's
     * production convention ([[Bm25Index.searchFiltered]] keeps global
     * df/corpus stats — Lucene filter-query semantics;
-    * [[Similarity.ivfTopKIndexedPrunedFiltered]] masks candidates under
-    * the frozen quantizer — FAISS IDSelector semantics), so per-doc
+    * [[Similarity.ivfTopKIndexedPruned]]'s mask filters candidates
+    * under the frozen quantizer — FAISS IDSelector semantics), so per-doc
     * scores are unchanged by the mask and the filter costs
     * probe-sized ⋈ allowed on each leg, never a corpus rescan. */
   def hybridTopKIndexedFiltered(postings: DataFrame, stats: DataFrame,
@@ -876,8 +497,8 @@ object Retrieval {
     val ids = allowed.select(col(allowed.columns.head).as("doc_id"))
     val lex = rankLex(Bm25Index.searchFiltered(postings, stats, qTerms,
       legK, nBuckets, ids))
-    val vec = Similarity.ivfTopKIndexedPrunedFiltered(queryVec, ivfIndex,
-      cents, legK, nprobe, ids)
+    val vec = Similarity.ivfTopKIndexedPruned(queryVec, ivfIndex,
+      cents, legK, nprobe, Some(ids))
       .select(col("nid").as("doc_id"), col("rank"))
     rrfFuse(Seq(lex, vec), k, k0, weights)
   }

@@ -285,12 +285,26 @@ object Similarity {
     * the nlist partitions, never the corpus. Results ≡
     * [[ivfTopKIndexed]] (the literal set IS the join's key set;
     * spec-pinned). Queries must be a bounded serving batch — the
-    * cell resolution collects |queries|×nprobe longs. */
+    * cell resolution collects |queries|×nprobe longs.
+    *
+    * `allowed` (first column = allowed vector ids) is the METADATA
+    * FILTER, FAISS-IDSelector semantics: it masks candidates BEFORE the
+    * per-query rank window, so the top-k is the true filtered top-k (a
+    * post-k filter would under-fill k). Cell assignment and similarity
+    * are untouched — filtering a vector out never changes another
+    * vector's cell or score — so the result ≡ a probe over an index
+    * built from only the allowed vectors under the same frozen
+    * quantizer. The literal `isin` partition filter pushes through the
+    * semi-join, so the mask costs pruned-cells ⋈ allowed, never a
+    * corpus scan. */
   def ivfTopKIndexedPruned(queries: DataFrame, index: DataFrame,
                            cents: Seq[(Long, Array[Double])], k: Int,
-                           nprobe: Int): DataFrame = {
+                           nprobe: Int,
+                           allowed: Option[DataFrame] = None): DataFrame = {
     val cells = probeCells(queries, cents, nprobe)
-    ivfTopKIndexed(queries, index.where(col("cell").isin(cells: _*)),
+    val masked = allowed.fold(index)(a => index.join(
+      a.select(col(a.columns.head).as("nid")), Seq("nid"), "left_semi"))
+    ivfTopKIndexed(queries, masked.where(col("cell").isin(cells: _*)),
       cents, k, nprobe)
   }
 
@@ -320,7 +334,7 @@ object Similarity {
     * and land as the same literal `isin` partition filter as
     * [[ivfTopKIndexedPruned]]. Single-query semantics are enforced at
     * COMPILE time by the signature. `allowed` composes the
-    * [[ivfTopKIndexedPrunedFiltered]] mask. Results ≡ the DataFrame
+    * [[ivfTopKIndexedPruned]] mask. Results ≡ the DataFrame
     * doors on the same query (spec-pinned). */
   def ivfTopKIndexedScalar(qid: Long, vec: Seq[Double], index: DataFrame,
                            cents: Seq[(Long, Array[Double])], k: Int,
@@ -346,25 +360,6 @@ object Similarity {
     ivfTopKIndexed(queries, masked.where(col("cell").isin(cells: _*)),
       cents, k, nprobe)
   }
-
-  /** METADATA-FILTERED serving probe — FAISS-IDSelector semantics on
-    * the IVF store: `allowed` (first column = allowed vector ids)
-    * masks candidates BEFORE the per-query rank window, so the top-k
-    * is the true filtered top-k (a post-k filter would under-fill k).
-    * Cell assignment and similarity are untouched — filtering a vector
-    * out never changes another vector's cell or score — so the result
-    * ≡ a probe over an index built from only the allowed vectors under
-    * the same frozen quantizer. Plan shape: the semi-join's left side
-    * is the cell-pruned probe scan (the literal `isin` partition filter
-    * pushes through the join), so the mask costs pruned-cells ⋈
-    * allowed, never a corpus scan. */
-  def ivfTopKIndexedPrunedFiltered(queries: DataFrame, index: DataFrame,
-                                   cents: Seq[(Long, Array[Double])],
-                                   k: Int, nprobe: Int,
-                                   allowed: DataFrame): DataFrame =
-    ivfTopKIndexedPruned(queries,
-      index.join(allowed.select(col(allowed.columns.head).as("nid")),
-        Seq("nid"), "left_semi"), cents, k, nprobe)
 
   /** The one-call UPDATE door, `Bm25Index.update`'s ANN twin: assign the
     * replacement vectors under the FROZEN quantizer, stamp them with

@@ -76,12 +76,43 @@ object IndexMaintenanceStream {
   private val log =
     org.slf4j.LoggerFactory.getLogger(IndexMaintenanceStream.getClass)
 
-  /** Count of [[VersionedStore.append]] observation timeouts — the
-    * logged keep-the-dir degradation arm, exposed so the spec (and a
-    * deployment's metrics scrape) can see a feed whose delta writes
-    * outrun `spark.graft.appendObserveTimeoutSec` instead of inferring
-    * it from surviving empty dirs. */
+  /** Count of store-write observation timeouts ([[observedRows]]) —
+    * BOTH kinds of write: the delta appends of [[VersionedStore.append]]
+    * (the keep-the-dir degradation arm) and the tombstone writes of
+    * [[Maintenance.saveState]] (the caller re-counts). Exposed so the
+    * spec (and a deployment's metrics scrape) can see a feed whose
+    * writes outrun `spark.graft.appendObserveTimeoutSec` instead of
+    * inferring it from surviving empty dirs or extra count jobs. The
+    * name predates the second kind and is kept for its readers. */
   val appendObserveTimeouts = new java.util.concurrent.atomic.AtomicLong()
+
+  /** The row count a store write OBSERVED inside its own action, or -1
+    * when the metric did not land within
+    * `spark.graft.appendObserveTimeoutSec` (default 30 s). The metric
+    * arrives through an async listener right after the action, so this
+    * is a bounded wait on the observation's future instead of the
+    * blocking get: a writer that ran no action (or a write that
+    * outran the budget on a loaded cluster) degrades to `fallback`
+    * rather than hanging the stream — LOGGED and counted in
+    * [[appendObserveTimeouts]], never silent. */
+  private[graft] def observedRows(spark: SparkSession,
+                                  obs: org.apache.spark.sql.Observation,
+                                  what: String, fallback: String): Long = {
+    val timeoutSec = spark.conf.get(
+      "spark.graft.appendObserveTimeoutSec", "30").toLong
+    try {
+      scala.concurrent.Await.result(obs.future,
+        scala.concurrent.duration.Duration(timeoutSec, "s"))
+        .getAs[Long]("rows")
+    } catch {
+      case _: java.util.concurrent.TimeoutException =>
+        appendObserveTimeouts.incrementAndGet()
+        log.warn(s"$what observation timed out after ${timeoutSec}s " +
+          "(spark.graft.appendObserveTimeoutSec): either the writer ran " +
+          s"no Spark action or the write outran the budget — $fallback")
+        -1L
+    }
+  }
 
   /** One inferred row schema per store root (see [[VersionedStore.rows]]),
     * KEYED BY THE EFFECTIVE BASE it was inferred from: any path that
@@ -303,34 +334,11 @@ object IndexMaintenanceStream {
       val obs = org.apache.spark.sql.Observation()
       writer(delta.observe(obs, count(lit(1)).as("rows")), dst,
         "overwrite")
-      // the metric lands via an async listener right after the action;
-      // a bounded wait on the observation's future instead of the
-      // blocking get — a zero-action writer times out into n = -1.
-      // The bound is CONFIG-pinned (`spark.graft.appendObserveTimeoutSec`,
-      // default 30): obs.future completes only after the action's
-      // listener event, so a slow-but-legitimate delta write on a
-      // loaded cluster needs the timeout sized with the batch budget —
-      // the default treats >30 s writes like zero-action writers, and
-      // the degradation (keep-the-dir: the empty-layout optimization
-      // silently off exactly when the cluster is busiest) is LOGGED and
-      // counted ([[appendObserveTimeouts]], spec-pinned) instead of
-      // silent.
-      val timeoutSec = spark.conf.get(
-        "spark.graft.appendObserveTimeoutSec", "30").toLong
-      val n = try {
-        scala.concurrent.Await.result(obs.future,
-          scala.concurrent.duration.Duration(timeoutSec, "s"))
-          .getAs[Long]("rows")
-      } catch {
-        case _: java.util.concurrent.TimeoutException =>
-          appendObserveTimeouts.incrementAndGet()
-          log.warn(s"append observation for $dst timed out after " +
-            s"${timeoutSec}s (spark.graft.appendObserveTimeoutSec): " +
-            "either the writer ran no Spark action or the delta write " +
-            "outran the budget — keeping the delta dir (the " +
-            "empty-layout optimization is OFF for this batch)")
-          -1L
-      }
+      // a zero-action writer times out into n = -1; the bound is sized
+      // with the batch budget (see [[observedRows]])
+      val n = observedRows(spark, obs, s"append to $dst",
+        "keeping the delta dir (the empty-layout optimization is OFF " +
+          "for this batch)")
       val (hfs, _) = fs
       if (n == 0L)
         hfs.delete(new org.apache.hadoop.fs.Path(dst), true)

@@ -19,33 +19,49 @@ class InParallelSpec extends AnyFunSuite {
     assert(got eq boom, "the ExecutionException wrapper leaked")
   }
 
-  test("on failure, sibling chains are interrupted and drained before " +
-      "the exception unwinds") {
+  /** One chain fails once its sibling is demonstrably mid-flight on a
+    * 30 s sleep; `failFirst` puts the failing chain first or second in
+    * submission order. By the time inParallel unwinds, the sibling must
+    * have been stopped: interrupted, and not left running to completion
+    * later. */
+  private def siblingStopped(failFirst: Boolean): Unit = {
     val siblingFinished = new java.util.concurrent.atomic.AtomicBoolean(false)
     val siblingInterrupted = new java.util.concurrent.atomic.AtomicBoolean(false)
     val siblingStarted = new java.util.concurrent.CountDownLatch(1)
-    intercept[IllegalStateException] {
-      PipelineQueries.inParallel(
-        () => {
-          // fail only once the sibling is demonstrably mid-flight
-          siblingStarted.await()
-          throw new IllegalStateException("first chain fails")
-        },
-        () => {
-          siblingStarted.countDown()
-          try {
-            Thread.sleep(30000) // a long store chain, mid-write
-            siblingFinished.set(true) // would be the leaked writer
-          } catch {
-            case _: InterruptedException => siblingInterrupted.set(true)
-          }
-        })
+    val failing = () => {
+      // fail only once the sibling is demonstrably mid-flight
+      siblingStarted.await()
+      throw new IllegalStateException("one chain fails")
     }
-    // by the time inParallel unwound, the sibling must have been stopped:
-    // interrupted, and definitely not left running to completion later
+    val sibling = () => {
+      siblingStarted.countDown()
+      try {
+        Thread.sleep(30000) // a long store chain, mid-write
+        siblingFinished.set(true) // would be the leaked writer
+      } catch {
+        case _: InterruptedException => siblingInterrupted.set(true)
+      }
+    }
+    intercept[IllegalStateException] {
+      if (failFirst) PipelineQueries.inParallel(failing, sibling)
+      else PipelineQueries.inParallel(sibling, failing)
+    }
     assert(siblingInterrupted.get,
       "sibling chain was not interrupted on failure")
     assert(!siblingFinished.get,
       "sibling chain kept running after inParallel rethrew")
+  }
+
+  test("on failure, sibling chains are interrupted and drained before " +
+      "the exception unwinds") {
+    siblingStopped(failFirst = true)
+  }
+
+  test("a failure in a LATER chain stops an earlier long chain at once " +
+      "(completion order, not submission order)") {
+    val t0 = System.nanoTime()
+    siblingStopped(failFirst = false)
+    assert((System.nanoTime() - t0) / 1000000L < 20000L,
+      "inParallel waited on the earlier chain before cancelling")
   }
 }

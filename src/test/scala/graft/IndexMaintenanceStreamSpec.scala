@@ -582,7 +582,7 @@ class IndexMaintenanceStreamSpec extends AnyFunSuite {
   test("CONSISTENT cross-store hybrid: both legs resolve at the MIN " +
       "committed batch — a batch landed in one store only is invisible " +
       "to the fused answer") {
-    import graft.pipeline.{Retrieval, Similarity}
+    import graft.pipeline.{Retrieval, Similarity, VectorLeg}
     val root = java.nio.file.Files.createTempDirectory("imdual").toString
     val bmDir = s"$root/bm"; val ivfDir = s"$root/ivf"
     def vecs(ids: Seq[Long]): DataFrame =
@@ -616,10 +616,11 @@ class IndexMaintenanceStreamSpec extends AnyFunSuite {
     assert(IndexMaintenanceStream.committedBatch(spark, bmDir) === 1L)
     assert(IndexMaintenanceStream.committedBatch(spark, ivfDir) === 0L)
     val q = vecs(Seq(7L))
+    val ivfLeg = VectorLeg.ivfStore(ivfDoor, ivfDir, cents, 8)
     def hybrid(): Seq[(Long, Long, Long)] =
-      Retrieval.hybridFromStores(spark, bmDoor, bmDir, nBuckets,
-        ivfDoor, ivfDir, cents, q, qTerms, k = 10, legK = 12,
-        nprobe = 8)
+      Retrieval.storeHybrid(spark, bmDoor, bmDir, nBuckets, ivfLeg,
+        Retrieval.BatchQuery(q, Seq(7L -> qTerms)), k = 10, legK = 12)
+        .orderBy("rank").select("doc_id", "rrf_ppm", "n_legs")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         .toSeq
     def fuseAt(b: Long): Seq[(Long, Long, Long)] = {
@@ -651,13 +652,13 @@ class IndexMaintenanceStreamSpec extends AnyFunSuite {
       vmuts("delete", Seq(5L)), 1L)
     assert(hybrid() === fuseAt(1L))
     // FILTERED + BATCHED through the store facade: the allowed mask
-    // rides hybridFromStoresBatch and must equal the per-query
-    // filtered fusion over the same consistent views, per qid
+    // rides the batch and must equal the per-query filtered fusion
+    // over the same consistent views, per qid
     val allowed = spark.range(50).select((col("id") * 2).as("doc_id"))
     val qb = Seq(7L -> qTerms, 9L -> Seq("alpha", "beta"))
-    val batched = Retrieval.hybridFromStoresBatch(spark, bmDoor, bmDir,
-      nBuckets, ivfDoor, ivfDir, cents, vecs(Seq(7L, 9L)), qb,
-      k = 10, legK = 12, nprobe = 8, allowed = Some(allowed))
+    val batched = Retrieval.storeHybrid(spark, bmDoor, bmDir, nBuckets,
+      ivfLeg, Retrieval.BatchQuery(vecs(Seq(7L, 9L)), qb), k = 10,
+      legK = 12, allowed = Some(allowed))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(4))).groupBy(_._1)
     val (bmV, bmS) = IndexMaintenanceStream.viewAt(spark, bmDoor,
@@ -668,8 +669,8 @@ class IndexMaintenanceStreamSpec extends AnyFunSuite {
       val alone = Retrieval.rrfFuse(Seq(
         Retrieval.rankLex(Bm25Index.searchFiltered(bmV, bmS.get, terms,
           12, nBuckets, allowed)),
-        Similarity.ivfTopKIndexedPrunedFiltered(vecs(Seq(qid)), ivfV,
-          cents, 12, 8, allowed)
+        Similarity.ivfTopKIndexedPruned(vecs(Seq(qid)), ivfV,
+          cents, 12, 8, Some(allowed))
           .select(col("nid").as("doc_id"), col("rank"))), k = 10)
         .collect().zipWithIndex.map { case (r, i) =>
           (qid, r.getLong(0), r.getLong(1), i + 1L) }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.pipeline.{Bm25Index, Maintenance, Retrieval, Similarity}
+import graft.pipeline.{Bm25Index, Maintenance, Retrieval, Similarity,
+  VectorLeg}
 import graft.streaming.IndexMaintenanceStream
 
 /** The memory-bounded PQ serving tier, round 17: the exact-rerank TAIL
@@ -17,6 +18,9 @@ import graft.streaming.IndexMaintenanceStream
   *    the full-vector scores — float→double widening is exact);
   *  - PQ-leg-served hybrid ≡ full-vector-served hybrid when rerankC
   *    covers legK's candidate pool (the r16 verdict's done-criterion);
+  *  - per tier (IVF, PQ, SQ8, SQ8-adaptive), the store facade's scalar
+  *    query and the query inside a batch serve the single (B = 1)
+  *    answer;
   *  - scalar PQ door ≡ the DataFrame door, with strictly fewer Spark
   *    actions (no cell-resolution job);
   *  - a door reconstructed from the PERSISTED quantizer serves the
@@ -92,8 +96,8 @@ class PqStoreSpec extends AnyFunSuite {
       k = 5, nprobe = 3, rerankC = 1000,
       vectors = emb.select(col("vec_id"), col("embedding")),
       allowed = Some(allowed))
-    val exact = Similarity.ivfTopKIndexedPrunedFiltered(
-      q, Similarity.ivfAssign(emb, cents), cents, 5, 3, allowed)
+    val exact = Similarity.ivfTopKIndexedPruned(
+      q, Similarity.ivfAssign(emb, cents), cents, 5, 3, Some(allowed))
     assert(rows(reranked) === rows(exact))
   }
 
@@ -152,37 +156,66 @@ class PqStoreSpec extends AnyFunSuite {
   private def dropDirs(dirs: String*): Unit = dirs.foreach(d =>
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
 
+  /** One query `qid` (its `emb` row, `qTerms`) through the store facade
+    * as a batch of one: `(doc_id, rrf_ppm, n_legs)`, k = 10, legK = 12. */
+  private def single(bmDoor: Maintenance.Door, bmDir: String,
+                     leg: VectorLeg.Stored, emb: DataFrame, qid: Long,
+                     allowed: Option[DataFrame] = None): DataFrame =
+    Retrieval.storeHybrid(spark, bmDoor, bmDir, nBuckets, leg,
+      Retrieval.BatchQuery(emb.where(col("vec_id") === qid),
+        Seq(qid -> qTerms)), k = 10, legK = 12, allowed = allowed)
+      .select("doc_id", "rrf_ppm", "n_legs")
+
+  private def vectorOf(emb: DataFrame, qid: Long): Seq[Double] =
+    emb.where(col("vec_id") === qid).select("embedding").collect().head
+      .getSeq[Float](0).map(_.toDouble)
+
+  /** The tier's three query shapes agree through the store facade: the
+    * SCALAR query `(qid, vector)` and `qid`'s rows of a BATCH with
+    * other queries serve the single (B = 1) answer. */
+  private def assertShapesAgree(tier: String, bmDoor: Maintenance.Door,
+                                bmDir: String, leg: VectorLeg.Stored,
+                                emb: DataFrame, qid: Long,
+                                allowed: Option[DataFrame] = None): Unit = {
+    val one = rows(single(bmDoor, bmDir, leg, emb, qid, allowed))
+    assert(one.nonEmpty, s"$tier: fixture served nothing")
+    val scalar = Retrieval.storeHybrid(spark, bmDoor, bmDir, nBuckets, leg,
+      Retrieval.ScalarQuery(qid, vectorOf(emb, qid), qTerms), k = 10,
+      legK = 12, allowed = allowed)
+    assert(rows(scalar.select("doc_id", "rrf_ppm", "n_legs")) === one,
+      s"$tier: the scalar query changed the single-query answer")
+    val qids = Seq(1L, 4L, qid).distinct
+    val batch = Retrieval.storeHybrid(spark, bmDoor, bmDir, nBuckets, leg,
+      Retrieval.BatchQuery(emb.where(col("vec_id").isin(qids: _*)),
+        qids.map(_ -> qTerms)), k = 10, legK = 12, allowed = allowed)
+    assert(rows(batch.where(col("qid") === qid)
+        .select("doc_id", "rrf_ppm", "n_legs")) === one,
+      s"$tier: the batched facade diverged from the single-query answer")
+  }
+
   test("PQ-leg-served hybrid ≡ full-vector-served hybrid when rerankC " +
       "covers the candidate pool; the scalar door agrees") {
     val d = docs(90)
     val emb = embeddings(90)
     val (bmDoor, bmDir, pqDoor, pqDir, vecDoor, vecDir, cents, cbs) =
       storeTriple(d, emb)
-    val q = emb.where(col("vec_id") === 2L)
-    val pqServed = Retrieval.hybridFromStoresPq(spark, bmDoor, bmDir,
-      nBuckets, pqDoor, pqDir, cents, cbs, vecDoor, vecDir, q, qTerms,
-      k = 10, legK = 12, rerankC = 1000, nprobe = 3)
-    val fullServed = Retrieval.hybridFromStores(spark, bmDoor, bmDir,
-      nBuckets, vecDoor, vecDir, cents, q, qTerms,
-      k = 10, legK = 12, nprobe = 3)
+    val pqLeg = VectorLeg.pqStore(pqDoor, pqDir, cents, cbs, vecDoor,
+      vecDir, nprobe = 3, rerankC = 1000)
+    val pqServed = single(bmDoor, bmDir, pqLeg, emb, 2L)
+    val fullServed = single(bmDoor, bmDir,
+      VectorLeg.ivfStore(vecDoor, vecDir, cents, 3), emb, 2L)
     assert(rows(pqServed) === rows(fullServed),
       "a pool-covering PQ leg must serve the full-vector hybrid answer")
-    // the scalar door serves the same answer through the same stores
-    val qVec = q.select("embedding").collect().head
-      .getSeq[Float](0).map(_.toDouble)
-    val scalar = Retrieval.hybridFromStoresPqScalar(spark, bmDoor, bmDir,
-      nBuckets, pqDoor, pqDir, cents, cbs, vecDoor, vecDir, 2L -> qVec,
-      qTerms, k = 10, legK = 12, rerankC = 1000, nprobe = 3)
-    assert(rows(scalar) === rows(pqServed),
-      "the scalar PQ door changed the single-query answer")
-    // the batched facade agrees with the single-query door per qid
-    val batch = Retrieval.hybridFromStoresPqBatch(spark, bmDoor, bmDir,
+    // the scalar query and the batched facade serve the same answer
+    // through the same stores
+    assertShapesAgree("PQ", bmDoor, bmDir, pqLeg, emb, 2L)
+    // the delegate the benchmark harness calls is the same facade
+    val delegate = Retrieval.hybridFromStoresPqBatch(spark, bmDoor, bmDir,
       nBuckets, pqDoor, pqDir, cents, cbs, vecDoor, vecDir,
-      q, Seq(2L -> qTerms), k = 10, legK = 12, rerankC = 1000, nprobe = 3)
-    assert(rows(batch.where(col("qid") === 2L)
-        .select("doc_id", "rrf_ppm", "n_legs")) ===
-      rows(pqServed.select("doc_id", "rrf_ppm", "n_legs")),
-      "the batched PQ facade diverged from the single-query door")
+      emb.where(col("vec_id") === 2L), Seq(2L -> qTerms), k = 10,
+      legK = 12, rerankC = 1000, nprobe = 3)
+    assert(rows(delegate.select("doc_id", "rrf_ppm", "n_legs")) ===
+      rows(pqServed), "hybridFromStoresPqBatch diverged from the facade")
     dropDirs(bmDir, pqDir, vecDir)
   }
 
@@ -196,23 +229,23 @@ class PqStoreSpec extends AnyFunSuite {
     val qids = Seq(1L, 2L, 4L)
     val qs = emb.where(col("vec_id").isin(qids: _*))
     val allowed = d.where(col("doc_id") % 3 === 0).select("doc_id")
-    val batch = Retrieval.hybridFromStoresPqBatch(spark, bmDoor, bmDir,
-      nBuckets, pqDoor, pqDir, cents, cbs, vecDoor, vecDir,
-      qs, qids.map(_ -> qTerms), k = 10, legK = 12, rerankC = 40,
-      nprobe = 3, allowed = Some(allowed))
+    val pqLeg = VectorLeg.pqStore(pqDoor, pqDir, cents, cbs, vecDoor,
+      vecDir, nprobe = 3, rerankC = 40)
+    val batch = Retrieval.storeHybrid(spark, bmDoor, bmDir, nBuckets,
+      pqLeg, Retrieval.BatchQuery(qs, qids.map(_ -> qTerms)), k = 10,
+      legK = 12, allowed = Some(allowed))
     qids.foreach { qid =>
-      val single = Retrieval.hybridFromStoresPq(spark, bmDoor, bmDir,
-        nBuckets, pqDoor, pqDir, cents, cbs, vecDoor, vecDir,
-        emb.where(col("vec_id") === qid), qTerms, k = 10, legK = 12,
-        rerankC = 40, nprobe = 3, allowed = Some(allowed))
+      val alone = single(bmDoor, bmDir, pqLeg, emb, qid, Some(allowed))
       assert(rows(batch.where(col("qid") === qid)
-          .select("doc_id", "rrf_ppm", "n_legs")) ===
-        rows(single.select("doc_id", "rrf_ppm", "n_legs")),
+          .select("doc_id", "rrf_ppm", "n_legs")) === rows(alone),
         s"qid $qid: batched-filtered diverged from per-query filtered")
       // and the mask is real: every served id is in the slice
       assert(batch.where(col("qid") === qid &&
         col("doc_id") % 3 =!= 0).count() === 0L)
     }
+    // the scalar query under the same mask serves the same slice
+    assertShapesAgree("PQ filtered", bmDoor, bmDir, pqLeg, emb, 2L,
+      Some(allowed))
     dropDirs(bmDir, pqDir, vecDir)
   }
 
@@ -252,23 +285,23 @@ class PqStoreSpec extends AnyFunSuite {
       emb)
     IndexMaintenanceStream.applyBatch(spark, vecDoor, vecDir, cellWrite,
       vBatch, 0L)
-    val q = emb.where(col("vec_id") === 2L)
     def adaptive(marginPpm: Long, rerankC: Int) =
-      Retrieval.hybridFromStoresSq8Adaptive(spark, bmDoor, bmDir,
-        nBuckets, sq8Door, sq8Dir, cents, vecDoor, vecDir, q, qTerms,
-        k = 10, legK = 12, nprobe = 3, rerankC = rerankC,
-        marginPpm = marginPpm)
-    val sq8Hybrid = Retrieval.hybridFromStoresSq8(spark, bmDoor, bmDir,
-      nBuckets, sq8Door, sq8Dir, cents, q, qTerms, k = 10, legK = 12,
-      nprobe = 3)
-    assert(rows(adaptive(0L, 40)) === rows(sq8Hybrid),
-      "marginPpm=0 must serve the bare SQ8-tier hybrid")
-    val fullHybrid = Retrieval.hybridFromStores(spark, bmDoor, bmDir,
-      nBuckets, vecDoor, vecDir, cents, q, qTerms, k = 10, legK = 12,
-      nprobe = 3)
-    assert(rows(adaptive(Long.MaxValue, 1000)) === rows(fullHybrid),
+      VectorLeg.sq8AdaptiveStore(sq8Door, sq8Dir, cents, vecDoor, vecDir,
+        nprobe = 3, rerankC = rerankC, marginPpm = marginPpm)
+    val ivfLeg = VectorLeg.ivfStore(vecDoor, vecDir, cents, 3)
+    val sq8Hybrid = single(bmDoor, bmDir,
+      VectorLeg.sq8Store(sq8Door, sq8Dir, cents, 3), emb, 2L)
+    assert(rows(single(bmDoor, bmDir, adaptive(0L, 40), emb, 2L)) ===
+      rows(sq8Hybrid), "marginPpm=0 must serve the bare SQ8-tier hybrid")
+    val fullHybrid = single(bmDoor, bmDir, ivfLeg, emb, 2L)
+    assert(rows(single(bmDoor, bmDir, adaptive(Long.MaxValue, 1000), emb,
+        2L)) === rows(fullHybrid),
       "a covering margin + covering rerankC must serve the " +
         "full-vector hybrid")
+    // the IVF and adaptive legs serve every query shape alike
+    assertShapesAgree("IVF", bmDoor, bmDir, ivfLeg, emb, 2L)
+    assertShapesAgree("SQ8-adaptive", bmDoor, bmDir,
+      adaptive(Long.MaxValue, 40), emb, 2L)
     dropDirs(bmDir, sq8Dir, vecDir)
   }
 
@@ -445,7 +478,8 @@ class PqStoreSpec extends AnyFunSuite {
     assert(nBare > 0, "every query routed — threshold vacuous")
   }
 
-  test("annSq8RecallSweep: the int8 curve is recall-monotone-capped " +
+  test("annRecallSweep over SQ8 legs: the int8 curve is " +
+      "recall-monotone-capped " +
       "by the same sweep with the covering tail at every nprobe, and " +
       "the tail sweep at full probe reaches exact recall") {
     val emb = clusteredEmbeddings(120)
@@ -456,8 +490,9 @@ class PqStoreSpec extends AnyFunSuite {
       .select(col("qid"), col("nid"))
     val vectors = emb.select(col("vec_id"), col("embedding"))
     def recalls(rerank: Option[(Int, DataFrame)]) =
-      Retrieval.annSq8RecallSweep(q, index, cents, Seq(1, 2, 4, 8), 5,
-        exact, rerank).collect()
+      Retrieval.annRecallSweep(q, Seq("nprobe"), Seq(1, 2, 4, 8).map(np =>
+        Seq(np.toLong) -> VectorLeg.Sq8(index, cents, np, rerank)), 5,
+        exact).collect()
         .map(r => r.getLong(0) -> r.getLong(2)).toMap
     val bare = recalls(None)
     val tailed = recalls(Some((1000, vectors)))
@@ -469,7 +504,8 @@ class PqStoreSpec extends AnyFunSuite {
       "full probe + covering tail must reproduce brute force")
   }
 
-  test("annPqRecallSweep: recall monotone in rerankC at fixed nprobe; " +
+  test("annRecallSweep over PQ legs: recall monotone in rerankC at " +
+      "fixed nprobe; " +
       "full probe + covering rerank reaches exact recall") {
     val emb = embeddings(120)
     val q = emb.where(col("vec_id") < 5)
@@ -478,9 +514,12 @@ class PqStoreSpec extends AnyFunSuite {
     val index = Similarity.ivfPqAssign(emb, cents, cbs)
     val exact = Similarity.bruteForceTopK(q, emb, 5)
       .select(col("qid"), col("nid"))
-    val sweep = Retrieval.annPqRecallSweep(q, index, cents, cbs,
-      Seq((2, 5), (2, 20), (8, 5), (8, 1000)), 5, exact,
-      emb.select(col("vec_id"), col("embedding")))
+    val vectors = emb.select(col("vec_id"), col("embedding"))
+    val sweep = Retrieval.annRecallSweep(q, Seq("nprobe", "rerank_c"),
+      Seq((2, 5), (2, 20), (8, 5), (8, 1000)).map { case (np, rc) =>
+        Seq(np.toLong, rc.toLong) ->
+          VectorLeg.Pq(index, cents, cbs, np, rc, vectors)
+      }, 5, exact)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3)))
     val byPoint = sweep.map { case (np, rc, rec) => (np, rc) -> rec }.toMap
     assert(byPoint((2L, 5L)) <= byPoint((2L, 20L)),
@@ -630,9 +669,8 @@ class PqStoreSpec extends AnyFunSuite {
     IndexMaintenanceStream.applyBatch(spark, sq8Door, sq8Dir, cellWrite,
       vBatch, 0L)
     val q = emb.where(col("vec_id") === 2L)
-    val df = Retrieval.hybridFromStoresSq8(spark, bmDoor, bmDir,
-      nBuckets, sq8Door, sq8Dir, cents, q, qTerms,
-      k = 10, legK = 12, nprobe = 3)
+    val sq8Leg = VectorLeg.sq8Store(sq8Door, sq8Dir, cents, 3)
+    val df = single(bmDoor, bmDir, sq8Leg, emb, 2L)
     // the vector leg IS the hand-composed int8 probe over the store
     val (view, _) = IndexMaintenanceStream.viewAt(spark, sq8Door,
       sq8Dir, 0L)
@@ -644,20 +682,7 @@ class PqStoreSpec extends AnyFunSuite {
       Similarity.sq8TopKIndexedPruned(q, view, cents, 12, 3)
         .select(col("nid").as("doc_id"), col("rank"))), 10)
     assert(rows(df) === rows(hand))
-    val qVec = q.select("embedding").collect().head
-      .getSeq[Float](0).map(_.toDouble)
-    val scalar = Retrieval.hybridFromStoresSq8Scalar(spark, bmDoor,
-      bmDir, nBuckets, sq8Door, sq8Dir, cents, 2L -> qVec, qTerms,
-      k = 10, legK = 12, nprobe = 3)
-    assert(rows(scalar) === rows(df),
-      "the scalar SQ8 door changed the single-query answer")
-    val batch = Retrieval.hybridFromStoresSq8Batch(spark, bmDoor, bmDir,
-      nBuckets, sq8Door, sq8Dir, cents, q, Seq(2L -> qTerms),
-      k = 10, legK = 12, nprobe = 3)
-    assert(rows(batch.where(col("qid") === 2L)
-        .select("doc_id", "rrf_ppm", "n_legs")) ===
-      rows(df.select("doc_id", "rrf_ppm", "n_legs")),
-      "the batched SQ8 facade diverged from the single-query door")
+    assertShapesAgree("SQ8", bmDoor, bmDir, sq8Leg, emb, 2L)
     dropDirs(bmDir, sq8Dir)
   }
 

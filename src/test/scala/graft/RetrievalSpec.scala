@@ -2,7 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.pipeline.{Bm25Index, Retrieval, Similarity, TextAnalysis}
+import graft.pipeline.{Bm25Index, Retrieval, Similarity, TextAnalysis,
+  VectorLeg}
 
 /** Hybrid retrieval ([[pipeline.Retrieval]]): the RRF fusion must be
   * integer-exact and order-deterministic, and the indexed serving path
@@ -344,8 +345,10 @@ class RetrievalSpec extends AnyFunSuite {
     val index = Similarity.ivfAssign(emb, cents)
     val exact = Similarity.bruteForceTopK(q, emb, 5)
       .select(col("qid"), col("nid"))
-    val out = Retrieval.annRecallSweep(q, index, cents, Seq(1, 2, 4, 8),
-      5, exact).collect()
+    val out = Retrieval.annRecallSweep(q, Seq("nprobe"),
+      Seq(1, 2, 4, 8).map(np =>
+        Seq(np.toLong) -> VectorLeg.Ivf(index, cents, np)), 5, exact)
+      .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4)))
     assert(out.map(_._1).toSeq === Seq(1L, 2L, 4L, 8L))

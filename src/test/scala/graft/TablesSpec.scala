@@ -137,11 +137,27 @@ class TablesSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     assert(Tables.table(spark, tmp, "documents")
       .schema.fieldNames.toSeq == Seq("a"))
+    // a SIBLING directory whose name extends tmp's (`${tmp}x`) is
+    // cached, then rewritten the same way
+    val sib = s"${tmp}x"
+    spark.range(3).select(col("id").as("a"))
+      .write.mode("overwrite").parquet(s"$sib/documents.parquet")
+    assert(Tables.table(spark, sib, "documents")
+      .schema.fieldNames.toSeq == Seq("a"))
+    spark.range(3).select(col("id").as("a"), (col("id") * 2).as("b"))
+      .write.mode("overwrite").parquet(s"$sib/documents.parquet")
     // ... until the regeneration hook drops it
     Tables.invalidateSchemaCache(Some(tmp))
     assert(Tables.table(spark, tmp, "documents")
       .schema.fieldNames.toSeq == Seq("a", "b"))
+    // the hook matches on the directory boundary: the sibling keeps
+    // serving its cached shape
+    assert(Tables.table(spark, sib, "documents")
+      .schema.fieldNames.toSeq == Seq("a"),
+      "invalidating a directory dropped a sibling's cached schema")
     Tables.invalidateSchemaCache(Some(tmp))
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
+    Tables.invalidateSchemaCache(Some(sib))
+    Seq(tmp, sib).foreach(p =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
   }
 }
