@@ -827,10 +827,10 @@ object PipelineQueries {
     }),
 
     // the IVF lifecycle through [[pipeline.Maintenance.tick]] and the
-    // PARTITION-PRUNED serving probe ([[pipeline.Similarity
-    // .ivfTopKIndexedPruned]]): tick 1 deletes every 9th vector,
-    // re-assigns every 6th with its REVERSED embedding under gen 1,
-    // and appends id-shifted copies of every 11th; tick 2 deletes
+    // PARTITION-PRUNED serving probe ([[pipeline.VectorLeg.Ivf]]): tick
+    // 1 deletes every 9th vector, re-assigns every 6th with its
+    // REVERSED embedding under gen 1, and appends id-shifted copies of
+    // every 11th; tick 2 deletes
     // previously-UPDATED vectors through the unified tombstone table
     // and re-sends a tick-1 delete (guard-dropped). The oracle assigns
     // the end-state corpus from scratch under the same frozen
@@ -858,9 +858,8 @@ object PipelineQueries {
         .unionByName(del1.orderBy(col("vec_id")).limit(1)) // re-sent
       st = pipeline.Maintenance.tick(door, store, st, adds = empty,
         deletes = del2, updates = empty)
-      pipeline.Similarity.ivfTopKIndexedPruned(
-        emb.where(col("vec_id") < 5), st.live(door, store), cents, 5,
-        nprobe = 4).orderBy("qid", "rank")
+      pipeline.VectorLeg.Ivf(st.live(door, store), cents, nprobe = 4)
+        .batch(emb.where(col("vec_id") < 5), 5).orderBy("qid", "rank")
     }),
 
     // the PQ-CODE store lifecycle ([[pipeline.Maintenance.IvfPqDoor]]):
@@ -898,9 +897,8 @@ object PipelineQueries {
         .unionByName(del1.orderBy(col("vec_id")).limit(1)) // re-sent
       st = pipeline.Maintenance.tick(door, store, st, adds = empty,
         deletes = del2, updates = empty)
-      pipeline.Similarity.ivfPqTopKIndexedPruned(
-        emb.where(col("vec_id") < 5), st.live(door, store), cents, cbs,
-        5, nprobe = 4).orderBy("qid", "rank")
+      pipeline.VectorLeg.Pq(st.live(door, store), cents, cbs, nprobe = 4)
+        .batch(emb.where(col("vec_id") < 5), 5).orderBy("qid", "rank")
     }),
 
     // the RESIDUAL PQ-code store lifecycle ([[pipeline.Maintenance
@@ -936,13 +934,13 @@ object PipelineQueries {
         .unionByName(del1.orderBy(col("vec_id")).limit(1)) // re-sent
       st = pipeline.Maintenance.tick(door, store, st, adds = empty,
         deletes = del2, updates = empty)
-      pipeline.Similarity.ivfPqResidualTopKIndexedPruned(
-        emb.where(col("vec_id") < 5), st.live(door, store), cents, rcbs,
-        5, nprobe = 4).orderBy("qid", "rank")
+      pipeline.VectorLeg.PqResidual(st.live(door, store), cents, rcbs,
+        nprobe = 4)
+        .batch(emb.where(col("vec_id") < 5), 5).orderBy("qid", "rank")
     }),
 
     // the EXACT-RERANK TAIL on the maintained PQ-code store
-    // ([[pipeline.Similarity.ivfPqTopKIndexedPrunedRerank]]): the
+    // ([[pipeline.VectorLeg.Pq]] with `rerank`): the
     // ann_ivfpq_lifecycle mutation plan runs against BOTH maintained
     // stores — the (cell, nid, codes) code store AND its full-vector
     // IVF twin, fed the same ticks — then the serving probe ADC-ranks
@@ -995,11 +993,10 @@ object PipelineQueries {
           vecSt = pipeline.Maintenance.tick(vecDoor, vecStore, vecSt,
             adds = empty, deletes = del2, updates = empty)
         })
-      pipeline.Similarity.ivfPqTopKIndexedPrunedRerank(
-        emb.where(col("vec_id") < 5), pqSt.live(pqDoor, pqStore),
-        cents, cbs, k = 5, nprobe = 4, rerankC = 15,
-        vectors = vecSt.live(vecDoor, vecStore).select(
-          col("nid"), col("ne")))
+      pipeline.VectorLeg.Pq(pqSt.live(pqDoor, pqStore), cents, cbs,
+        nprobe = 4, rerank = Some((15,
+          vecSt.live(vecDoor, vecStore).select(col("nid"), col("ne")))))
+        .batch(emb.where(col("vec_id") < 5), 5)
         .orderBy("qid", "rank")
     }),
 
@@ -1041,9 +1038,9 @@ object PipelineQueries {
         .unionByName(emb.where(col("vec_id") % 11 === 5)
           .select((col("vec_id") + 1000000L).as("vec_id"),
             col("embedding")))
-      pipeline.Similarity.ivfPqResidualTopKIndexedPrunedRerank(
-        emb.where(col("vec_id") < 5), st.live(door, store), cents, rcbs,
-        k = 5, nprobe = 4, rerankC = 15, vectors = kept)
+      pipeline.VectorLeg.PqResidual(st.live(door, store), cents, rcbs,
+        nprobe = 4, rerank = Some((15, kept)))
+        .batch(emb.where(col("vec_id") < 5), 5)
         .orderBy("qid", "rank")
     }),
 
@@ -1066,7 +1063,7 @@ object PipelineQueries {
       pipeline.Retrieval.annRecallSweep(q, Seq("nprobe", "rerank_c"),
         Seq((2, 10), (2, 25), (8, 10), (8, 25)).map { case (np, rc) =>
           Seq(np.toLong, rc.toLong) ->
-            pipeline.VectorLeg.Pq(index, cents, cbs, np, rc, vectors)
+            pipeline.VectorLeg.Pq(index, cents, cbs, np, Some((rc, vectors)))
         }, 5,
         pipeline.Similarity.bruteForceTopK(q, emb, 5)
           .select(col("qid"), col("nid")))
@@ -1124,8 +1121,8 @@ object PipelineQueries {
       val (view, _) = graft.streaming.IndexMaintenanceStream
         .currentView(s, pqDoor, newDir)
       val result = pipeline.Dedup.checkpointCorpus(
-        pipeline.Similarity.ivfPqTopKIndexedPruned(
-          emb.where(col("vec_id") < 5), view, cents8, cbs, 5, nprobe = 4)
+        pipeline.VectorLeg.Pq(view, cents8, cbs, nprobe = 4)
+          .batch(emb.where(col("vec_id") < 5), 5)
           .orderBy("qid", "rank"))
       Seq(vecDir, newDir).foreach(p =>
         org.apache.commons.io.FileUtils.deleteQuietly(
@@ -1222,9 +1219,9 @@ object PipelineQueries {
       val (view, _) = graft.streaming.IndexMaintenanceStream
         .currentView(s, pqDoor, servedDir)
       val result = pipeline.Dedup.checkpointCorpus(
-        pipeline.Similarity.ivfPqTopKIndexedPruned(
-          emb.where(col("vec_id") < 5), view, cents8, cbs, 5,
-          nprobe = 4).orderBy("qid", "rank"))
+        pipeline.VectorLeg.Pq(view, cents8, cbs, nprobe = 4)
+          .batch(emb.where(col("vec_id") < 5), 5)
+          .orderBy("qid", "rank"))
       Seq(vecDir, newDir, servingDir).foreach(p =>
         org.apache.commons.io.FileUtils.deleteQuietly(
           new java.io.File(p)))
@@ -1286,13 +1283,12 @@ object PipelineQueries {
         .unionByName(del1.orderBy(col("vec_id")).limit(1)) // re-sent
       st = pipeline.Maintenance.tick(door, store, st, adds = empty,
         deletes = del2, updates = empty)
-      pipeline.Similarity.sq8TopKIndexedPruned(
-        emb.where(col("vec_id") < 5), st.live(door, store), cents, 5,
-        nprobe = 4).orderBy("qid", "rank")
+      pipeline.VectorLeg.Sq8(st.live(door, store), cents, nprobe = 4)
+        .batch(emb.where(col("vec_id") < 5), 5).orderBy("qid", "rank")
     }),
 
     // the SQ8 store's OPTIONAL exact-rerank tail ([[pipeline
-    // .Similarity.sq8TopKIndexedPruned]] with `rerank`): the
+    // .VectorLeg.Sq8]] with `rerank`): the
     // ann_sq8_lifecycle mutation plan against the quantized store,
     // int8-ranked to 15 candidates, then ONLY those rows refetch full
     // vectors from the KEPT end-state table for exact top-5 — the
@@ -1332,9 +1328,9 @@ object PipelineQueries {
         .unionByName(emb.where(col("vec_id") % 11 === 5)
           .select((col("vec_id") + 1000000L).as("vec_id"),
             col("embedding")))
-      pipeline.Similarity.sq8TopKIndexedPruned(
-        emb.where(col("vec_id") < 5), st.live(door, store), cents, 5,
-        nprobe = 4, rerank = Some((15, kept)))
+      pipeline.VectorLeg.Sq8(st.live(door, store), cents, nprobe = 4,
+        rerank = Some((15, kept)))
+        .batch(emb.where(col("vec_id") < 5), 5)
         .orderBy("qid", "rank")
     }),
 
@@ -1355,8 +1351,8 @@ object PipelineQueries {
           .select(col("qid"), col("nid")))
     }),
 
-    // MARGIN-ROUTED adaptive rerank ([[pipeline.Similarity
-    // .sq8TopKIndexedAdaptiveRerank]]): one int8 probe ranks 15
+    // MARGIN-ROUTED adaptive rerank ([[pipeline.VectorLeg
+    // .Sq8Adaptive]]): one int8 probe ranks 15
     // candidates; queries whose rank-5/rank-6 margin is under the
     // ppm threshold route those candidates through the exact
     // full-vector tail, confident queries serve int8 directly — the
@@ -1367,11 +1363,11 @@ object PipelineQueries {
       val emb = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding"))
       val cents = pipeline.Similarity.centroids(emb, 16)
-      pipeline.Similarity.sq8TopKIndexedAdaptiveRerank(
-        emb.where(col("vec_id") < 5),
-        pipeline.Similarity.sq8Assign(emb, cents), cents,
-        k = 5, nprobe = 4, rerankC = 15, marginPpm = 3000L,
+      pipeline.VectorLeg.Sq8Adaptive(
+        pipeline.Similarity.sq8Assign(emb, cents), cents, nprobe = 4,
+        rerankC = 15, marginPpm = 3000L,
         vectors = emb.select(col("vec_id"), col("embedding")))
+        .batch(emb.where(col("vec_id") < 5), 5)
         .orderBy("qid", "rank")
     }),
 
@@ -3219,9 +3215,9 @@ object PipelineQueries {
       val lex = pipeline.Retrieval.rankLex(pipeline.Bm25Index.search(
         pipeline.Dedup.checkpointCorpus(bmSt.live(bmDoor, bmStore)),
         bmSt.stats.get, Seq("data", "stream", "shuffle"), 20, 64))
-      val vec = pipeline.Similarity.ivfTopKIndexedPruned(
-        emb.where(col("vec_id") === 0L),
-        ivfSt.live(ivfDoor, ivfStore), cents, 20, nprobe = 4)
+      val vec = pipeline.VectorLeg.Ivf(ivfSt.live(ivfDoor, ivfStore),
+        cents, nprobe = 4)
+        .batch(emb.where(col("vec_id") === 0L), 20)
         .select(col("nid").as("doc_id"), col("rank"))
       pipeline.Retrieval.rrfFuse(Seq(lex, vec), k = 10)
     }),
@@ -3259,8 +3255,8 @@ object PipelineQueries {
         docs.where(col("doc_id") % 3 === 0).select("doc_id"))
     }),
 
-    // METADATA-FILTERED IVF probe ([[pipeline.Similarity
-    // .ivfTopKIndexedPruned]] with `allowed`, FAISS-IDSelector semantics):
+    // METADATA-FILTERED IVF probe ([[pipeline.VectorLeg.Ivf]] with
+    // `allowed`, FAISS-IDSelector semantics):
     // the mask applies before the per-query rank window under the
     // frozen quantizer — the oracle assigns and probes only the
     // allowed slice, so filtered probe ≡ index-of-the-slice
@@ -3268,9 +3264,9 @@ object PipelineQueries {
       val emb = Tables.embeddings(s, d)
       val cents = pipeline.Similarity.centroids(emb, 16)
       val index = pipeline.Similarity.ivfAssign(emb, cents)
-      pipeline.Similarity.ivfTopKIndexedPruned(
-        emb.where(col("vec_id") < 5), index, cents, 5, 4,
-        Some(emb.where(col("vec_id") % 3 === 0).select("vec_id")))
+      pipeline.VectorLeg.Ivf(index, cents, 4)
+        .batch(emb.where(col("vec_id") < 5), 5,
+          Some(emb.where(col("vec_id") % 3 === 0).select("vec_id")))
         .orderBy("qid", "rank")
     }),
 

@@ -1370,17 +1370,16 @@ object ScaleBench {
       ti(s"lifecycle_ivf_probe_$tag") {
         // the partition-pruned serving probe (literal probe cells →
         // parquet partition filter) through the gen anti-join
-        viaTombs = pipeline.Similarity.ivfTopKIndexedPruned(q,
-          st.live(door, store), cents, 10, nprobe = 8)
-          .orderBy("qid", "rank").collect().map(_.toSeq).toSeq
+        viaTombs = pipeline.VectorLeg.Ivf(st.live(door, store), cents, 8)
+          .batch(q, 10).orderBy("qid", "rank").collect().map(_.toSeq).toSeq
         s"rows=${viaTombs.size}"
       }
       ti(s"lifecycle_ivf_probe_plain_$tag") {
         // the no-anti-join twin on the SAME store (dead generations
         // included): the gen probe above must read only
         // tombstone-broadcast more than this
-        val c = pipeline.Similarity.ivfTopKIndexedPruned(q, store.rows,
-          cents, 10, nprobe = 8).count()
+        val c = pipeline.VectorLeg.Ivf(store.rows, cents, 8).batch(q, 10)
+          .count()
         s"rows=$c"
       }
       ti(s"lifecycle_ivf_probe_unpruned_$tag") {
@@ -1726,8 +1725,8 @@ object ScaleBench {
           .currentView(spark, door, dir)
         val leaves = view.queryExecution.optimizedPlan
           .collectLeaves().length
-        val rows = pipeline.Similarity.ivfTopKIndexedPruned(q5, view,
-          cents, 10, nprobe = 8).count()
+        val rows = pipeline.VectorLeg.Ivf(view, cents, 8).batch(q5, 10)
+          .count()
         s"planLeaves=$leaves rows=$rows"
       }
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
@@ -2087,8 +2086,8 @@ object ScaleBench {
       ti("ivfpq_store_probe_1m") {
         val (view, _) = streaming.IndexMaintenanceStream
           .currentView(spark, door, dir)
-        val served = pipeline.Similarity.ivfPqTopKIndexedPruned(qpq,
-          view, cents, cbs, 10, nprobe = 8)
+        val served = pipeline.VectorLeg.Pq(view, cents, cbs, 8)
+          .batch(qpq, 10)
           .collect().map(r => (r.getLong(0), r.getLong(2)) -> r.getLong(1))
           .toMap
         // counterfactual rebuild: the mutated corpus re-encoded from
@@ -2125,17 +2124,16 @@ object ScaleBench {
           .collect().map(r => (r.getLong(0), r.getLong(1)))
           .count(exact.contains)
         // r17: the rerank row is now STORE-SERVED — the door's own
-        // ivfPqTopKIndexedPrunedRerank (ADC-100 from the code store,
+        // VectorLeg.Pq with its tail (ADC-100 from the code store,
         // queries×100 full-vector refetch from the side table) — and
         // pinned bit-identical to r16's hand-composed formulation, so
         // the ledger's 28/100 is what the serving door actually ships
-        val rerankServed = pipeline.Similarity
-          .ivfPqTopKIndexedPrunedRerank(qpq, view, cents, cbs, 10,
-            nprobe = 8, rerankC = 100,
-            vectors = mutated.select(col("vec_id"), col("embedding")))
+        val rerankServed = pipeline.VectorLeg.Pq(view, cents, cbs, 8,
+            Some((100, mutated.select(col("vec_id"), col("embedding")))))
+          .batch(qpq, 10)
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        val cand100 = pipeline.Similarity.ivfPqTopKIndexedPruned(qpq,
-          view, cents, cbs, 100, nprobe = 8).select("qid", "nid")
+        val cand100 = pipeline.VectorLeg.Pq(view, cents, cbs, 8)
+          .batch(qpq, 100).select("qid", "nid")
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("qid"))
           .orderBy(col("sim").desc, col("nid").asc)
@@ -2272,7 +2270,8 @@ object ScaleBench {
       def sweep(grid: (Int, Int)*) = pipeline.Retrieval.annRecallSweep(q8,
         Seq("nprobe", "rerank_c"), grid.map { case (np, rc) =>
           Seq(np.toLong, rc.toLong) ->
-            pipeline.VectorLeg.Pq(reloaded, cents, cbs, np, rc, vectors)
+            pipeline.VectorLeg.Pq(reloaded, cents, cbs, np,
+              Some((rc, vectors)))
         }, 10, exact)
       pin()
       ti("pq_sweep_np4_rc100_1m") {
@@ -2369,9 +2368,9 @@ object ScaleBench {
             .sorted
           val thr = margins(margins.length / 2)
           val routed = margins.count(_ < thr)
-          val res = pipeline.Similarity.sq8TopKIndexedAdaptiveRerank(
-            q10, sq8Index, cents, 10, 8, 50, thr,
-            fullIndex.select(col("cell"), col("nid"), col("ne")))
+          val res = pipeline.VectorLeg.Sq8Adaptive(sq8Index, cents, 8, 50,
+            thr, fullIndex.select(col("cell"), col("nid"), col("ne")))
+            .batch(q10, 10)
           val m = pipeline.Retrieval.evalMacro(
             pipeline.Retrieval.evalMetrics(
               res.select(col("qid"), col("nid").as("doc_id"),

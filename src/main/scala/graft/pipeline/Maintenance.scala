@@ -353,7 +353,7 @@ object Maintenance {
     * [[IvfDoor]]'s (same `nid`/`gen` keys — the code column changes
     * nothing about retirement). Re-seeding either quantizer after
     * drift is the scheduled-rebuild path, exactly like the IVF door.
-    * Serve through [[Similarity.ivfPqTopKIndexedPruned]]. */
+    * Serve through [[VectorLeg.Pq]]. */
   final class IvfPqDoor(cents: Seq[(Long, Array[Double])],
                         cbs: Array[Array[Array[Double]]]) extends Door {
     val idName = "nid"
@@ -376,7 +376,7 @@ object Maintenance {
     * recall, no rerank tail needed). Coarse quantizer FROZEN like
     * every vector door; a delta batch is one shuffle-free
     * quantize+assign projection; gen machinery identical. Serve
-    * through [[Similarity.sq8TopKIndexedPruned]]. */
+    * through [[VectorLeg.Sq8]]. */
   final class IvfSq8Door(cents: Seq[(Long, Array[Double])]) extends Door {
     val idName = "nid"
     val batchId: Column = col("vec_id")
@@ -398,7 +398,7 @@ object Maintenance {
     * frozen residual codebooks ([[Similarity.ivfPqResidualTrain]], run
     * once at door construction). Delta cost, gen machinery, and
     * retirement are identical to [[IvfPqDoor]]; serve through
-    * [[Similarity.ivfPqResidualTopKIndexedPruned]]. */
+    * [[VectorLeg.PqResidual]]. */
   final class IvfPqResidualDoor(cents: Seq[(Long, Array[Double])],
                                 rcbs: Array[Array[Array[Double]]])
       extends Door {

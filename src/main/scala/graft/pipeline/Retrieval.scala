@@ -276,14 +276,10 @@ object Retrieval {
       a => Bm25Index.searchBatchFiltered(postings, stats, queries, legK,
         nBuckets, a))
       .select(col("qid"), col("doc_id"), col("rank"))
-    // the mask on the vector leg sits under the probe exactly like
-    // ivfTopKIndexedPruned's: filtering a vector out never
-    // changes another's cell or score, so masked-probe ≡ probe of an
-    // index built from only the allowed vectors
-    val maskedIvf = allowed.fold(ivfIndex)(a => ivfIndex.join(
-      a.select(col(a.columns.head).as("nid")), Seq("nid"), "left_semi"))
-    val vec = Similarity.ivfTopKIndexed(queryVecs, maskedIvf, cents,
-      legK, nprobe)
+    // the vector leg's mask is the pruned probes' own step
+    // (Similarity.mask), under the unpruned in-memory scorer
+    val vec = Similarity.ivfTopKIndexed(queryVecs,
+      Similarity.mask(ivfIndex, allowed), cents, legK, nprobe)
       .select(col("qid"), col("nid").as("doc_id"), col("rank"))
     rrfFuseByQuery(Seq(lex, vec), k, k0, weights)
   }
@@ -334,8 +330,8 @@ object Retrieval {
       Bm25Index.search(postings, stats, qTerms, legK, nBuckets))(a =>
       Bm25Index.searchFiltered(postings, stats, qTerms, legK, nBuckets,
         a)))
-    val vec = Similarity.ivfTopKIndexedScalar(query._1, query._2,
-      ivfIndex, cents, legK, nprobe, ids)
+    val vec = VectorLeg.Ivf(ivfIndex, cents, nprobe)
+      .scalar(query._1, query._2, legK, ids)
       .select(col("nid").as("doc_id"), col("rank"))
     rrfFuse(Seq(lex, vec), k, k0, weights)
   }
@@ -480,7 +476,7 @@ object Retrieval {
     * hybrid top-k over the slice. Scoring semantics follow each leg's
     * production convention ([[Bm25Index.searchFiltered]] keeps global
     * df/corpus stats — Lucene filter-query semantics;
-    * [[Similarity.ivfTopKIndexedPruned]]'s mask filters candidates
+    * the [[VectorLeg.Ivf]] probe's mask filters candidates
     * under the frozen quantizer — FAISS IDSelector semantics), so per-doc
     * scores are unchanged by the mask and the filter costs
     * probe-sized ⋈ allowed on each leg, never a corpus rescan. */
@@ -497,8 +493,8 @@ object Retrieval {
     val ids = allowed.select(col(allowed.columns.head).as("doc_id"))
     val lex = rankLex(Bm25Index.searchFiltered(postings, stats, qTerms,
       legK, nBuckets, ids))
-    val vec = Similarity.ivfTopKIndexedPruned(queryVec, ivfIndex,
-      cents, legK, nprobe, Some(ids))
+    val vec = VectorLeg.Ivf(ivfIndex, cents, nprobe)
+      .batch(queryVec, legK, Some(ids))
       .select(col("nid").as("doc_id"), col("rank"))
     rrfFuse(Seq(lex, vec), k, k0, weights)
   }

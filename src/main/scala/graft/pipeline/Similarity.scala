@@ -36,20 +36,29 @@ object Similarity {
 
   def cosineHof(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
+  /** The per-query rank window every top-k shares: rows of `scored`
+    * ranked by `sim desc, nid asc` within their `qid` (deterministic
+    * tiebreak on neighbor id), cut at `rank ≤ n`; `scored`'s columns
+    * ride along. */
+  private def ranked(scored: DataFrame, n: Int): DataFrame =
+    scored.withColumn("rank", row_number().over(Window
+      .partitionBy(col("qid")).orderBy(col("sim").desc, col("nid").asc)))
+      .where(col("rank") <= n)
+
+  /** [[ranked]] projected to the top-k output `(qid, nid, rank)`. */
+  private def topK(scored: DataFrame, n: Int): DataFrame =
+    ranked(scored, n)
+      .select(col("qid"), col("nid"), col("rank").cast("long").as("rank"))
+
   /** Exact top-k neighbors for each query vector (queries ≪ corpus).
     * Output: (qid, nid, rank). Deterministic tiebreak on neighbor id. */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
     val q = broadcast(queries.select(col("vec_id").as("qid"),
       col("embedding").as("qe")))
     val c = corpus.select(col("vec_id").as("nid"), col("embedding").as("ne"))
-    val scored = c.crossJoin(q)
+    topK(c.crossJoin(q)
       .where(col("qid") =!= col("nid"))
-      .withColumn("sim", cosine(col("qe"), col("ne")))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col("nid").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("qid"), col("nid"), col("rank").cast("long").as("rank"))
+      .withColumn("sim", cosine(col("qe"), col("ne"))), k)
   }
 
   /** Sign-bucket id from `planes` deterministic hyperplanes — the single-
@@ -74,15 +83,10 @@ object Similarity {
       bucketsOf(col("embedding")).as("bucket"))
     val c = corpus.select(col("vec_id").as("nid"), col("embedding").as("ne"),
       bucketsOf(col("embedding")).as("bucket"))
-    val scored = c.join(broadcast(q), Seq("bucket"))
+    topK(c.join(broadcast(q), Seq("bucket"))
       .where(col("qid") =!= col("nid"))
       .dropDuplicates("qid", "nid")
-      .withColumn("sim", cosine(col("qe"), col("ne")))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col("nid").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("qid"), col("nid"), col("rank").cast("long").as("rank"))
+      .withColumn("sim", cosine(col("qe"), col("ne"))), k)
   }
 
   /** IVF (inverted-file) approximate search — the other scale path besides
@@ -168,13 +172,9 @@ object Similarity {
         explode(graft.functions.NearestCentroids.nearest_centroids(
           col("embedding"), refined, nprobe)).as("cell"))
       .select(col("cell"), col("qid"), col("qe"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid").asc)
-    assigned.join(broadcast(probes), Seq("cell"))
+    topK(assigned.join(broadcast(probes), Seq("cell"))
       .where(col("qid") =!= col("nid"))
-      .withColumn("sim", cosine(col("qe"), col("ne")))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("qid"), col("nid"), col("rank").cast("long").as("rank"))
+      .withColumn("sim", cosine(col("qe"), col("ne"))), k)
   }
 
   /** IVF top-k: probe the `nprobe` nearest cells per query. */
@@ -188,23 +188,35 @@ object Similarity {
     * [[ivfAssign]] emits and [[ivfAddToIndex]] maintains): search is
     * decoupled from index construction, so a 100 TB deployment builds
     * the index once, persists it partitioned by cell, and every query
-    * batch probes it without re-assigning the corpus. */
+    * batch probes it without re-assigning the corpus.
+    *
+    * The cosine needs one element type on both sides: when the query
+    * embedding and the index's `ne` differ (a `Seq[Double]` query frame
+    * or scalar query against a float-stored index), both widen to
+    * double — exact, so the scores are bit-identical to the float/float
+    * probe's. The cast is a projection above any cell filter on
+    * `index`, paid only on the probed rows. */
   def ivfTopKIndexed(queries: DataFrame, index: DataFrame,
                      cents: Seq[(Long, Array[Double])], k: Int,
                      nprobe: Int = 4): DataFrame = {
+    val widen = elementType(queries, "embedding") != elementType(index, "ne")
+    def wide(c: Column): Column = if (widen) c.cast("array<double>") else c
     val probes = queries
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
+      .select(col("vec_id").as("qid"), wide(col("embedding")).as("qe"),
         explode(graft.functions.NearestCentroids.nearest_centroids(
           col("embedding"), cents, nprobe)).as("cell"))
       .select(col("cell"), col("qid"), col("qe"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid").asc)
-    index.join(broadcast(probes), Seq("cell"))
+    val ix = if (widen) index.withColumn("ne", wide(col("ne"))) else index
+    topK(ix.join(broadcast(probes), Seq("cell"))
       .where(col("qid") =!= col("nid"))
-      .withColumn("sim", cosine(col("qe"), col("ne")))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("qid"), col("nid"), col("rank").cast("long").as("rank"))
+      .withColumn("sim", cosine(col("qe"), col("ne"))), k)
   }
+
+  private def elementType(df: DataFrame, c: String) =
+    df.schema(c).dataType match {
+      case org.apache.spark.sql.types.ArrayType(t, _) => t
+      case t => t
+    }
 
   /** Incremental index maintenance: assign a NEW vector batch against
     * the index's FROZEN coarse quantizer and append — the ANN twin of
@@ -271,49 +283,29 @@ object Similarity {
         index("gen") <= col("upto_gen"), "left_anti")
   }
 
-  /** Partition-pruned serving probe over a PERSISTED IVF store — the
-    * `Bm25Index.search` bucket-pruning twin. `ivfTopKIndexed` joins the
-    * store on `cell` against a broadcast probe frame, which is the
-    * right plan for in-memory indexes but reads EVERY cell partition of
-    * a parquet store (a runtime join key is not a partition filter, and
-    * DPP declines the shape: the probe side carries no selective
-    * predicate). Here the probe cells are first resolved to LITERALS —
-    * one query-sized job running the SAME `nearest_centroids`
-    * expression, so cell choice is bit-identical — and pushed as an
-    * `isin` predicate that Catalyst constant-folds into the file
-    * index's partition filter: the scan reads ≤ |queries|×nprobe of
-    * the nlist partitions, never the corpus. Results ≡
-    * [[ivfTopKIndexed]] (the literal set IS the join's key set;
-    * spec-pinned). Queries must be a bounded serving batch — the
-    * cell resolution collects |queries|×nprobe longs.
-    *
-    * `allowed` (first column = allowed vector ids) is the METADATA
-    * FILTER, FAISS-IDSelector semantics: it masks candidates BEFORE the
-    * per-query rank window, so the top-k is the true filtered top-k (a
-    * post-k filter would under-fill k). Cell assignment and similarity
-    * are untouched — filtering a vector out never changes another
-    * vector's cell or score — so the result ≡ a probe over an index
-    * built from only the allowed vectors under the same frozen
-    * quantizer. The literal `isin` partition filter pushes through the
-    * semi-join, so the mask costs pruned-cells ⋈ allowed, never a
-    * corpus scan. */
-  def ivfTopKIndexedPruned(queries: DataFrame, index: DataFrame,
-                           cents: Seq[(Long, Array[Double])], k: Int,
-                           nprobe: Int,
-                           allowed: Option[DataFrame] = None): DataFrame = {
-    val cells = probeCells(queries, cents, nprobe)
-    val masked = allowed.fold(index)(a => index.join(
-      a.select(col(a.columns.head).as("nid")), Seq("nid"), "left_semi"))
-    ivfTopKIndexed(queries, masked.where(col("cell").isin(cells: _*)),
-      cents, k, nprobe)
-  }
+  // ---- the shared steps of every partition-pruned probe
+  // ([[VectorLeg]]): resolve the probe cells to literals, prune the
+  // index by them (and by the metadata mask), score, optionally rerank
+  // exactly over the cell-pruned full vectors.
+
+  /** Resolve a query batch's probe cells to LITERALS — the one
+    * query-sized job a batch probe pays, running the SAME
+    * `nearest_centroids` expression as every indexed scorer, so cell
+    * choice is bit-identical. Queries must be a bounded serving batch:
+    * the resolution collects |queries|×nprobe longs. */
+  private[pipeline] def probeCells(queries: DataFrame,
+                                   cents: Seq[(Long, Array[Double])],
+                                   nprobe: Int): Seq[Long] =
+    queries.select(explode(
+      graft.functions.NearestCentroids.nearest_centroids(
+        col("embedding"), cents, nprobe)).as("cell"))
+      .distinct().collect().map(_.getLong(0)).toSeq
 
   /** Probe-cell resolution for a SCALAR query vector, DRIVER-SIDE:
     * runs the SAME compiled `nearest` loop the
     * [[graft.functions.NearestCentroids]] expression executes (so cell
     * choice is bit-identical to every indexed probe), with zero Spark
-    * jobs — the scalar twin of [[ivfTopKIndexedPruned]]'s query-sized
-    * cell-resolution job. */
+    * jobs — the scalar twin of [[probeCells]]. */
   def probeCellsScalar(vec: Seq[Double],
                        cents: Seq[(Long, Array[Double])],
                        nprobe: Int): Seq[Long] = {
@@ -327,39 +319,50 @@ object Similarity {
       vec.toArray)).toLongArray().toSeq
   }
 
-  /** The SCALAR single-query serving probe: one `(qid, vector)` instead
-    * of a one-row DataFrame, so the serving hot path pays NO
-    * multi-query guard job and NO cell-resolution job — the probe
-    * cells come from [[probeCellsScalar]] (driver-side, bit-identical)
-    * and land as the same literal `isin` partition filter as
-    * [[ivfTopKIndexedPruned]]. Single-query semantics are enforced at
-    * COMPILE time by the signature. `allowed` composes the
-    * [[ivfTopKIndexedPruned]] mask. Results ≡ the DataFrame
-    * doors on the same query (spec-pinned). */
-  def ivfTopKIndexedScalar(qid: Long, vec: Seq[Double], index: DataFrame,
-                           cents: Seq[(Long, Array[Double])], k: Int,
-                           nprobe: Int,
-                           allowed: Option[DataFrame] = None): DataFrame = {
-    val spark = index.sparkSession
-    import spark.implicits._
-    val queries = Seq((qid, vec)).toDF("vec_id", "embedding")
-    val cells = probeCellsScalar(vec, cents, nprobe)
-    // the scalar query is array<double>; a float-stored index widens
-    // exactly (the semDeDup discipline) so the cosine sees two double
-    // arrays — bit-identical to the float/float DataFrame-door scores.
-    // The cast is a projection above the cell partition filter, paid
-    // only on the pruned probe rows.
-    val widened = index.schema("ne").dataType match {
-      case org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType, _) =>
-        index.withColumn("ne", col("ne").cast("array<double>"))
-      case _ => index
-    }
-    val masked = allowed.fold(widened)(a => widened.join(
+  /** The METADATA FILTER, FAISS-IDSelector semantics: `allowed` (first
+    * column = allowed vector ids) semi-joins the index rows, so a probe
+    * over the result ranks the true filtered top-k (a post-k filter
+    * would under-fill k). Cell assignment and similarity are per-row —
+    * filtering a vector out never changes another vector's cell or
+    * score — so a masked probe ≡ a probe over an index built from only
+    * the allowed vectors under the same frozen quantizer. */
+  private[pipeline] def mask(index: DataFrame,
+                             allowed: Option[DataFrame]): DataFrame =
+    allowed.fold(index)(a => index.join(
       a.select(col(a.columns.head).as("nid")), Seq("nid"), "left_semi"))
-    ivfTopKIndexed(queries, masked.where(col("cell").isin(cells: _*)),
-      cents, k, nprobe)
-  }
+
+  /** The PARTITION PRUNE over a persisted cell-partitioned store — the
+    * `Bm25Index.search` bucket-pruning twin. Joining the store on `cell`
+    * against a broadcast probe frame (the in-memory scorers' plan) reads
+    * EVERY cell partition of a parquet store: a runtime join key is not
+    * a partition filter, and DPP declines the shape (the probe side
+    * carries no selective predicate). The literal `cell isin` predicate
+    * here constant-folds into the file index's partition filter, so the
+    * scan reads ≤ |queries|×nprobe of the nlist partitions; it pushes
+    * through the [[mask]] semi-join, so the mask costs pruned-cells ⋈
+    * allowed, never a corpus scan. A scorer over the pruned rows ≡ the
+    * scorer over the whole index (the literal set IS the join's key
+    * set; spec-pinned). */
+  private[pipeline] def prune(index: DataFrame, cells: Seq[Long],
+                              allowed: Option[DataFrame]): DataFrame =
+    mask(index, allowed).where(col("cell").isin(cells: _*))
+
+  /** The exact tail's full-vector side, cell-pruned when possible: a
+    * side table carrying a `cell` column (the cell-partitioned
+    * full-vector store's live view, with `nid`/`ne` — assigned under
+    * the SAME frozen quantizer) takes the probe's literal cell filter,
+    * because every candidate's current vector lives in a probed cell
+    * by construction — the refetch then reads ≤ the same nprobe/nlist
+    * fraction of the full-vector store the scored scan reads of its
+    * store, instead of a full pass (measured at 1M: the unpruned
+    * refetch WAS the sweep's record floor). A plain `(id, embedding)`
+    * table (the kept corpus parquet) passes through unpruned. */
+  private[pipeline] def pruneVectors(vectors: DataFrame,
+                                     cells: Seq[Long]): DataFrame =
+    if (vectors.columns.contains("cell"))
+      vectors.where(col("cell").isin(cells: _*))
+        .select(col("nid"), col("ne"))
+    else vectors
 
   /** The one-call UPDATE door, `Bm25Index.update`'s ANN twin: assign the
     * replacement vectors under the FROZEN quantizer, stamp them with
@@ -539,17 +542,14 @@ object Similarity {
     val lutAt = (arr: Column, s: Column) =>
       element_at(element_at(arr, (s + 1).cast("int")),
         (element_at(col("codes"), (s + 1).cast("int")) + 1).cast("int"))
-    val scored = cand
+    topK(cand
       .where(col("qid") =!= col("nid"))
       .withColumn("__dot", aggregate(sequence(lit(0), lit(m - 1)), lit(0.0),
         (acc, s) => acc + lutAt(col("lut"), s)))
       .withColumn("__rsq", aggregate(sequence(lit(0), lit(m - 1)), lit(0.0),
         (acc, s) => acc + lutAt(cbSqCol, s)))
-      .withColumn("sim", col("__dot") / (col("qnorm") * sqrt(col("__rsq"))))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("qid"), col("nid"), col("rank").cast("long").as("rank"))
+      .withColumn("sim", col("__dot") / (col("qnorm") * sqrt(col("__rsq")))),
+      k)
   }
 
   /** PQ top-k (flat scan): encode the corpus once, score every vector via
@@ -599,28 +599,6 @@ object Similarity {
     adcTopK(index.join(broadcast(probes), Seq("cell")), cbs, k)
   }
 
-  /** The PARTITION-PRUNED (and optionally metadata-FILTERED) serving
-    * probe over a persisted PQ-code store — [[ivfTopKIndexedPruned]]'s
-    * shape on the code index: probe cells resolve to LITERALS first
-    * (one query-sized job running the same argmax expression) and push
-    * as the file index's partition filter, so the scan reads ≤
-    * |queries|×nprobe of the nlist partitions; `allowed` (first column
-    * = allowed ids) semi-joins the pruned candidates BEFORE the ADC
-    * rank window (FAISS IDSelector semantics — codes and cells are
-    * per-row, so the mask changes no score). */
-  def ivfPqTopKIndexedPruned(queries: DataFrame, index: DataFrame,
-                             cents: Seq[(Long, Array[Double])],
-                             cbs: Array[Array[Array[Double]]],
-                             k: Int, nprobe: Int,
-                             allowed: Option[DataFrame] = None)
-      : DataFrame = {
-    val cells = probeCells(queries, cents, nprobe)
-    val masked = allowed.fold(index)(a => index.join(
-      a.select(col(a.columns.head).as("nid")), Seq("nid"), "left_semi"))
-    ivfPqTopKIndexed(queries, masked.where(col("cell").isin(cells: _*)),
-      cents, cbs, k, nprobe)
-  }
-
   /** IVFPQ — the production billion-vector shape (FAISS `IVFx,PQy`): coarse
     * IVF cell + PQ codes computed in ONE shuffle-free projection over the
     * corpus scan (both code tables ride inside codegen'd expressions);
@@ -655,8 +633,9 @@ object Similarity {
       ivfPqTopK(queries, corpus, rerankC, nlist, nprobe, m, ksub),
       queries, corpus.select(col("vec_id"), col("embedding")), k)
 
-  /** The exact-cosine re-rank TAIL shared by every PQ rerank door: the
-    * ADC stage's `(qid, nid)` candidates — queries × rerankC rows, tiny
+  /** The exact-cosine re-rank TAIL shared by every tier with one
+    * ([[VectorLeg]]'s PQ and SQ8 cases, [[ivfPqRerankTopK]]): the
+    * scored stage's `(qid, nid)` candidates — queries × rerankC rows, tiny
     * by construction — BROADCAST against the full-vector side `vectors`
     * (first column = id, second = embedding: the kept corpus parquet or
     * a maintained full-vector store's live view), refetch exactly those
@@ -666,142 +645,16 @@ object Similarity {
     * candidate pool the tail IS the full-vector probe (spec-pinned).
     * No corpus shuffle: the refetch is a scan-side broadcast semi-join;
     * the final window shuffles only the candidate rows. */
-  private def rerankExact(cand: DataFrame, queries: DataFrame,
-                          vectors: DataFrame, k: Int): DataFrame = {
+  private[pipeline] def rerankExact(cand: DataFrame, queries: DataFrame,
+                                    vectors: DataFrame, k: Int): DataFrame = {
     val vecs = vectors.select(
       col(vectors.columns(0)).as("nid"),
       col(vectors.columns(1)).cast("array<double>").as("nvec"))
-    val scored = vecs
+    topK(vecs
       .join(broadcast(cand.select(col("qid"), col("nid"))), Seq("nid"))
       .join(broadcast(queries.select(col("vec_id").as("qid"),
         col("embedding").cast("array<double>").as("qvec"))), Seq("qid"))
-      .withColumn("sim", cosine(col("qvec"), col("nvec")))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col("nid").asc)
-    scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
-      .select(col("qid"), col("nid"), col("rank").cast("long").as("rank"))
-  }
-
-  /** Resolve a query batch's probe cells to literals — the one
-    * query-sized job every pruned store probe pays, shared so a rerank
-    * door resolves them ONCE for both the code-store scan and the
-    * refetch scan. */
-  private def probeCells(queries: DataFrame,
-                         cents: Seq[(Long, Array[Double])],
-                         nprobe: Int): Seq[Long] =
-    queries.select(explode(
-      graft.functions.NearestCentroids.nearest_centroids(
-        col("embedding"), cents, nprobe)).as("cell"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-
-  /** The rerank tail's full-vector side, cell-pruned when possible: a
-    * side table carrying a `cell` column (the cell-partitioned
-    * full-vector store's live view, with `nid`/`ne` — assigned under
-    * the SAME frozen quantizer) takes the probe's literal cell filter,
-    * because every ADC candidate's current vector lives in a probed
-    * cell by construction — the refetch then reads ≤ the same
-    * nprobe/nlist fraction of the full-vector store the code scan
-    * reads of the code store, instead of a full pass (measured at 1M:
-    * the unpruned refetch WAS the sweep's record floor). A plain
-    * `(id, embedding)` table (the kept corpus parquet) passes through
-    * unpruned. */
-  private def pruneVectors(vectors: DataFrame,
-                           cells: Seq[Long]): DataFrame =
-    if (vectors.columns.contains("cell"))
-      vectors.where(col("cell").isin(cells: _*))
-        .select(col("nid"), col("ne"))
-    else vectors
-
-  /** [[ivfPqTopKIndexedPruned]] with the EXACT-RERANK tail the measured
-    * recall ledger says a code-store deployment practically always
-    * wants (1M, uniform vectors: ADC 14 vs rerank-100 28 per 100): ADC
-    * ranks `rerankC` candidates per query from the pruned code store,
-    * then ONLY those queries × rerankC ids refetch full vectors from
-    * the side table `vectors` — `(id, embedding)`, or the cell-carrying
-    * full-vector store view which the probe's literal cell filter
-    * prunes too (see [[pruneVectors]]) — for exact-cosine top-k. The
-    * code store stays the ADC working set (8 + m bytes/vector); the
-    * full-vector bytes are touched only probed-cell- and
-    * candidate-wise. `allowed` masks the ADC candidates
-    * (FAISS-IDSelector semantics), so the rerank pool — and therefore
-    * the tail — is already sliced. */
-  def ivfPqTopKIndexedPrunedRerank(queries: DataFrame, index: DataFrame,
-                                   cents: Seq[(Long, Array[Double])],
-                                   cbs: Array[Array[Array[Double]]],
-                                   k: Int, nprobe: Int, rerankC: Int,
-                                   vectors: DataFrame,
-                                   allowed: Option[DataFrame] = None)
-      : DataFrame = {
-    require(rerankC >= k,
-      s"rerankC ($rerankC) must cover k ($k): the tail re-ranks only " +
-        "the ADC candidates")
-    val cells = probeCells(queries, cents, nprobe)
-    val masked = allowed.fold(index)(a => index.join(
-      a.select(col(a.columns.head).as("nid")), Seq("nid"), "left_semi"))
-    rerankExact(
-      ivfPqTopKIndexed(queries, masked.where(col("cell").isin(cells: _*)),
-        cents, cbs, rerankC, nprobe),
-      queries, pruneVectors(vectors, cells), k)
-  }
-
-  /** [[ivfPqResidualTopKIndexedPruned]] with the same exact-rerank tail
-    * ([[ivfPqTopKIndexedPrunedRerank]], cell-pruned refetch included)
-    * over the residual (IVFADC) code store. */
-  def ivfPqResidualTopKIndexedPrunedRerank(queries: DataFrame,
-                                           index: DataFrame,
-                                           cents: Seq[(Long, Array[Double])],
-                                           rcbs: Array[Array[Array[Double]]],
-                                           k: Int, nprobe: Int,
-                                           rerankC: Int,
-                                           vectors: DataFrame,
-                                           allowed: Option[DataFrame] = None)
-      : DataFrame = {
-    require(rerankC >= k,
-      s"rerankC ($rerankC) must cover k ($k): the tail re-ranks only " +
-        "the ADC candidates")
-    val cells = probeCells(queries, cents, nprobe)
-    val masked = allowed.fold(index)(a => index.join(
-      a.select(col(a.columns.head).as("nid")), Seq("nid"), "left_semi"))
-    rerankExact(
-      ivfPqResidualTopKIndexed(queries,
-        masked.where(col("cell").isin(cells: _*)), cents, rcbs, rerankC,
-        nprobe),
-      queries, pruneVectors(vectors, cells), k)
-  }
-
-  /** The SCALAR single-query door over a persisted PQ-code store — the
-    * [[ivfTopKIndexedScalar]] shape on ADC serving: probe cells resolve
-    * DRIVER-side ([[probeCellsScalar]], the same compiled argmax, zero
-    * Spark jobs) and land as the literal `isin` partition filter; the
-    * one-row query frame is a LocalRelation, so the ADC LUT build's
-    * collect is a driver fold, not a job. `rerank` = (rerankC, full-
-    * vector side table) adds the exact tail; `allowed` masks candidates
-    * before the rank window. Results ≡ the DataFrame doors on the same
-    * query. */
-  def ivfPqTopKIndexedScalar(qid: Long, vec: Seq[Double], index: DataFrame,
-                             cents: Seq[(Long, Array[Double])],
-                             cbs: Array[Array[Array[Double]]],
-                             k: Int, nprobe: Int,
-                             rerank: Option[(Int, DataFrame)] = None,
-                             allowed: Option[DataFrame] = None)
-      : DataFrame = {
-    val spark = index.sparkSession
-    import spark.implicits._
-    val queries = Seq((qid, vec)).toDF("vec_id", "embedding")
-    val cells = probeCellsScalar(vec, cents, nprobe)
-    val masked = allowed.fold(index)(a => index.join(
-      a.select(col(a.columns.head).as("nid")), Seq("nid"), "left_semi"))
-    val pruned = masked.where(col("cell").isin(cells: _*))
-    rerank match {
-      case Some((rerankC, vectors)) =>
-        require(rerankC >= k,
-          s"rerankC ($rerankC) must cover k ($k)")
-        rerankExact(
-          ivfPqTopKIndexed(queries, pruned, cents, cbs, rerankC, nprobe),
-          queries, pruneVectors(vectors, cells), k)
-      case None =>
-        ivfPqTopKIndexed(queries, pruned, cents, cbs, k, nprobe)
-    }
+      .withColumn("sim", cosine(col("qvec"), col("nvec"))), k)
   }
 
   /** Residual PQ codebooks (the IVFADC construction, Jégou et al. 2011
@@ -938,7 +791,7 @@ object Similarity {
     val lutAt = (arr: Column, s: Column) =>
       element_at(element_at(arr, (s + 1).cast("int")),
         (element_at(col("codes"), (s + 1).cast("int")) + 1).cast("int"))
-    val scored = index
+    topK(index
       .join(broadcast(probes), Seq("cell"))
       .join(broadcast(auxDf), Seq("cell"))
       .where(col("qid") =!= col("nid"))
@@ -948,29 +801,8 @@ object Similarity {
       .withColumn("__rsq", col("ccsq") +
         aggregate(sequence(lit(0), lit(m - 1)), lit(0.0),
           (acc, s) => acc + lutAt(col("cross"), s)))
-      .withColumn("sim", col("__dot") / (col("qnorm") * sqrt(col("__rsq"))))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("qid"), col("nid"), col("rank").cast("long").as("rank"))
-  }
-
-  /** The pruned (+ optionally filtered) serving probe over a persisted
-    * residual code store — [[ivfPqTopKIndexedPruned]]'s shape with
-    * IVFADC scoring: literal probe cells push as the partition filter,
-    * the `allowed` mask semi-joins candidates before the rank window. */
-  def ivfPqResidualTopKIndexedPruned(queries: DataFrame,
-                                     index: DataFrame,
-                                     cents: Seq[(Long, Array[Double])],
-                                     rcbs: Array[Array[Array[Double]]],
-                                     k: Int, nprobe: Int,
-                                     allowed: Option[DataFrame] = None)
-      : DataFrame = {
-    val cells = probeCells(queries, cents, nprobe)
-    val masked = allowed.fold(index)(a => index.join(
-      a.select(col(a.columns.head).as("nid")), Seq("nid"), "left_semi"))
-    ivfPqResidualTopKIndexed(queries,
-      masked.where(col("cell").isin(cells: _*)), cents, rcbs, k, nprobe)
+      .withColumn("sim", col("__dot") / (col("qnorm") * sqrt(col("__rsq")))),
+      k)
   }
 
   /** Residual IVFPQ (IVFADC — FAISS `IVFx,PQy` proper): codes encode the
@@ -991,6 +823,21 @@ object Similarity {
 
   // ---- SQ8: the int8 scalar-quantized serving store ----
 
+  /** `max|v|` of an embedding column, floored at 1e-300: the floor only
+    * guards the all-zero vector (its int8 codes are all zeros either
+    * way); real components are far above it. */
+  private def absmax(e: Column): Column =
+    greatest(aggregate(e, lit(0.0),
+      (acc, v) => greatest(acc, abs(v.cast("double")))), lit(1e-300))
+
+  /** Per-vector symmetric absmax int8 quantization as one per-row
+    * projection, `q_j = round(v_j · 127 / max|v|)` ∈ [−127, 127] (the
+    * [[quantizeInt8]] arithmetic) — the ONE quantizer both the index
+    * build ([[sq8Assign]]) and the query side of [[sq8Scored]] run, so
+    * a search is symmetric by construction. */
+  private def int8(e: Column): Column =
+    transform(e, v => round(v.cast("double") * 127.0 / absmax(e)).cast("int"))
+
   /** Corpus → `(cell, nid, qv, scale_x1e9)` in ONE shuffle-free
     * projection under the frozen coarse quantizer — the SQ8 middle
     * tier of the bytes-vs-recall spectrum the PQ ledger measures:
@@ -1010,17 +857,12 @@ object Similarity {
   def sq8Assign(corpus: DataFrame,
                 cents: Seq[(Long, Array[Double])]): DataFrame = {
     val e = col("embedding")
-    // the 1e-300 floor only guards the all-zero vector (q is all
-    // zeros either way); real components are far above it
-    val absmax = greatest(aggregate(e, lit(0.0),
-      (acc, v) => greatest(acc, abs(v.cast("double")))), lit(1e-300))
     corpus.select(
       element_at(graft.functions.NearestCentroids.nearest_centroids(
         e, cents, 1), 1).as("cell"),
       col("vec_id").as("nid"),
-      transform(e, v =>
-        round(v.cast("double") * 127.0 / absmax).cast("int")).as("qv"),
-      floor(absmax / 127.0 * 1000000000.0).cast("long").as("scale_x1e9"))
+      int8(e).as("qv"),
+      floor(absmax(e) / 127.0 * 1000000000.0).cast("long").as("scale_x1e9"))
   }
 
   /** Cosine top-k over a PREBUILT SQ8 index (`(cell, nid, qv, …)` —
@@ -1031,152 +873,26 @@ object Similarity {
     * mirrors bit-for-bit in SQL. */
   def sq8TopKIndexed(queries: DataFrame, index: DataFrame,
                      cents: Seq[(Long, Array[Double])],
-                     k: Int, nprobe: Int): DataFrame = {
+                     k: Int, nprobe: Int): DataFrame =
+    sq8Scored(queries, index, cents, k, nprobe)
+      .select(col("qid"), col("nid"), col("rank").cast("long").as("rank"))
+
+  /** The int8 scorer behind [[sq8TopKIndexed]] with the sims KEPT —
+    * `(qid, nid, sim, rank)` ranked to `n` — the candidate pool the
+    * margin router ([[VectorLeg.Sq8Adaptive]]) and the margin census
+    * read the cut line off. */
+  private[pipeline] def sq8Scored(queries: DataFrame, index: DataFrame,
+                                  cents: Seq[(Long, Array[Double])],
+                                  n: Int, nprobe: Int): DataFrame = {
     val e = col("embedding")
-    val absmax = greatest(aggregate(e, lit(0.0),
-      (acc, v) => greatest(acc, abs(v.cast("double")))), lit(1e-300))
-    val q = queries.select(
-      col("vec_id").as("qid"),
-      transform(e, v =>
-        round(v.cast("double") * 127.0 / absmax).cast("int")).as("qqv"),
+    val q = queries.select(col("vec_id").as("qid"), int8(e).as("qqv"),
       explode(graft.functions.NearestCentroids.nearest_centroids(
         e, cents, nprobe)).as("cell"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col("nid").asc)
-    index.join(broadcast(q), Seq("cell"))
+    ranked(index.join(broadcast(q), Seq("cell"))
       .where(col("qid") =!= col("nid"))
       .withColumn("sim", cosine(col("qqv").cast("array<double>"),
-        col("qv").cast("array<double>")))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("qid"), col("nid"), col("rank").cast("long").as("rank"))
-  }
-
-  /** The partition-pruned (+ optionally filtered) serving probe over a
-    * persisted SQ8 store — [[ivfTopKIndexedPruned]]'s shape: literal
-    * probe cells push as the file index's partition filter, `allowed`
-    * semi-joins candidates before the rank window.
-    *
-    * `rerank` = (rerankC, full-vector side table) adds the OPTIONAL
-    * exact tail ([[rerankExact]], the PQ doors' shape): the int8
-    * cosine ranks `rerankC` candidates, then only queries × rerankC
-    * ids refetch full vectors (cell-pruned when the side table carries
-    * the store's `cell` column) for exact top-k. The 1M uniform-vector
-    * ledger measured SQ8 AT full-vector recall with no tail — but
-    * uniform vectors are close to SQ8's BEST case (components share
-    * magnitude, so absmax quantization wastes no range); on
-    * clustered/heavy-tailed embeddings the int8 rounding CAN reorder a
-    * top-k near the cut line, and this knob is the measured remedy
-    * (see the clustered-fixture ledger row in SCALING.md). */
-  def sq8TopKIndexedPruned(queries: DataFrame, index: DataFrame,
-                           cents: Seq[(Long, Array[Double])],
-                           k: Int, nprobe: Int,
-                           allowed: Option[DataFrame] = None,
-                           rerank: Option[(Int, DataFrame)] = None)
-      : DataFrame = {
-    val cells = probeCells(queries, cents, nprobe)
-    val masked = allowed.fold(index)(a => index.join(
-      a.select(col(a.columns.head).as("nid")), Seq("nid"), "left_semi"))
-    val pruned = masked.where(col("cell").isin(cells: _*))
-    rerank match {
-      case Some((rerankC, vectors)) =>
-        require(rerankC >= k,
-          s"rerankC ($rerankC) must cover k ($k): the tail re-ranks " +
-            "only the int8-ranked candidates")
-        rerankExact(sq8TopKIndexed(queries, pruned, cents, rerankC,
-          nprobe), queries, pruneVectors(vectors, cells), k)
-      case None =>
-        sq8TopKIndexed(queries, pruned, cents, k, nprobe)
-    }
-  }
-
-  /** The SCALAR single-query door over a persisted SQ8 store — probe
-    * cells resolve driver-side ([[probeCellsScalar]], zero jobs), the
-    * one-row query frame is a LocalRelation, and the query-side
-    * quantization is part of the probe plan. `allowed` masks
-    * candidates before the rank window; `rerank` adds the optional
-    * exact tail exactly as on the DataFrame door. Results ≡ the
-    * DataFrame door on the same query (spec-pinned). */
-  def sq8TopKIndexedScalar(qid: Long, vec: Seq[Double], index: DataFrame,
-                           cents: Seq[(Long, Array[Double])],
-                           k: Int, nprobe: Int,
-                           allowed: Option[DataFrame] = None,
-                           rerank: Option[(Int, DataFrame)] = None)
-      : DataFrame = {
-    val spark = index.sparkSession
-    import spark.implicits._
-    val queries = Seq((qid, vec)).toDF("vec_id", "embedding")
-    val cells = probeCellsScalar(vec, cents, nprobe)
-    val masked = allowed.fold(index)(a => index.join(
-      a.select(col(a.columns.head).as("nid")), Seq("nid"), "left_semi"))
-    val pruned = masked.where(col("cell").isin(cells: _*))
-    rerank match {
-      case Some((rerankC, vectors)) =>
-        require(rerankC >= k,
-          s"rerankC ($rerankC) must cover k ($k): the tail re-ranks " +
-            "only the int8-ranked candidates")
-        rerankExact(sq8TopKIndexed(queries, pruned, cents, rerankC,
-          nprobe), queries, pruneVectors(vectors, cells), k)
-      case None =>
-        sq8TopKIndexed(queries, pruned, cents, k, nprobe)
-    }
-  }
-
-  /** MARGIN-ROUTED adaptive rerank over a persisted SQ8 store — the
-    * serving shape that spends full-vector bytes ONLY where the int8
-    * ranking is uncertain, instead of the all-or-nothing `rerank` knob:
-    *
-    *  1. ONE pruned int8 probe ranks `rerankC` candidates per query
-    *     (the same pass funds the margin decision and the tail's
-    *     candidate pool — no second probe);
-    *  2. per query, the margin `floor((sim@k − sim@(k+1)) · 1e6)`
-    *     measures how close the cut line is: int8 rounding error is
-    *     bounded, so a WIDE margin cannot be reordered by
-    *     quantization, while a narrow one can — exactly the failure
-    *     mode the clustered-fixture ledger measures;
-    *  3. queries with margin < `marginPpm` (or a k-th candidate tied
-    *     in the int8 ranking) route their `rerankC` candidates through
-    *     the exact tail ([[rerankExact]], cell-pruned refetch);
-    *     confident queries serve the int8 top-k directly, touching no
-    *     full-vector bytes.
-    *
-    * A query with fewer than k+1 candidates has nothing below the cut
-    * to confuse and serves directly. Cost: the probe is the plain
-    * pruned probe; the margin pass is candidate-sized (≤ queries ×
-    * rerankC rows); the refetch is (uncertain queries) × rerankC
-    * broadcast rows against the cell-pruned vector scan — at
-    * marginPpm = 0 this IS [[sq8TopKIndexedPruned]] with no tail, at
-    * marginPpm = ∞ it is the full rerank door; in between the
-    * full-vector bytes scale with the fixture's actual uncertainty
-    * (measured on the clustered 1M fixture in SCALING.md). Output
-    * `(qid, nid, rank)` — integer-exact, SQL-mirrorable routing rule,
-    * oracled end to end. */
-  def sq8TopKIndexedAdaptiveRerank(queries: DataFrame, index: DataFrame,
-                                   cents: Seq[(Long, Array[Double])],
-                                   k: Int, nprobe: Int, rerankC: Int,
-                                   marginPpm: Long, vectors: DataFrame,
-                                   allowed: Option[DataFrame] = None)
-      : DataFrame = {
-    require(rerankC >= k,
-      s"rerankC ($rerankC) must cover k ($k): the tail re-ranks only " +
-        "the int8-ranked candidates")
-    val cells = probeCells(queries, cents, nprobe)
-    val cand = sq8Candidates(queries, index, cents, nprobe, rerankC,
-      cells, allowed)
-    // margin per query from ranks k and k+1; NULL margin (no k+1
-    // candidate) compares false against the threshold → confident
-    val uncertain = cutMargins(cand, k)
-      .where(col("margin_ppm") < lit(marginPpm)).select("qid")
-    val confident = cand.where(col("rank") <= k)
-      .join(broadcast(uncertain), Seq("qid"), "left_anti")
-      .select(col("qid"), col("nid"), col("rank").cast("long").as("rank"))
-    val rerankedQs = queries.join(
-      broadcast(uncertain.withColumnRenamed("qid", "vec_id")),
-      Seq("vec_id"), "left_semi")
-    val rerankedCand = cand
-      .join(broadcast(uncertain), Seq("qid"), "left_semi")
-    confident.unionByName(rerankExact(rerankedCand, rerankedQs,
-      pruneVectors(vectors, cells), k))
+        col("qv").cast("array<double>"))), n)
+      .select(col("qid"), col("nid"), col("sim"), col("rank"))
   }
 
   /** The MARGIN CENSUS behind the adaptive router — `(qid,
@@ -1186,67 +902,27 @@ object Similarity {
     * deployment reads its `marginPpm` threshold off (the knob is
     * meaningless without it — margins are fixture-dependent, tiny on
     * clustered corpora, wide on uniform ones), and the observability
-    * twin of [[sq8TopKIndexedAdaptiveRerank]]: the fraction under the
-    * chosen threshold IS the full-vector refetch fraction the router
-    * will pay. Candidate-sized work beyond the plain pruned probe. */
+    * twin of [[VectorLeg.Sq8Adaptive]]: the fraction under the chosen
+    * threshold IS the full-vector refetch fraction the router will
+    * pay. Candidate-sized work beyond the plain pruned probe. */
   def sq8CutMargins(queries: DataFrame, index: DataFrame,
                     cents: Seq[(Long, Array[Double])],
                     k: Int, nprobe: Int, rerankC: Int,
                     allowed: Option[DataFrame] = None): DataFrame = {
     require(rerankC >= k, s"rerankC ($rerankC) must cover k ($k)")
-    val cells = probeCells(queries, cents, nprobe)
-    cutMargins(sq8Candidates(queries, index, cents, nprobe, rerankC,
-      cells, allowed), k)
-  }
-
-  /** The int8 scoring pass shared by the adaptive router and the
-    * margin census: the pruned probe's plan with sims KEPT, ranked to
-    * `rerankC` — `(qid, nid, sim, rank)`. */
-  private def sq8Candidates(queries: DataFrame, index: DataFrame,
-                            cents: Seq[(Long, Array[Double])],
-                            nprobe: Int, rerankC: Int,
-                            cells: Seq[Long],
-                            allowed: Option[DataFrame]): DataFrame = {
-    val masked = allowed.fold(index)(a => index.join(
-      a.select(col(a.columns.head).as("nid")), Seq("nid"), "left_semi"))
-    val pruned = masked.where(col("cell").isin(cells: _*))
-    val e = col("embedding")
-    val absmax = greatest(aggregate(e, lit(0.0),
-      (acc, v) => greatest(acc, abs(v.cast("double")))), lit(1e-300))
-    val q = queries.select(
-      col("vec_id").as("qid"),
-      transform(e, v =>
-        round(v.cast("double") * 127.0 / absmax).cast("int")).as("qqv"),
-      explode(graft.functions.NearestCentroids.nearest_centroids(
-        e, cents, nprobe)).as("cell"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col("nid").asc)
-    pruned.join(broadcast(q), Seq("cell"))
-      .where(col("qid") =!= col("nid"))
-      .withColumn("sim", cosine(col("qqv").cast("array<double>"),
-        col("qv").cast("array<double>")))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= rerankC)
-      .select(col("qid"), col("nid"), col("sim"), col("rank"))
+    cutMargins(sq8Scored(queries,
+      prune(index, probeCells(queries, cents, nprobe), allowed), cents,
+      rerankC, nprobe), k)
   }
 
   /** `(qid, margin_ppm)` of a ranked-with-sims candidate frame. */
-  private def cutMargins(cand: DataFrame, k: Int): DataFrame =
+  private[pipeline] def cutMargins(cand: DataFrame, k: Int): DataFrame =
     cand.where(col("rank").isin(k, k + 1))
       .groupBy("qid")
       .agg(floor((max(when(col("rank") === k, col("sim"))) -
         max(when(col("rank") === k + 1, col("sim")))) * 1e6)
         .cast("long").as("margin_ppm"))
 
-  /** Symmetric int8 quantization of an embedding column — the standard
-    * storage/serving compression for ANN corpora (4× smaller than float32,
-    * SIMD-friendly dot products). Per-vector absmax scaling:
-    * `q_j = round(v_j · 127 / max|v|)` ∈ [−127, 127].
-    *
-    * Shape: one explode + two narrow shuffles (per-vector absmax, then the
-    * quantized re-aggregation) — all codegen, no interpreted HOFs. Output:
-    * (vec_id, qvec, scale_x1e9) with the scale fixed-point-encoded so the
-    * whole result is integer-exact and oracle-checkable. */
   /** Semantic-diversity sample: partition the corpus into IVF centroid
     * cells (shuffle-free [[ivfAssign]] projection) and keep a
     * deterministic hash-rank sample of `perCell` vectors per cell — the
@@ -1299,6 +975,15 @@ object Similarity {
       .select("cid", "pid", "sim_ppm")
   }
 
+  /** Symmetric int8 quantization of an embedding column — the standard
+    * storage/serving compression for ANN corpora (4× smaller than float32,
+    * SIMD-friendly dot products). Per-vector absmax scaling:
+    * `q_j = round(v_j · 127 / max|v|)` ∈ [−127, 127].
+    *
+    * Shape: one explode + two narrow shuffles (per-vector absmax, then the
+    * quantized re-aggregation) — all codegen, no interpreted HOFs. Output:
+    * (vec_id, qvec, scale_x1e9) with the scale fixed-point-encoded so the
+    * whole result is integer-exact and oracle-checkable. */
   def quantizeInt8(df: DataFrame): DataFrame = {
     val ex = df.select(col("vec_id"), posexplode(col("embedding")))
       .select(col("vec_id"), col("pos"), col("col").cast("double").as("v"))

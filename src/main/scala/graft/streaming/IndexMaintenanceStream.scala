@@ -633,7 +633,7 @@ object IndexMaintenanceStream {
   /** The committed serving view: tombstone-filtered live rows (only
     * deltas the state pointer admits — an in-flight batch is
     * invisible) plus the door's stats, ready for
-    * `Bm25Index.search` / `Similarity.ivfTopKIndexedPruned` /
+    * `Bm25Index.search` / `VectorLeg.Ivf` /
     * `Dedup.incrementalDedup`. */
   def currentView(spark: SparkSession, door: Maintenance.Door,
                   dir: String): (DataFrame, Option[DataFrame]) = {

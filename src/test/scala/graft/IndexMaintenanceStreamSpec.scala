@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.pipeline.{Bm25Index, Maintenance}
+import graft.pipeline.{Bm25Index, Maintenance, VectorLeg}
 import graft.streaming.IndexMaintenanceStream
 
 /** The streaming mutation tailer ([[streaming.IndexMaintenanceStream]])
@@ -174,7 +174,7 @@ class IndexMaintenanceStreamSpec extends AnyFunSuite {
     assert(sortedRows(view.select(col("cell"), col("nid")))
       === sortedRows(rebuilt.select(col("cell"), col("nid"))))
     val q = vecs(live.toSeq.take(3))
-    assert(Similarity.ivfTopKIndexedPruned(q, view, cents, 5, nprobe = 3)
+    assert(VectorLeg.Ivf(view, cents, nprobe = 3).batch(q, 5)
       .orderBy("qid", "rank").collect().map(_.toSeq).toSeq
       === Similarity.ivfTopKIndexed(q, rebuilt, cents, 5, nprobe = 3)
         .orderBy("qid", "rank").collect().map(_.toSeq).toSeq)
@@ -631,7 +631,7 @@ class IndexMaintenanceStreamSpec extends AnyFunSuite {
       Retrieval.rrfFuse(Seq(
         Retrieval.rankLex(Bm25Index.search(bmV, bmS.get, qTerms, 12,
           nBuckets)),
-        Similarity.ivfTopKIndexedPruned(q, ivfV, cents, 12, nprobe = 8)
+        VectorLeg.Ivf(ivfV, cents, nprobe = 8).batch(q, 12)
           .select(col("nid").as("doc_id"), col("rank"))), k = 10)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         .toSeq
@@ -669,8 +669,8 @@ class IndexMaintenanceStreamSpec extends AnyFunSuite {
       val alone = Retrieval.rrfFuse(Seq(
         Retrieval.rankLex(Bm25Index.searchFiltered(bmV, bmS.get, terms,
           12, nBuckets, allowed)),
-        Similarity.ivfTopKIndexedPruned(vecs(Seq(qid)), ivfV,
-          cents, 12, 8, Some(allowed))
+        VectorLeg.Ivf(ivfV, cents, 8).batch(vecs(Seq(qid)), 12,
+          Some(allowed))
           .select(col("nid").as("doc_id"), col("rank"))), k = 10)
         .collect().zipWithIndex.map { case (r, i) =>
           (qid, r.getLong(0), r.getLong(1), i + 1L) }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,6 +18,7 @@ import graft.streaming.IndexMaintenanceStream
 class JobBudgetSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
+  import TestSpark.{countActions, countActionsNamed}
 
   private val nBuckets = 16
   private val qTerms = Seq("alpha", "gamma", "epsilon")
@@ -47,61 +47,6 @@ class JobBudgetSpec extends AnyFunSuite {
       (i.toLong, Array.tabulate(8)(d =>
         (((i * 31 + d * 13) % 100) / 50.0f) - 1f))
     }.toDF("vec_id", "embedding")
-
-  /** `(executions, jobs)` while `f` runs (listener bus drained before
-    * read). EXECUTIONS = distinct SQL execution ids across started
-    * jobs — the number of ACTIONS the code path runs, the
-    * design-controlled budget (a job with no execution id — parquet
-    * footer inference — counts as its own action). JOBS = raw
-    * onJobStart count, which AQE inflates by one per materialized
-    * query stage — plan-shape-dependent, pinned only loosely. */
-  private def countActions(f: => Unit): (Int, Int) = {
-    val (acts, jobs, _) = countActionsNamed(f)
-    (acts, jobs)
-  }
-
-  /** [[countActions]] plus each counted action's call site — printed by
-    * the budget assertions so a regression names the extra action
-    * instead of just counting it. */
-  private def countActionsNamed(f: => Unit): (Int, Int, Seq[String]) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val execs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val bare = new java.util.concurrent.atomic.AtomicInteger()
-    val descs = new java.util.concurrent.ConcurrentHashMap[Long, String]()
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet()
-        Option(j.properties.getProperty("spark.sql.execution.id")) match {
-          case Some(id) => execs.add(id); ()
-          case None =>
-            bare.incrementAndGet()
-            descs.put(-1000L - bare.get(), "BARE " +
-              j.stageInfos.lastOption.map(_.name).getOrElse("?"))
-            ()
-        }
-      }
-      override def onOtherEvent(
-          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
-        case s: org.apache.spark.sql.execution.ui
-            .SparkListenerSQLExecutionStart =>
-          descs.put(s.executionId,
-            s.description.linesIterator.toSeq.headOption.getOrElse("?"))
-          ()
-        case _ =>
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      f
-      org.apache.spark.GraftListenerBridge.waitUntilEmpty(
-        spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(l)
-    import scala.jdk.CollectionConverters._
-    val counted = execs.asScala.map(id =>
-      Option(descs.get(id.toLong)).getOrElse(s"exec $id")).toSeq ++
-      descs.asScala.collect { case (k, v) if k < 0 => v }
-    (execs.size() + bare.get(), jobs.get(), counted.sorted)
-  }
 
   test("applyBatch action budget: a mixed (non-compacting) mutation " +
       "batch runs at most 5 Spark actions (4 with the op-census hint); " +

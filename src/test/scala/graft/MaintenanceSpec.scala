@@ -4,7 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.pipeline.{Bm25Index, Dedup, Maintenance, Similarity}
+import graft.pipeline.{Bm25Index, Dedup, Maintenance, Similarity,
+  VectorLeg}
 
 /** [[pipeline.Maintenance.tick]] must compose the generation doors
   * correctly for every mutation sequence a deployment can produce —
@@ -284,19 +285,19 @@ class MaintenanceSpec extends AnyFunSuite {
         s"seed=$seed: residual code rows drifted")
       // probe vectors need not be corpus members — only valid inputs
       val q = vecs(Seq(20L -> 0, 21L -> 0))
-      assert(Similarity.ivfPqTopKIndexedPruned(q,
-          rawSt.live(rawDoor, rawStore), cents, cbs, 5, 3)
+      assert(VectorLeg.Pq(rawSt.live(rawDoor, rawStore), cents, cbs, 3)
+          .batch(q, 5)
           .orderBy("qid", "rank").collect().map(_.toSeq).toSeq
-        === Similarity.ivfPqTopKIndexedPruned(q,
-          Similarity.ivfPqAssign(survivors, cents, cbs), cents, cbs,
-          5, 3).orderBy("qid", "rank").collect().map(_.toSeq).toSeq,
+        === VectorLeg.Pq(Similarity.ivfPqAssign(survivors, cents, cbs),
+          cents, cbs, 3).batch(q, 5)
+          .orderBy("qid", "rank").collect().map(_.toSeq).toSeq,
         s"seed=$seed: raw probe drifted")
-      assert(Similarity.ivfPqResidualTopKIndexedPruned(q,
-          resSt.live(resDoor, resStore), cents, rcbs, 5, 3)
+      assert(VectorLeg.PqResidual(resSt.live(resDoor, resStore), cents,
+          rcbs, 3).batch(q, 5)
           .orderBy("qid", "rank").collect().map(_.toSeq).toSeq
-        === Similarity.ivfPqResidualTopKIndexedPruned(q,
+        === VectorLeg.PqResidual(
           Similarity.ivfPqResidualAssign(survivors, cents, rcbs),
-          cents, rcbs, 5, 3)
+          cents, rcbs, 3).batch(q, 5)
           .orderBy("qid", "rank").collect().map(_.toSeq).toSeq,
         s"seed=$seed: residual probe drifted")
     }
@@ -404,8 +405,7 @@ class MaintenanceSpec extends AnyFunSuite {
     // over the rebuilt index, pruned and filtered alike
     val queries = vecs(Seq(20L -> 0, 21L -> 0))
     def probe(idx: DataFrame, allowed: Option[DataFrame]) =
-      Similarity.ivfPqTopKIndexedPruned(queries, idx, cents, cbs, 5,
-        nprobe = 3, allowed)
+      VectorLeg.Pq(idx, cents, cbs, nprobe = 3).batch(queries, 5, allowed)
         .orderBy("qid", "rank").collect().map(_.toSeq).toSeq
     assert(probe(st.live(door, store), None) === probe(rebuilt, None),
       "maintained-store ADC probe diverged from the rebuild's")
@@ -453,8 +453,8 @@ class MaintenanceSpec extends AnyFunSuite {
       "residual code rows drifted from the rebuild")
     val queries = vecs(Seq(20L -> 0, 21L -> 0))
     def probe(idx: DataFrame, allowed: Option[DataFrame]) =
-      Similarity.ivfPqResidualTopKIndexedPruned(queries, idx, cents,
-        rcbs, 5, nprobe = 3, allowed)
+      VectorLeg.PqResidual(idx, cents, rcbs, nprobe = 3)
+        .batch(queries, 5, allowed)
         .orderBy("qid", "rank").collect().map(_.toSeq).toSeq
     assert(probe(st.live(door, store), None) === probe(rebuilt, None),
       "maintained residual-store probe diverged from the rebuild's")

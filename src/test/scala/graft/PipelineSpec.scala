@@ -288,8 +288,7 @@ class PipelineSpec extends AnyFunSuite {
     // must equal the join-probe answer AND reach the file index as a
     // partition filter (the join alone prunes nothing — a parquet
     // store would be read whole on every query)
-    val pruned = Similarity.ivfTopKIndexedPruned(q, gLive, cents, 5,
-      nprobe = 4)
+    val pruned = VectorLeg.Ivf(gLive, cents, nprobe = 4).batch(q, 5)
     assert(pruned.orderBy("qid", "rank").collect().map(_.toSeq).toSeq
       === Similarity.ivfTopKIndexed(q, gLive, cents, 5, nprobe = 4)
         .orderBy("qid", "rank").collect().map(_.toSeq).toSeq,

@@ -21,8 +21,8 @@ import graft.streaming.IndexMaintenanceStream
   *  - per tier (IVF, PQ, SQ8, SQ8-adaptive), the store facade's scalar
   *    query and the query inside a batch serve the single (B = 1)
   *    answer;
-  *  - scalar PQ door ≡ the DataFrame door, with strictly fewer Spark
-  *    actions (no cell-resolution job);
+  *  - on every tier, the scalar probe ≡ the batch probe of one query,
+  *    with strictly fewer Spark actions (no cell-resolution job);
   *  - a door reconstructed from the PERSISTED quantizer serves the
   *    pre-restart answer; a re-trained (different-table) door fails
   *    fast in applyBatch AND viewAt instead of silently re-keying;
@@ -35,6 +35,7 @@ import graft.streaming.IndexMaintenanceStream
 class PqStoreSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
+  import TestSpark.countActions
 
   private val nBuckets = 16
   private val qTerms = Seq("alpha", "gamma", "epsilon")
@@ -67,19 +68,18 @@ class PqStoreSpec extends AnyFunSuite {
     val cbs = Similarity.pqCodebooks(emb, 4, 8)
     val pqIndex = Similarity.ivfPqAssign(emb, cents, cbs)
     val fullIndex = Similarity.ivfAssign(emb, cents)
-    val reranked = Similarity.ivfPqTopKIndexedPrunedRerank(
-      q, pqIndex, cents, cbs, k = 5, nprobe = 3, rerankC = 1000,
-      vectors = emb.select(col("vec_id"), col("embedding")))
-    val exact = Similarity.ivfTopKIndexedPruned(
-      q, fullIndex, cents, k = 5, nprobe = 3)
+    val reranked = VectorLeg.Pq(pqIndex, cents, cbs, nprobe = 3,
+      Some((1000, emb.select(col("vec_id"), col("embedding")))))
+      .batch(q, 5)
+    val exact = VectorLeg.Ivf(fullIndex, cents, nprobe = 3).batch(q, 5)
     assert(rows(reranked) === rows(exact),
       "a pool-covering rerank tail must serve the full-vector probe")
     // the residual store's tail obeys the same contract
     val rcbs = Similarity.ivfPqResidualTrain(emb, cents, 4, 8, 1)
     val rIndex = Similarity.ivfPqResidualAssign(emb, cents, rcbs)
-    val rReranked = Similarity.ivfPqResidualTopKIndexedPrunedRerank(
-      q, rIndex, cents, rcbs, k = 5, nprobe = 3, rerankC = 1000,
-      vectors = emb.select(col("vec_id"), col("embedding")))
+    val rReranked = VectorLeg.PqResidual(rIndex, cents, rcbs, nprobe = 3,
+      Some((1000, emb.select(col("vec_id"), col("embedding")))))
+      .batch(q, 5)
     assert(rows(rReranked) === rows(exact),
       "the residual store's pool-covering tail must agree too")
   }
@@ -91,13 +91,12 @@ class PqStoreSpec extends AnyFunSuite {
     val cents = Similarity.centroids(emb, 8)
     val cbs = Similarity.pqCodebooks(emb, 4, 8)
     val allowed = emb.where(col("vec_id") % 3 === 0).select("vec_id")
-    val reranked = Similarity.ivfPqTopKIndexedPrunedRerank(
-      q, Similarity.ivfPqAssign(emb, cents, cbs), cents, cbs,
-      k = 5, nprobe = 3, rerankC = 1000,
-      vectors = emb.select(col("vec_id"), col("embedding")),
-      allowed = Some(allowed))
-    val exact = Similarity.ivfTopKIndexedPruned(
-      q, Similarity.ivfAssign(emb, cents), cents, 5, 3, Some(allowed))
+    val reranked = VectorLeg.Pq(Similarity.ivfPqAssign(emb, cents, cbs),
+      cents, cbs, nprobe = 3,
+      Some((1000, emb.select(col("vec_id"), col("embedding")))))
+      .batch(q, 5, Some(allowed))
+    val exact = VectorLeg.Ivf(Similarity.ivfAssign(emb, cents), cents, 3)
+      .batch(q, 5, Some(allowed))
     assert(rows(reranked) === rows(exact))
   }
 
@@ -316,7 +315,7 @@ class PqStoreSpec extends AnyFunSuite {
     def probe(door: Maintenance.Door): Seq[Seq[Any]] = {
       val (view, _) = IndexMaintenanceStream.viewAt(spark, door, pqDir,
         IndexMaintenanceStream.committedBatch(spark, pqDir))
-      rows(Similarity.ivfPqTopKIndexedPruned(q, view, cents, cbs, 5, 3))
+      rows(VectorLeg.Pq(view, cents, cbs, 3).batch(q, 5))
     }
     val before = probe(pqDoor)
     // "restart": a NEW door built from nothing but the persisted tables
@@ -406,17 +405,15 @@ class PqStoreSpec extends AnyFunSuite {
     val sq8Index = Similarity.sq8Assign(emb, cents)
     val fullIndex = Similarity.ivfAssign(emb, cents)
     val vectors = emb.select(col("vec_id"), col("embedding"))
-    val reranked = Similarity.sq8TopKIndexedPruned(
-      q, sq8Index, cents, k = 5, nprobe = 3,
+    val tailed = VectorLeg.Sq8(sq8Index, cents, nprobe = 3,
       rerank = Some((1000, vectors)))
-    val exact = Similarity.ivfTopKIndexedPruned(
-      q, fullIndex, cents, k = 5, nprobe = 3)
+    val reranked = tailed.batch(q, 5)
+    val exact = VectorLeg.Ivf(fullIndex, cents, nprobe = 3).batch(q, 5)
     assert(rows(reranked) === rows(exact),
       "a pool-covering SQ8 tail must serve the full-vector probe")
     // the bare int8 probe DIFFERS on this fixture — the tail is doing
     // real work here, not vacuously agreeing
-    val bare = Similarity.sq8TopKIndexedPruned(
-      q, sq8Index, cents, k = 5, nprobe = 3)
+    val bare = VectorLeg.Sq8(sq8Index, cents, nprobe = 3).batch(q, 5)
     assert(rows(bare) !== rows(exact),
       "fixture too easy: int8 rounding reordered nothing, the tail " +
         "is untested")
@@ -424,12 +421,11 @@ class PqStoreSpec extends AnyFunSuite {
     val qv = q.where(col("vec_id") === 2L)
       .select(col("embedding").cast("array<double>")).collect()
       .head.getSeq[Double](0)
-    val scalar = Similarity.sq8TopKIndexedScalar(2L, qv, sq8Index,
-      cents, k = 5, nprobe = 3, rerank = Some((1000, vectors)))
+    val scalar = tailed.scalar(2L, qv, 5)
     assert(rows(scalar) === rows(reranked.where(col("qid") === 2L)))
     intercept[IllegalArgumentException] {
-      Similarity.sq8TopKIndexedPruned(q, sq8Index, cents, k = 5,
-        nprobe = 3, rerank = Some((3, vectors)))
+      VectorLeg.Sq8(sq8Index, cents, nprobe = 3,
+        rerank = Some((3, vectors))).batch(q, 5)
     }
   }
 
@@ -442,13 +438,12 @@ class PqStoreSpec extends AnyFunSuite {
     val cents = Similarity.centroids(emb, 8)
     val sq8Index = Similarity.sq8Assign(emb, cents)
     val vectors = emb.select(col("vec_id"), col("embedding"))
-    def adaptive(marginPpm: Long) = Similarity
-      .sq8TopKIndexedAdaptiveRerank(q, sq8Index, cents, k = 5,
-        nprobe = 3, rerankC = 30, marginPpm = marginPpm,
-        vectors = vectors)
-    val bare = Similarity.sq8TopKIndexedPruned(q, sq8Index, cents, 5, 3)
-    val fullTail = Similarity.sq8TopKIndexedPruned(q, sq8Index, cents,
-      5, 3, rerank = Some((30, vectors)))
+    def adaptive(marginPpm: Long) = VectorLeg.Sq8Adaptive(sq8Index, cents,
+      nprobe = 3, rerankC = 30, marginPpm = marginPpm, vectors = vectors)
+      .batch(q, 5)
+    val bare = VectorLeg.Sq8(sq8Index, cents, 3).batch(q, 5)
+    val fullTail = VectorLeg.Sq8(sq8Index, cents, 3,
+      rerank = Some((30, vectors))).batch(q, 5)
     assert(rows(adaptive(0L)) === rows(bare),
       "marginPpm=0 must serve the bare int8 probe (no query routes)")
     assert(rows(adaptive(Long.MaxValue)) === rows(fullTail),
@@ -518,7 +513,7 @@ class PqStoreSpec extends AnyFunSuite {
     val sweep = Retrieval.annRecallSweep(q, Seq("nprobe", "rerank_c"),
       Seq((2, 5), (2, 20), (8, 5), (8, 1000)).map { case (np, rc) =>
         Seq(np.toLong, rc.toLong) ->
-          VectorLeg.Pq(index, cents, cbs, np, rc, vectors)
+          VectorLeg.Pq(index, cents, cbs, np, Some((rc, vectors)))
       }, 5, exact)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3)))
     val byPoint = sweep.map { case (np, rc, rec) => (np, rc) -> rec }.toMap
@@ -528,63 +523,74 @@ class PqStoreSpec extends AnyFunSuite {
       "full probe + covering rerank must reproduce brute force exactly")
   }
 
-  /** Distinct Spark actions while `f` runs (the JobBudgetSpec counter,
-    * local copy): SQL execution ids + bare jobs. */
-  private def countActions(f: => Unit): Int = {
-    val execs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val bare = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(j.properties.getProperty("spark.sql.execution.id")) match {
-          case Some(id) => execs.add(id); ()
-          case None => bare.incrementAndGet(); ()
-        }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      f
-      org.apache.spark.GraftListenerBridge.waitUntilEmpty(
-        spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(l)
-    execs.size() + bare.get()
-  }
-
-  test("scalar PQ rerank door: same answer as the DataFrame probe " +
-      "with strictly fewer Spark actions (no cell-resolution job, " +
-      "LUT built from the LocalRelation)") {
+  test("every tier's scalar probe ≡ its batch of one, masked and " +
+      "unmasked, with strictly fewer Spark actions (no cell-resolution " +
+      "job; query-side tables built from the LocalRelation)") {
+    // the query frame must be PARQUET-backed like a deployment's: a
+    // local-relation frame folds the batch's cell resolution into the
+    // driver, hiding exactly the cut being measured
     val qdir = java.nio.file.Files
       .createTempDirectory("pqspec-scalarq").toString
     embeddings(120).write.mode("overwrite").parquet(qdir)
     val emb = spark.read.parquet(qdir)
     val cents = Similarity.centroids(emb, 8)
     val cbs = Similarity.pqCodebooks(emb, 4, 8)
-    val index = Similarity.ivfPqAssign(emb, cents, cbs).localCheckpoint()
+    val rcbs = Similarity.ivfPqResidualTrain(emb, cents, 4, 8, 1)
+    // indexes, side table and mask shared eagerly so no probe pays a build
+    val ivf = Similarity.ivfAssign(emb, cents).localCheckpoint()
+    val pq = Similarity.ivfPqAssign(emb, cents, cbs).localCheckpoint()
+    val pqr = Similarity.ivfPqResidualAssign(emb, cents, rcbs)
+      .localCheckpoint()
+    val sq8 = Similarity.sq8Assign(emb, cents).localCheckpoint()
     val vectors = emb.select(col("vec_id"), col("embedding"))
       .localCheckpoint()
-    val qVec = emb.where(col("vec_id") === 2L)
-      .select("embedding").collect().head
-      .getSeq[Float](0).map(_.toDouble)
-    var dfAnswer: Seq[Seq[Any]] = Nil
-    val dfActs = countActions {
-      dfAnswer = Similarity.ivfPqTopKIndexedPrunedRerank(
-        emb.where(col("vec_id") === 2L), index, cents, cbs,
-        k = 5, nprobe = 3, rerankC = 20, vectors = vectors)
-        .collect().map(_.toSeq).toSeq
+    val allowed = emb.where(col("vec_id") % 3 === 0).select("vec_id")
+      .localCheckpoint()
+    val tail = Some((20, vectors))
+    val legs = Seq(
+      "IVF" -> VectorLeg.Ivf(ivf, cents, 3),
+      "PQ" -> VectorLeg.Pq(pq, cents, cbs, 3),
+      "PQ+tail" -> VectorLeg.Pq(pq, cents, cbs, 3, tail),
+      "PQ-residual" -> VectorLeg.PqResidual(pqr, cents, rcbs, 3),
+      "SQ8" -> VectorLeg.Sq8(sq8, cents, 3),
+      "SQ8+tail" -> VectorLeg.Sq8(sq8, cents, 3, tail),
+      "SQ8-adaptive" -> VectorLeg.Sq8Adaptive(sq8, cents, 3, 20, 3000L,
+        vectors))
+    val qVec = vectorOf(emb, 2L)
+    for ((tier, leg) <- legs; mask <- Seq(None, Some(allowed))) {
+      val shape = s"$tier${mask.fold("")(_ => " masked")}"
+      var batch: Seq[Seq[Any]] = Nil
+      val (bActs, bJobs) = countActions {
+        batch = rows(leg.batch(emb.where(col("vec_id") === 2L), 5, mask))
+      }
+      var scalar: Seq[Seq[Any]] = Nil
+      val (sActs, sJobs) = countActions {
+        scalar = rows(leg.scalar(2L, qVec, 5, mask))
+      }
+      info(s"$shape: batch $bActs actions [$bJobs jobs], " +
+        s"scalar $sActs [$sJobs]")
+      assert(scalar.nonEmpty, s"$shape: fixture served nothing")
+      assert(scalar === batch,
+        s"$shape: the scalar probe changed the single-query answer")
+      assert(sActs < bActs, s"$shape: the scalar probe ran $sActs " +
+        s"actions vs the batch probe's $bActs — the cell-resolution cut " +
+        "disappeared")
     }
-    var scAnswer: Seq[Seq[Any]] = Nil
-    val scActs = countActions {
-      scAnswer = Similarity.ivfPqTopKIndexedScalar(2L, qVec, index,
-        cents, cbs, k = 5, nprobe = 3, rerank = Some((20, vectors)))
-        .collect().map(_.toSeq).toSeq
-    }
-    assert(scAnswer === dfAnswer,
-      "the scalar PQ door changed the single-query answer")
-    assert(scAnswer.nonEmpty)
-    assert(scActs < dfActs,
-      s"scalar PQ door ran $scActs actions vs the DataFrame probe's " +
-        s"$dfActs — the cell-resolution/LUT cuts disappeared")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(qdir))
+  }
+
+  test("the IVF probe over a double-typed query frame serves the " +
+      "float-frame answer (both sides widen exactly)") {
+    val emb = embeddings(120)
+    val cents = Similarity.centroids(emb, 8)
+    val leg = VectorLeg.Ivf(Similarity.ivfAssign(emb, cents), cents, 3)
+    val q = emb.where(col("vec_id") < 4)
+    val qd = q.select(col("vec_id"),
+      col("embedding").cast("array<double>").as("embedding"))
+    val allowed = Some(emb.where(col("vec_id") % 3 === 0).select("vec_id"))
+    assert(rows(leg.batch(qd, 5)) === rows(leg.batch(q, 5)))
+    assert(rows(leg.batch(qd, 5, allowed)) ===
+      rows(leg.batch(q, 5, allowed)))
   }
 
   test("the rerank refetch is PARTITION-PRUNED when the side table " +
@@ -618,8 +624,8 @@ class PqStoreSpec extends AnyFunSuite {
       .head.metrics("numFiles").value
     assert(allFiles >= 8, s"fixture too small: $allFiles files")
     val q = emb.where(col("vec_id") === 2L)
-    val res = Similarity.ivfPqTopKIndexedPrunedRerank(q, code, cents,
-      cbs, k = 5, nprobe = 2, rerankC = 20, vectors = vectors)
+    val res = VectorLeg.Pq(code, cents, cbs, nprobe = 2,
+      Some((20, vectors))).batch(q, 5)
     val got = res.collect().map(_.toSeq).toSeq
     val marker = new java.io.File(vecDir).getName
     val vscan = scans(res.queryExecution.executedPlan).find(
@@ -631,10 +637,9 @@ class PqStoreSpec extends AnyFunSuite {
       s"refetch pruning failed: read $refetchFiles of $allFiles files")
     // pruning is answer-invariant: the plain (id, embedding) side
     // table — never pruned — serves the identical top-k
-    val plain = Similarity.ivfPqTopKIndexedPrunedRerank(q, code, cents,
-      cbs, k = 5, nprobe = 2, rerankC = 20,
-      vectors = emb.select(col("vec_id"), col("embedding")))
-      .collect().map(_.toSeq).toSeq
+    val plain = VectorLeg.Pq(code, cents, cbs, nprobe = 2,
+      Some((20, emb.select(col("vec_id"), col("embedding")))))
+      .batch(q, 5).collect().map(_.toSeq).toSeq
     assert(got === plain)
     dropDirs(codeDir, vecDir)
   }
@@ -679,7 +684,7 @@ class PqStoreSpec extends AnyFunSuite {
     val hand = Retrieval.rrfFuse(Seq(
       Retrieval.rankLex(Bm25Index.search(bmView, bmStats.get, qTerms,
         12, nBuckets)),
-      Similarity.sq8TopKIndexedPruned(q, view, cents, 12, 3)
+      VectorLeg.Sq8(view, cents, 3).batch(q, 12)
         .select(col("nid").as("doc_id"), col("rank"))), 10)
     assert(rows(df) === rows(hand))
     assertShapesAgree("SQ8", bmDoor, bmDir, sq8Leg, emb, 2L)
@@ -725,10 +730,11 @@ class PqStoreSpec extends AnyFunSuite {
     def served(): Seq[Seq[Any]] = {
       val (view, _) = IndexMaintenanceStream.currentView(spark, pqDoor,
         newDir)
-      rows(Similarity.ivfPqTopKIndexedPruned(q, view, cents4, cbs, 5, 2))
+      rows(VectorLeg.Pq(view, cents4, cbs, 2).batch(q, 5))
     }
-    assert(served() === rows(Similarity.ivfPqTopKIndexedPruned(q,
-      Similarity.ivfPqAssign(mutated, cents4, cbs), cents4, cbs, 5, 2)),
+    assert(served() === rows(VectorLeg.Pq(
+      Similarity.ivfPqAssign(mutated, cents4, cbs), cents4, cbs, 2)
+      .batch(q, 5)),
       "the migrated store diverged from the new-table rebuild")
     // the feed resumes: the next mutation batch applies to the NEW
     // store through the same gen machinery
@@ -736,9 +742,9 @@ class PqStoreSpec extends AnyFunSuite {
       .select(lit("delete").as("op"), col("vec_id"), col("embedding"))
     IndexMaintenanceStream.applyBatch(spark, pqDoor, newDir, cellWrite,
       b1, 1L)
-    assert(served() === rows(Similarity.ivfPqTopKIndexedPruned(q,
+    assert(served() === rows(VectorLeg.Pq(
       Similarity.ivfPqAssign(mutated.where(col("vec_id") % 5 =!= 1),
-        cents4, cbs), cents4, cbs, 5, 2)),
+        cents4, cbs), cents4, cbs, 2).batch(q, 5)),
       "post-reseed mutations diverged from the rebuild-on-survivors")
     // the OLD door's tables are not the new store's identity
     val ex = intercept[IllegalArgumentException] {
@@ -821,11 +827,9 @@ class PqStoreSpec extends AnyFunSuite {
     val q = emb.where(col("vec_id") < 3)
     val (view, _) = IndexMaintenanceStream.currentView(spark, pqDoor,
       newDir)
-    assert(rows(Similarity.ivfPqTopKIndexedPruned(q, view, cents4, cbs,
-        5, 2)) ===
-      rows(Similarity.ivfPqTopKIndexedPruned(q,
-        Similarity.ivfPqAssign(survivors, cents4, cbs), cents4, cbs,
-        5, 2)),
+    assert(rows(VectorLeg.Pq(view, cents4, cbs, 2).batch(q, 5)) ===
+      rows(VectorLeg.Pq(Similarity.ivfPqAssign(survivors, cents4, cbs),
+        cents4, cbs, 2).batch(q, 5)),
       "the cut-over store diverged from the rebuild-on-survivors")
     // a replay of the COMPLETED cutover is a quick no-op
     assert(IndexMaintenanceStream.cutover(spark, pqDoor, newDir, vecDir,

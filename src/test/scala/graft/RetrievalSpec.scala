@@ -364,7 +364,7 @@ class RetrievalSpec extends AnyFunSuite {
       s"full-probe row not exact: ${out.last}")
     // and each variant row equals the hand-composed probe + eval
     for (np <- Seq(1, 2, 4)) {
-      val res = Similarity.ivfTopKIndexedPruned(q, index, cents, 5, np)
+      val res = VectorLeg.Ivf(index, cents, np).batch(q, 5)
         .select(col("qid"), col("nid").as("doc_id"), col("rank"))
       val mac = Retrieval.evalMacro(Retrieval.evalMetrics(res,
         exact.select(col("qid"), col("nid").as("doc_id")), 5))
