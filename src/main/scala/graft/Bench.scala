@@ -1,9 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-round throughput benchmark. Mirrors the reference's execution model:
   * one load phase (namespace snapshot into memory — NNA's fsimage load),
   * then interactive queries against the snapshot. Prints ONE JSON line.
+  * Runs on [[Sessions.local]], the session `Verify` checks.
   *
   * RUN ISOLATION: timings on a shared box are only meaningful if nothing
   * else competes for the CPUs (round-6 audit: two scan queries showed
@@ -183,7 +183,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
 
     // ---- run isolation gate (see class doc) ----
     val lockPath = java.nio.file.Paths.get(
@@ -252,18 +251,7 @@ object Bench {
       }
     }
     val loadStart = loadavg()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // the generated-class cache holds 100 entries by default — a
-      // 222-query registry cycles it several times over, so every
-      // query's THIRD run (and the drift sweep's re-runs) would pay
-      // janino recompilation again, reading as phantom drift
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val spark = Sessions.local()
     spark.sparkContext.setLogLevel("WARN")
     // the bench artifact keeps only the LAST ~2000 chars of stdout/err —
     // WindowExec's per-execution "No Partition Defined" WARN (fired by

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.api._
 import graft.inodes.InodeView
@@ -17,12 +17,27 @@ import graft.inodes.InodeView
   * graft.Cli sql        <dataDir> "SELECT count(*) AS n FROM files"
   * graft.Cli suggestions <dataDir>
   * graft.Cli serve      <dataDir> [port] [user:password:TIER+TIER,…]
+  * graft.Cli profile    <sfDir> <query…>
+  * graft.Cli explain    <sfDir> [query…] [explain=formatted|extended|simple]
   * }}}
   *
   * `dataDir` takes the same forms as [[InodeView.inodes]]: a fixture dir,
   * `oiv:`/`oivxml:`/`oivbin:` ingest doors, or `inodes:` for a saved
   * namespace. Query strings are the reference's endpoint parameters
   * verbatim — the same string works against `/filter` over HTTP.
+  *
+  * Two dev commands run over the registry's parquet table dir:
+  *  - `profile` runs each named query once cold and once warm, both timed
+  *    with `count()`, and prints one line per query: cold and warm
+  *    seconds, then the warm run's [[SparkActivity]] actions, jobs, stages
+  *    and tasks, with the counted actions' call sites indented under it.
+  *  - `explain` prints each query's plan (`formatted` unless an
+  *    `explain=` argument names another mode, the same modes as
+  *    `/query?explain=`) under a `========== name ==========` header,
+  *    which `tools/split_plans.py` splits into one file per query. With
+  *    no query names it audits [[explainTargets]].
+  *
+  * The session is [[Sessions.local]].
   */
 object Cli {
 
@@ -30,7 +45,8 @@ object Cli {
     if (args.length < 2) { System.err.println(usage); sys.exit(2) }
     val cmd = args(0)
     val dataDir = args(1)
-    val spark = session()
+    val spark = Sessions.local()
+    spark.sparkContext.setLogLevel("WARN")
     try run(spark, cmd, dataDir, args.drop(2))
     catch {
       case e: IllegalArgumentException =>
@@ -94,18 +110,38 @@ object Cli {
         // generic runner over the FULL operator registry (events /
         // pipeline / ingest / nna) — dataDir here is the parquet table
         // dir the registry queries expect
-        val name = rest.headOption.getOrElse(
+        val df = registry(rest.headOption.getOrElse(
           throw new IllegalArgumentException(
-            "query requires an operator name (see the `list` command)"))
-        val fn = SparkEntry.queries.getOrElse(name,
-          throw new IllegalArgumentException(
-            s"unknown query '$name' (see the `list` command)"))
-        val df = fn(spark, dataDir)
+            "query requires an operator name (see the `list` command)")))(
+          spark, dataDir)
         println(df.columns.mkString(","))
         val it = df.toLocalIterator()
         // cell-escaped like the HTTP twin — raw mkString corrupts cells
         // containing commas/quotes/newlines (doc text, path columns)
         while (it.hasNext) println(api.Renderers.csvRow(it.next()))
+      case "profile" =>
+        if (rest.isEmpty)
+          throw new IllegalArgumentException("profile requires query names")
+        rest.foreach { name =>
+          val fn = registry(name)
+          val t0 = System.nanoTime()
+          fn(spark, dataDir).count()
+          val cold = (System.nanoTime() - t0) / 1e9
+          val (_, a) = SparkActivity.measure(spark)(fn(spark, dataDir).count())
+          println(f"PROFILE $name cold=$cold%.2f warm=${a.seconds}%.2f " +
+            s"actions=${a.actions} jobs=${a.jobs} stages=${a.stages} " +
+            s"tasks=${a.tasks}")
+          a.callSites.foreach(site => println(s"  $site"))
+        }
+      case "explain" =>
+        val (modes, names) = rest.partition(_.startsWith("explain="))
+        val mode = Renderers.explainMode(
+          modes.lastOption.fold("formatted")(_.stripPrefix("explain=")))
+        (if (names.isEmpty) explainTargets else names.toSeq).foreach { name =>
+          println(s"\n========== $name ==========")
+          println(registry(name)(spark, dataDir).queryExecution
+            .explainString(mode))
+        }
       case "list" =>
         SparkEntry.queries.keys.toSeq.sorted.foreach(println)
       case "serve" =>
@@ -179,20 +215,22 @@ object Cli {
       kv.take(i) -> kv.drop(i + 1)
     }.toMap
 
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-cli")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  private def registry(name: String): (SparkSession, String) => DataFrame =
+    SparkEntry.queries.getOrElse(name, throw new IllegalArgumentException(
+      s"unknown query '$name' (see the `list` command)"))
+
+  /** `explain`'s default audit list, one plan property each. */
+  private val explainTargets = Seq(
+    "q1_pricing",            // pushdown: shipdate filter must reach the scan
+    "nna_filter_count",      // column pruning through the inode derivation
+    "nna_histogram_user",    // partial agg + single shuffle expected
+    "q3_top_orders",         // join strategy: broadcast for dims
+    "ann_bruteforce_top5",   // broadcast nested loop over corpus scan
+    "ann_ivf_top5",          // cell assignment: NO exchange above the scan
+    "nna_ingest_oiv",        // OIV ingest: CSV scan + two linear shuffles
+    "dedup_minhash_lsh",     // banded join: only (band,hash,id) shuffles
+    "nna_under_ns_quota",    // narrow ancestor walk: 16-byte shuffle rows
+    "nna_histogram_user_salted") // two-phase salted group-by
 
   private val usage: String =
     """usage: graft.Cli <command> <dataDir> [args]
@@ -205,5 +243,7 @@ object Cli {
       |  query <dir> <operator-name>              any registry operator, csv
       |  list <dir>                               operator names
       |  serve <dir> [port] [user:pw:TIER+TIER,…]  start the HTTP server
+      |  profile <dir> <query…>                   cold/warm time, Spark activity
+      |  explain <dir> [query…] [explain=MODE]    plans; formatted|extended|simple
       |""".stripMargin
 }

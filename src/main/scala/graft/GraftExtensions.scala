@@ -11,7 +11,7 @@ import graft.functions._
 
 /** Cluster-deployable registration of the engine's custom Catalyst
   * expressions: set `spark.sql.extensions=graft.GraftExtensions` (or
-  * `SparkSession.builder().withExtensions(new GraftExtensions)`) and every
+  * a session builder's `.withExtensions(new GraftExtensions)`) and every
   * session — including ones the application never touches, e.g. a Thrift
   * server's — resolves them by name in plain SQL:
   *

@@ -1,6 +1,7 @@
 package graft.api
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.{ExplainMode, ExtendedMode, FormattedMode, SimpleMode}
 
 /** Histogram output renderers — the S7 sinks of the reference
   * (`queries/Histograms.toChartJsJson/toJson/toCsv/twoLeveltoCsv`,
@@ -30,6 +31,16 @@ object Renderers {
     case s: String => "\"" + esc(s) + "\""
     case b: Boolean => b.toString
     case n => n.toString
+  }
+
+  /** The explain modes both front doors accept (`Cli explain` and
+    * `/query?explain=`): `formatted` (alias `true`), `extended`, `simple`. */
+  def explainMode(mode: String): ExplainMode = mode match {
+    case "formatted" | "true" => FormattedMode
+    case "extended" => ExtendedMode
+    case "simple" => SimpleMode
+    case other => throw new IllegalArgumentException(
+      s"explain must be formatted|extended|simple, got $other")
   }
 
   /** 1-level histogram (key, value) → `{"key": value, …}`. */

@@ -250,18 +250,8 @@ final class WebServer(
       // shape over HTTP without paying for the execution
       p.get("explain") match {
         case Some(mode) =>
-          val qe = fn(spark, dataDir).queryExecution
-          val text = mode match {
-            case "formatted" | "true" => qe.explainString(
-              org.apache.spark.sql.execution.FormattedMode)
-            case "extended" => qe.explainString(
-              org.apache.spark.sql.execution.ExtendedMode)
-            case "simple" => qe.explainString(
-              org.apache.spark.sql.execution.SimpleMode)
-            case other => throw new IllegalArgumentException(
-              s"explain must be formatted|extended|simple, got $other")
-          }
-          respond(ex, 200, "text/plain", text)
+          respond(ex, 200, "text/plain", fn(spark, dataDir).queryExecution
+            .explainString(Renderers.explainMode(mode)))
         case None =>
           // STREAMED, like the CLI twin and the dump endpoint — registry
           // operators can be row-heavy (per-event as-of outputs) and a

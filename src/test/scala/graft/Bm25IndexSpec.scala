@@ -104,30 +104,9 @@ class Bm25IndexSpec extends AnyFunSuite {
     // (1) plan construction must not trigger a Spark job — a serving
     // layer builds many more plans than it executes (explain, caching,
     // admission control) and the per-probe materialization is lazy
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    def settle(): Unit = {
-      var last = -1; var stable = 0
-      val dl = System.currentTimeMillis() + 60000
-      while (stable < 5 && System.currentTimeMillis() < dl) {
-        Thread.sleep(100)
-        val c = jobs.get()
-        if (c == last) stable += 1 else { stable = 0; last = c }
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    val probe = try {
-      settle(); jobs.set(0)
-      val built = Bm25Index.search(p, s, qTerms, 10, nBuckets)
-      settle()
-      assert(jobs.get() === 0,
-        "building a search plan must not launch jobs")
-      built
-    } finally spark.sparkContext.removeSparkListener(l)
+    val (probe, built) = SparkActivity.measure(spark)(
+      Bm25Index.search(p, s, qTerms, 10, nBuckets))
+    assert(built.jobs === 0, "building a search plan must not launch jobs")
     // (2) under spark.graft.reliableCheckpoint=true a probe must stay
     // executor-local: Spark never deletes per-query reliable checkpoint
     // dirs (absent cleanCheckpoints=true), so a high-QPS server would

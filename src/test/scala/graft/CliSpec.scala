@@ -83,4 +83,38 @@ class CliSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](
       Cli.run(spark, "histogram", dir, Array("set=files"))) // missing type=
   }
+
+  test("explain: sections split on tools/split_plans.py's header, one " +
+      "physical plan each; a bad mode fails loudly") {
+    val out = capture("explain", "q1_pricing", "nna_histogram_user")
+    val header = """(?m)^========== (\S+) ==========\s*$""".r
+    assert(header.findAllMatchIn(out).map(_.group(1)).toSeq ===
+      Seq("q1_pricing", "nna_histogram_user"))
+    val bodies = header.split(out).drop(1)
+    assert(bodies.length === 2 && bodies.forall(_.contains("== Physical Plan ==")))
+    assert(capture("explain", "q1_pricing", "explain=extended")
+      .contains("== Optimized Logical Plan =="))
+    intercept[IllegalArgumentException](
+      capture("explain", "q1_pricing", "explain=bogus"))
+    intercept[IllegalArgumentException](capture("explain", "no_such_operator"))
+  }
+
+  test("profile prints the warm run's actions and jobs as countActions " +
+      "counts them") {
+    val line = capture("profile", "events_hourly").linesIterator
+      .find(_.startsWith("PROFILE events_hourly ")).get
+    val fields = line.split(' ').drop(2).map { kv =>
+      val Array(k, v) = kv.split("=", 2); k -> v
+    }.toMap
+    assert(fields.keySet === Set("cold", "warm", "actions", "jobs", "stages", "tasks"))
+    val (acts, jobs) = TestSpark.countActions(
+      SparkEntry.queries("events_hourly")(spark, dir).count(): Unit)
+    assert((fields("actions").toInt, fields("jobs").toInt) === ((acts, jobs)))
+    intercept[IllegalArgumentException](capture("profile"))
+  }
+
+  test("the test session carries the session factory's settings") {
+    assert(Seq("spark.sql.session.timeZone", "spark.sql.legacy.parquet.nanosAsLong",
+      "spark.sql.codegen.cache.maxEntries").map(spark.conf.get) === Seq("UTC", "true", "5000"))
+  }
 }

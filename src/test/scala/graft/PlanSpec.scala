@@ -48,6 +48,33 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("TakeOrderedAndProject"))
   }
 
+  test("near-dup self-joins over checkpointed corpora stay equi joins, " +
+       "never nested-loop") {
+    import org.apache.spark.sql.functions.{col, expr}
+    import graft.pipeline.{Curation, Dedup, Similarity}
+    val docs = spark.range(2000).select(col("id").as("doc_id"),
+      expr("""array_join(transform(sequence(0, 39), j ->
+        concat('w', pmod(xxhash64(id * 40 + j), 3000))), ' ')""").as("text"))
+      .localCheckpoint(true)
+    val emb = spark.range(2000).select(col("id").as("vec_id"),
+      expr("""transform(sequence(0, 15), j ->
+        cast(pmod(xxhash64(id, j), 2000) as float) / 1000.0 - 1.0)""")
+        .cast("array<float>").as("embedding")).localCheckpoint(true)
+    Seq(
+      "jaccardPairs" -> Dedup.jaccardPairs(docs, "doc_id", col("text"), 3, 600000L),
+      "minhashCandidates" -> Dedup.minhashCandidates(docs, "doc_id", col("text")),
+      "simhashPairs" -> Dedup.simhashPairs(docs, "doc_id", col("text")),
+      "lshTopK" -> Similarity.lshTopK(emb.where(col("vec_id") < 5), emb, 5, 12, 4),
+      "cosineNearDupPairs" -> Similarity.cosineNearDupPairs(emb, 900000L, 14, 4),
+      "decontaminate" -> Curation.decontaminate(docs, docs.limit(100), "doc_id",
+        col("text"), 5)
+    ).foreach { case (name, df) =>
+      val plan = df.queryExecution.executedPlan.toString
+      assert(equiJoins(plan) > 0 && !plan.contains("BroadcastNestedLoop") &&
+        !plan.contains("CartesianProduct"), s"$name:\n$plan")
+    }
+  }
+
   // another suite's unpersist() of a same-plan DataFrame evicts the snapshot
   // cache entry (CacheManager matches by logical plan) — re-establish it
   private def freshSnapshot(): Unit = {

@@ -204,27 +204,17 @@ class WebServerSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("suggestions readers serve from the server cache: zero Spark jobs") {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
     get(open, "/suggestions") // warm the cache
     get(open, "/quotas"); get(open, "/fileAge"); get(open, "/fileTypes")
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (_, a) = SparkActivity.measure(spark) {
       get(open, "/suggestions")
       get(open, "/users?suggestion=numFiles")
       get(open, "/top?limit=3")
       get(open, "/quotas")
       get(open, "/fileAge")
       get(open, "/fileTypes")
-      // listener events are async; a job start would be enqueued within
-      // the request round-trips plus this slack
-      Thread.sleep(300)
-      assert(jobs.get() === 0)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(a.jobs === 0)
   }
 
   test("/suggestions after a reload serves pre-warmed, zero jobs on the request path") {
@@ -234,22 +224,14 @@ class WebServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     // readers serve cached rows. Probe: count Spark jobs during the GETs.
     assert(get(open, "/reloadNamespace").status === 200)
     open.awaitSuggestionWarm() // background warm completes off-thread
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (_, a) = SparkActivity.measure(spark) {
       assert(get(open, "/suggestions").status === 200)
       assert(get(open, "/quotas").status === 200)
       assert(get(open, "/fileAge").status === 200)
       assert(get(open, "/fileTypes").status === 200)
-      Thread.sleep(300) // listener events are async
-      assert(jobs.get() === 0,
-        "post-reload suggestions GETs ran namespace jobs on the request path")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(a.jobs === 0,
+      "post-reload suggestions GETs ran namespace jobs on the request path")
   }
 
   test("/refresh serves stale-but-instant while the re-warm runs, then swaps") {
@@ -502,33 +484,6 @@ class WebServerSpec extends AnyFunSuite with BeforeAndAfterAll {
       new Security.Context(Nil, "k".getBytes(UTF_8)),
       suggestionsService = Some(svc))
     ws.start()
-    // probe: input records per job-group family — "no namespace-sized
-    // scan" is asserted mechanically, not by wall time
-    val incRecs = new java.util.concurrent.atomic.AtomicLong
-    val fullRecs = new java.util.concurrent.atomic.AtomicLong
-    val stageOwner =
-      new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val g = Option(j.properties)
-          .map(_.getProperty("spark.jobGroup.id", "")).getOrElse("")
-        val owner =
-          if (g.startsWith("graft-suggestions-cycle-incremental")) "inc"
-          else if (g.startsWith("graft-suggestions-cycle")) "full" else ""
-        if (owner.nonEmpty)
-          j.stageIds.foreach(sid => stageOwner.put(sid, owner))
-      }
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        Option(stageOwner.get(s.stageInfo.stageId)).foreach { o =>
-          val m = s.stageInfo.taskMetrics
-          if (m != null)
-            (if (o == "inc") incRecs else fullRecs)
-              .addAndGet(m.inputMetrics.recordsRead)
-        }
-    }
-    spark.sparkContext.addSparkListener(listener)
     try {
       def awaitCycles(k: Int): Unit = {
         val dl = System.currentTimeMillis() + 60000
@@ -536,10 +491,19 @@ class WebServerSpec extends AnyFunSuite with BeforeAndAfterAll {
           Thread.sleep(50)
         assert(svc.history.size >= k, s"cycle $k never completed")
       }
-      svc.runNow(); awaitCycles(1) // full rebase: seeds the fold state
-      svc.runNow(); awaitCycles(2) // incremental fold of delta 1
-      svc.runNow(); awaitCycles(3) // incremental fold of delta 2
-      Thread.sleep(1500) // listener bus drain
+      // probe: input records per job-group family — "no namespace-sized
+      // scan" is asserted mechanically, not by wall time
+      def inc(g: String) = g.startsWith("graft-suggestions-cycle-incremental")
+      val ((_, incAct), fullAct) = SparkActivity.measure(spark,
+          g => g.startsWith("graft-suggestions-cycle") && !inc(g)) {
+        SparkActivity.measure(spark, inc) {
+          svc.runNow(); awaitCycles(1) // full rebase: seeds the fold state
+          svc.runNow(); awaitCycles(2) // incremental fold of delta 1
+          svc.runNow(); awaitCycles(3) // incremental fold of delta 2
+        }
+      }
+      val incRecs = incAct.inputRecords
+      val fullRecs = fullAct.inputRecords
       // folded state ≡ a full recompute over the final namespace at the
       // REBASE-PINNED epoch, scalar census and per-user maps both
       val st = svc.latestCensus.get
@@ -559,13 +523,12 @@ class WebServerSpec extends AnyFunSuite with BeforeAndAfterAll {
       // the probe: both incremental cycles TOGETHER read a fraction of
       // one full pass (touched slices + dirs partition), while the full
       // rebase read the namespace multiple times
-      assert(fullRecs.get() > 40000L,
-        s"full rebase should scan the namespace: ${fullRecs.get()}")
-      assert(incRecs.get() < fullRecs.get() / 2,
+      assert(fullRecs > 40000L,
+        s"full rebase should scan the namespace: $fullRecs")
+      assert(incRecs < fullRecs / 2,
         s"incremental ticks must not rescan the namespace: " +
-          s"inc=${incRecs.get()} full=${fullRecs.get()}")
+          s"inc=$incRecs full=$fullRecs")
     } finally {
-      spark.sparkContext.removeSparkListener(listener)
       svc.stop(); ws.stop()
     }
   }

@@ -110,7 +110,9 @@ CODEC_CLASS = {"gzip": "org.apache.hadoop.io.compress.GzipCodec",
 
 base = os.path.join(os.path.dirname(__file__), "..", "fixtures")
 # scale mode: gen_fsimage_bin.py <flat_csv> <out.bin> encodes any flat CSV
-# (e.g. the one gen_fsimage_xml.py writes at scale) into a binary image
+# (e.g. the one gen_fsimage_xml.py writes at scale) into a binary image;
+# `gen_fsimage_bin.py /tmp/fsimage_big_flat.csv` writes the
+# /tmp/fsimage_big.bin ScaleBench's `ingest_oivbin_*` stages read
 flat_path = argv[0] if len(argv) > 0 \
     else os.path.join(base, "fsimage_mini_flat.csv")
 rows = list(csv.DictReader(open(flat_path)))

@@ -25,7 +25,10 @@ The XML is checked in; this script documents its provenance.
 Regenerate with: python3 tools/gen_fsimage_xml.py
 Scale mode: `gen_fsimage_xml.py <n_files> <out_prefix>` writes
 <out_prefix>.xml / <out_prefix>_flat.csv with n_files files spread over
-dirs of ~1000 (3-level tree) — for `graft.XmlIngestBench`.
+dirs of ~1000 (3-level tree) — for ScaleBench's `ingest_oivxml_*` stages,
+which read /tmp/fsimage_big.xml:
+  python3 tools/gen_fsimage_xml.py 1000000 /tmp/fsimage_big
+  sbt "runMain graft.ScaleBench 100000 100000 ingest_oivxml"
 """
 import os
 import sys

@@ -40,7 +40,10 @@ perms = ["-rw-r--r--", "-rwxr-xr-x", "-rw-rw----", "-rw-r--r--+"]  # last has AC
 
 # optional scale-stress mode: `gen_oiv_fixture.py <n_files> <out.tsv>`
 # generates extra dirs under /data/raw/2024 so trees deepen with n;
-# the default (no args) regenerates the checked-in 92-inode fixture
+# the default (no args) regenerates the checked-in 92-inode fixture.
+# ScaleBench's `ingest_oiv_*` stages read /tmp/oiv_1m.tsv:
+#   python3 tools/gen_oiv_fixture.py 1000000 /tmp/oiv_1m.tsv
+#   sbt "runMain graft.ScaleBench 100000 100000 ingest_oiv_"
 n_files = int(sys.argv[1]) if len(sys.argv) > 1 else 80
 if n_files > 80:
     for d in range(n_files // 1000 + 1):

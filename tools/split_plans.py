@@ -1,7 +1,9 @@
 #!/usr/bin/env python3
-"""Split `graft.PlanAudit` output into per-query plan files.
+"""Split `graft.Cli explain` output into per-query plan files.
 
-Usage: python3 tools/split_plans.py <audit_log> <out_dir> <suffix>
+Usage:
+  sbt "runMain graft.Cli explain <sf_dir>" > audit.log
+  python3 tools/split_plans.py audit.log <out_dir> <suffix>
 Writes <out_dir>/<query>_<suffix>.txt for each
 `========== <query> ==========` section found in the log.
 """
