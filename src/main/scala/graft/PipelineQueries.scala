@@ -1105,8 +1105,7 @@ object PipelineQueries {
       graft.streaming.IndexMaintenanceStream.bootstrap(
         s, vecDoor, vecDir, cellWrite, emb)
       graft.streaming.IndexMaintenanceStream.applyBatch(
-        s, vecDoor, vecDir, cellWrite, v0, 0L,
-            knownDeltaEmpty = Some(false))
+        s, vecDoor, vecDir, cellWrite, v0, 0L)
       // drift remedy: migrate into a PQ store under re-seeded tables.
       // Both new tables are first-by-id prefixes of the cents16 rows
       // already collected for the old door (centroids(emb, 8) is the
@@ -1185,8 +1184,7 @@ object PipelineQueries {
       }
       // feed: batch 0 → old store (pointer names it)
       graft.streaming.IndexMaintenanceStream.applyBatch(
-        s, vecDoor, vecDir, cellWrite, fetch(0L), 0L,
-        knownDeltaEmpty = Some(false)) // batch 0 carries adds/updates
+        s, vecDoor, vecDir, cellWrite, fetch(0L), 0L)
       // drift remedy begins: reseed into a PQ store under NEW tables.
       // Both are first-by-id prefixes of the cents16 rows already
       // collected for the old door — derived driver-side, zero extra
@@ -1201,21 +1199,15 @@ object PipelineQueries {
       // the migration is in flight — the batch a hand-rolled cutover
       // loses
       graft.streaming.IndexMaintenanceStream.applyBatch(
-        s, vecDoor, vecDir, cellWrite, fetch(1L), 1L,
-        knownDeltaEmpty = Some(true)) // batch 1 is delete-only
+        s, vecDoor, vecDir, cellWrite, fetch(1L), 1L)
       graft.streaming.IndexMaintenanceStream.cutover(
         s, pqDoor, newDir, vecDir, cellWrite, fetch, servingDir, asOf,
-        graceMs = 100L,
-        // the feed's own log knowledge: only batches 0 (mixed) and 2
-        // (add-only) carry add/update rows; 1 is delete-only and every
-        // never-committed id fetches the empty delete frame
-        knownDeltaEmpty = b => Some(b != 0L && b != 2L))
+        graceMs = 100L)
       // post-repoint: the feed's next batch follows the pointer
       val servedDir = graft.streaming.DocsStream
         .readPointer(s, servingDir).get
       graft.streaming.IndexMaintenanceStream.applyBatch(
-        s, pqDoor, servedDir, cellWrite, fetch(2L), 2L,
-        knownDeltaEmpty = Some(false)) // batch 2 is add-only
+        s, pqDoor, servedDir, cellWrite, fetch(2L), 2L)
       val (view, _) = graft.streaming.IndexMaintenanceStream
         .currentView(s, pqDoor, servedDir)
       val result = pipeline.Dedup.checkpointCorpus(
@@ -3046,15 +3038,13 @@ object PipelineQueries {
           concat(col("text"), lit(" shuffle data")).as("text"),
           col("text").as("old_text")))
       graft.streaming.IndexMaintenanceStream.applyBatch(
-        s, door, dir, pipeline.Bm25Index.write, b0, 0L, Some(oldV),
-            knownDeltaEmpty = Some(false))
+        s, door, dir, pipeline.Bm25Index.write, b0, 0L, Some(oldV))
       val b1 = upd1old.where(col("doc_id") % 12 === 3)
         .select(lit("delete").as("op"), col("doc_id"),
           concat(col("text"), lit(" shuffle data")).as("text"),
           lit(null).cast("string").as("old_text"))
       graft.streaming.IndexMaintenanceStream.applyBatch(
-        s, door, dir, pipeline.Bm25Index.write, b1, 1L, Some(oldV),
-            knownDeltaEmpty = Some(true))
+        s, door, dir, pipeline.Bm25Index.write, b1, 1L, Some(oldV))
       val (live, stats) = graft.streaming.IndexMaintenanceStream
         .currentView(s, door, dir)
       // eager-checkpoint the tiny RESULT so nothing downstream reads
@@ -3351,21 +3341,17 @@ object PipelineQueries {
           graft.streaming.IndexMaintenanceStream.bootstrap(
             s, bmDoor, bmDir, pipeline.Bm25Index.write, docs)
           graft.streaming.IndexMaintenanceStream.applyBatch(
-            s, bmDoor, bmDir, pipeline.Bm25Index.write, b0, 0L, Some(oldV),
-            knownDeltaEmpty = Some(false))
+            s, bmDoor, bmDir, pipeline.Bm25Index.write, b0, 0L, Some(oldV))
           graft.streaming.IndexMaintenanceStream.applyBatch(
-            s, bmDoor, bmDir, pipeline.Bm25Index.write, b1, 1L, Some(oldV),
-            knownDeltaEmpty = Some(true))
+            s, bmDoor, bmDir, pipeline.Bm25Index.write, b1, 1L, Some(oldV))
         },
         () => {
           graft.streaming.IndexMaintenanceStream.bootstrap(
             s, ivfDoor, ivfDir, ivfWrite, emb)
           graft.streaming.IndexMaintenanceStream.applyBatch(
-            s, ivfDoor, ivfDir, ivfWrite, v0, 0L,
-            knownDeltaEmpty = Some(false))
+            s, ivfDoor, ivfDir, ivfWrite, v0, 0L)
           graft.streaming.IndexMaintenanceStream.applyBatch(
-            s, ivfDoor, ivfDir, ivfWrite, v1, 1L,
-            knownDeltaEmpty = Some(true))
+            s, ivfDoor, ivfDir, ivfWrite, v1, 1L)
         })
       // ---- one consistent batched fusion; eager-checkpoint the tiny
       // result so both temp stores can be dropped before the caller's
@@ -3452,22 +3438,19 @@ object PipelineQueries {
           graft.streaming.IndexMaintenanceStream.bootstrap(
             s, bmDoor, bmDir, pipeline.Bm25Index.write, docs)
           graft.streaming.IndexMaintenanceStream.applyBatch(
-            s, bmDoor, bmDir, pipeline.Bm25Index.write, b0, 0L, Some(oldV),
-            knownDeltaEmpty = Some(false))
+            s, bmDoor, bmDir, pipeline.Bm25Index.write, b0, 0L, Some(oldV))
         },
         () => {
           graft.streaming.IndexMaintenanceStream.bootstrap(
             s, pqDoor, pqDir, cellWrite, emb)
           graft.streaming.IndexMaintenanceStream.applyBatch(
-            s, pqDoor, pqDir, cellWrite, v0, 0L,
-            knownDeltaEmpty = Some(false))
+            s, pqDoor, pqDir, cellWrite, v0, 0L)
         },
         () => {
           graft.streaming.IndexMaintenanceStream.bootstrap(
             s, vecDoor, vecDir, cellWrite, emb)
           graft.streaming.IndexMaintenanceStream.applyBatch(
-            s, vecDoor, vecDir, cellWrite, v0, 0L,
-            knownDeltaEmpty = Some(false))
+            s, vecDoor, vecDir, cellWrite, v0, 0L)
         })
       // ---- one consistent code-tier serving read
       val result = pipeline.Dedup.checkpointCorpus(
@@ -3539,15 +3522,13 @@ object PipelineQueries {
           graft.streaming.IndexMaintenanceStream.bootstrap(
             s, bmDoor, bmDir, pipeline.Bm25Index.write, docs)
           graft.streaming.IndexMaintenanceStream.applyBatch(
-            s, bmDoor, bmDir, pipeline.Bm25Index.write, b0, 0L, Some(oldV),
-            knownDeltaEmpty = Some(false))
+            s, bmDoor, bmDir, pipeline.Bm25Index.write, b0, 0L, Some(oldV))
         },
         () => {
           graft.streaming.IndexMaintenanceStream.bootstrap(
             s, sq8Door, sq8Dir, cellWrite, emb)
           graft.streaming.IndexMaintenanceStream.applyBatch(
-            s, sq8Door, sq8Dir, cellWrite, v0, 0L,
-            knownDeltaEmpty = Some(false))
+            s, sq8Door, sq8Dir, cellWrite, v0, 0L)
         })
       val result = pipeline.Dedup.checkpointCorpus(
         pipeline.Retrieval.storeHybrid(s, bmDoor, bmDir, 64,
@@ -3620,22 +3601,19 @@ object PipelineQueries {
           graft.streaming.IndexMaintenanceStream.bootstrap(
             s, bmDoor, bmDir, pipeline.Bm25Index.write, docs)
           graft.streaming.IndexMaintenanceStream.applyBatch(
-            s, bmDoor, bmDir, pipeline.Bm25Index.write, b0, 0L, Some(oldV),
-            knownDeltaEmpty = Some(false))
+            s, bmDoor, bmDir, pipeline.Bm25Index.write, b0, 0L, Some(oldV))
         },
         () => {
           graft.streaming.IndexMaintenanceStream.bootstrap(
             s, sq8Door, sq8Dir, cellWrite, emb)
           graft.streaming.IndexMaintenanceStream.applyBatch(
-            s, sq8Door, sq8Dir, cellWrite, v0, 0L,
-            knownDeltaEmpty = Some(false))
+            s, sq8Door, sq8Dir, cellWrite, v0, 0L)
         },
         () => {
           graft.streaming.IndexMaintenanceStream.bootstrap(
             s, vecDoor, vecDir, cellWrite, emb)
           graft.streaming.IndexMaintenanceStream.applyBatch(
-            s, vecDoor, vecDir, cellWrite, v0, 0L,
-            knownDeltaEmpty = Some(false))
+            s, vecDoor, vecDir, cellWrite, v0, 0L)
         })
       val result = pipeline.Dedup.checkpointCorpus(
         pipeline.Retrieval.storeHybrid(s, bmDoor, bmDir, 64,
@@ -3714,22 +3692,19 @@ object PipelineQueries {
           graft.streaming.IndexMaintenanceStream.bootstrap(
             s, bmDoor, bmDir, pipeline.Bm25Index.write, docs)
           graft.streaming.IndexMaintenanceStream.applyBatch(
-            s, bmDoor, bmDir, pipeline.Bm25Index.write, b0, 0L, Some(oldV),
-            knownDeltaEmpty = Some(false))
+            s, bmDoor, bmDir, pipeline.Bm25Index.write, b0, 0L, Some(oldV))
         },
         () => {
           graft.streaming.IndexMaintenanceStream.bootstrap(
             s, pqDoor, pqDir, cellWrite, emb)
           graft.streaming.IndexMaintenanceStream.applyBatch(
-            s, pqDoor, pqDir, cellWrite, v0, 0L,
-            knownDeltaEmpty = Some(false))
+            s, pqDoor, pqDir, cellWrite, v0, 0L)
         },
         () => {
           graft.streaming.IndexMaintenanceStream.bootstrap(
             s, vecDoor, vecDir, cellWrite, emb)
           graft.streaming.IndexMaintenanceStream.applyBatch(
-            s, vecDoor, vecDir, cellWrite, v0, 0L,
-            knownDeltaEmpty = Some(false))
+            s, vecDoor, vecDir, cellWrite, v0, 0L)
         })
       val result = pipeline.Dedup.checkpointCorpus(
         pipeline.Retrieval.storeHybrid(s, bmDoor, bmDir, 64,
@@ -5930,15 +5905,19 @@ object PipelineQueries {
              + (SELECT COUNT(*) FROM kept) AS index_size"""),
 
     "dedup_incremental_stream" ->
+      // MATERIALIZED: DuckDB 1.0 otherwise inlines the multiply-referenced
+      // pair and edge CTEs into the recursive steps, and the query runs
+      // out of memory
       (s"""WITH RECURSIVE $minhashCtes,
-         cross1 AS (SELECT DISTINCT idb AS did FROM mest
+         mestm AS MATERIALIZED (SELECT * FROM mest),
+         cross1 AS (SELECT DISTINCT idb AS did FROM mestm
            WHERE ida < 250 AND idb >= 250 AND idb < 400
              AND est_jaccard_ppm >= 500000),
-         w1pairs AS (SELECT ida, idb FROM mest
+         w1pairs AS (SELECT ida, idb FROM mestm
            WHERE ida >= 250 AND idb < 400 AND est_jaccard_ppm >= 500000
              AND ida NOT IN (SELECT did FROM cross1)
              AND idb NOT IN (SELECT did FROM cross1)),
-         w1edges AS (SELECT ida AS src, idb AS dst FROM w1pairs
+         w1edges AS MATERIALIZED (SELECT ida AS src, idb AS dst FROM w1pairs
            UNION ALL SELECT idb, ida FROM w1pairs),
          reach1 AS (SELECT DISTINCT src AS did, src AS label FROM w1edges
            UNION SELECT e.dst AS did, r.label FROM reach1 r
@@ -5952,14 +5931,14 @@ object PipelineQueries {
              AND doc_id NOT IN (SELECT did FROM losers1)),
          idx1 AS (SELECT doc_id FROM documents WHERE doc_id < 250
            UNION ALL SELECT doc_id FROM kept1),
-         cross2 AS (SELECT DISTINCT idb AS did FROM mest
+         cross2 AS (SELECT DISTINCT idb AS did FROM mestm
            WHERE idb >= 400 AND est_jaccard_ppm >= 500000
              AND ida IN (SELECT doc_id FROM idx1)),
-         w2pairs AS (SELECT ida, idb FROM mest
+         w2pairs AS (SELECT ida, idb FROM mestm
            WHERE ida >= 400 AND est_jaccard_ppm >= 500000
              AND ida NOT IN (SELECT did FROM cross2)
              AND idb NOT IN (SELECT did FROM cross2)),
-         w2edges AS (SELECT ida AS src, idb AS dst FROM w2pairs
+         w2edges AS MATERIALIZED (SELECT ida AS src, idb AS dst FROM w2pairs
            UNION ALL SELECT idb, ida FROM w2pairs),
          reach2 AS (SELECT DISTINCT src AS did, src AS label FROM w2edges
            UNION SELECT e.dst AS did, r.label FROM reach2 r

@@ -1204,8 +1204,7 @@ object ScaleBench {
                adds: org.apache.spark.sql.DataFrame): String = {
         st = pipeline.Maintenance.tick(door, store, st,
           adds = adds, deletes = dels, updates = newsU,
-          updatesOld = Some(oldsU),
-          checkpoint = df => df.localCheckpoint(true))
+          updatesOld = Some(oldsU))
         if (pipeline.Dedup.compactNeeded(st.tombstones)) compactSignals += 1
         pin() // the tombstone checkpoint must survive the stage sweep
         val sr = st.stats.get.collect().head
@@ -1311,8 +1310,7 @@ object ScaleBench {
                 upds: org.apache.spark.sql.DataFrame,
                 adds: org.apache.spark.sql.DataFrame): String = {
         st = pipeline.Maintenance.tick(door, store, st,
-          adds = adds, deletes = dels, updates = upds,
-          checkpoint = df => df.localCheckpoint(true))
+          adds = adds, deletes = dels, updates = upds)
         pin()
         s"tombstones=${st.tombstones.count()} gen=${st.nextGen}"
       }
@@ -1415,8 +1413,7 @@ object ScaleBench {
                 upds: org.apache.spark.sql.DataFrame,
                 adds: org.apache.spark.sql.DataFrame): String = {
         st = pipeline.Maintenance.tick(door, store, st,
-          adds = adds, deletes = dels, updates = upds,
-          checkpoint = df => df.localCheckpoint(true))
+          adds = adds, deletes = dels, updates = upds)
         pin()
         s"tombstones=${st.tombstones.count()} gen=${st.nextGen}"
       }

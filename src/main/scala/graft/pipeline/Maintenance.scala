@@ -455,26 +455,27 @@ object Maintenance {
     * with the same guards. Writes are state-sized (tombstone table +
     * a small text file), never store-sized. */
   def saveState(st: State, dir: String,
-                extraProps: Map[String, String] = Map.empty,
-                tombstonesKnownEmpty: Boolean = false): Long = {
-    // a caller that KNOWS the tombstone table is empty (bootstrap — its
-    // state is initialState's zero-row frame by construction) skips the
-    // parquet write whole: an empty write still pays a full Spark write
-    // action, and every lifecycle store pays it once per bootstrap. The
-    // meta carries `tombEmpty` and loadState rebuilds the empty frame
-    // from `tombSchema` as a LocalRelation — zero jobs both sides.
+                extraProps: Map[String, String] = Map.empty): Long = {
+    // a tombstone table the optimizer folds to an empty LocalRelation
+    // (initialState's and a compaction's emptyTombstones, or a tick
+    // whose guard legs all fold away) skips the parquet write whole: an
+    // empty write still pays a full Spark write action, and every
+    // lifecycle store pays it once per bootstrap. The meta carries
+    // `tombEmpty` and loadState rebuilds the empty frame from
+    // `tombSchema` as a LocalRelation — zero jobs both sides.
     //
     // RETURNS the tombstone row count OBSERVED inside the write action
-    // itself (0 when known-empty, -1 when the observation timed out):
-    // the compaction trigger ([[Dedup.compactNeededFromCount]] =
+    // itself (0 when provably empty, -1 when the observation timed
+    // out): the compaction trigger ([[Dedup.compactNeededFromCount]] =
     // count × bytesPerRow vs threshold) needs exactly this number, and
     // riding it on the write lets the streaming applyBatch skip the
     // trigger's separate count() job per batch. Bounded, logged and
     // counted await (IndexMaintenanceStream.observedRows, shared with
     // VersionedStore.append) — a timeout degrades to the caller
     // re-counting, never a hang or a silently wrong decision.
+    val tombEmpty = provablyEmpty(st.tombstones)
     var observed = 0L
-    if (!tombstonesKnownEmpty) {
+    if (!tombEmpty) {
       val obs = org.apache.spark.sql.Observation()
       // one output file: the table is BOUNDED by the compaction trigger
       // (~10 MB default — compactThresholdBytes), so a single-partition
@@ -504,7 +505,7 @@ object Maintenance {
     props.setProperty("nextGen", st.nextGen.toString)
     props.setProperty("compactions", st.compactions.toString)
     props.setProperty("tombSchema", st.tombstones.schema.toDDL)
-    if (tombstonesKnownEmpty) props.setProperty("tombEmpty", "1")
+    if (tombEmpty) props.setProperty("tombEmpty", "1")
     // caller-supplied identity lines (the streaming layer rides the
     // door's quantizer hash here, so the per-batch pointer read IS the
     // identity check); names must not collide with the fixed keys
@@ -558,11 +559,7 @@ object Maintenance {
     * load already pays, instead of a second file open. */
   def loadStateWithProps(spark: SparkSession, dir: String)
       : (State, java.util.Properties) = {
-    val meta = new java.util.Properties()
-    val metaPath = new org.apache.hadoop.fs.Path(s"$dir/state.meta")
-    val hfs = metaPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val in = hfs.open(metaPath)
-    try meta.load(in) finally in.close()
+    val meta = stateMeta(spark, dir)
     // schema-supplied reads skip the footer-inference job; a snapshot
     // from before the schemas rode in the meta falls back to inference
     def rd(sub: String, key: String) = {
@@ -584,28 +581,62 @@ object Maintenance {
       else None
     }
     val stats = inlineStats.orElse {
-      if (hfs.exists(new org.apache.hadoop.fs.Path(s"$dir/stats")))
+      val statsPath = new org.apache.hadoop.fs.Path(s"$dir/stats")
+      if (statsPath.getFileSystem(spark.sessionState.newHadoopConf())
+          .exists(statsPath))
         Some(rd("stats", "statsSchema"))
       else None
     }
-    // a snapshot saved with tombstonesKnownEmpty carries no tombstone
-    // parquet at all: rebuild the empty frame from the schema line as a
-    // LocalRelation (zero Spark jobs, exactly what the writer held)
+    // a snapshot whose tombstones were provably empty carries no
+    // tombstone parquet at all: rebuild the empty frame from the schema
+    // line as a LocalRelation (zero Spark jobs, exactly what the writer
+    // held)
     val tombs =
       if (meta.getProperty("tombEmpty") != null)
-        spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType.fromDDL(
-            meta.getProperty("tombSchema")))
+        emptyFrame(spark, meta.getProperty("tombSchema"))
       else rd("tombstones", "tombSchema")
     (State(tombs, stats,
       meta.getProperty("nextGen").toLong,
       meta.getProperty("compactions").toLong), meta)
   }
 
+  /** A snapshot's raw `state.meta` properties, read through the Hadoop
+    * FS layer — the one read behind [[loadStateWithProps]] and the
+    * streaming replay skip's identity check. */
+  private[graft] def stateMeta(spark: SparkSession, dir: String)
+      : java.util.Properties = {
+    val meta = new java.util.Properties()
+    val metaPath = new org.apache.hadoop.fs.Path(s"$dir/state.meta")
+    val in = metaPath.getFileSystem(spark.sessionState.newHadoopConf())
+      .open(metaPath)
+    try meta.load(in) finally in.close()
+    meta
+  }
+
+  /** The zero-row tombstone table: an empty LocalRelation, so
+    * [[provablyEmpty]] sees it and [[saveState]] writes no parquet. */
   def emptyTombstones(spark: SparkSession, door: Door): DataFrame =
-    spark.range(0).select(col("id").as(door.idName),
-      col("id").as("upto_gen"))
+    emptyFrame(spark,
+      s"`${door.idName}` BIGINT NOT NULL,upto_gen BIGINT NOT NULL")
+
+  /** A zero-row LocalRelation of the schema `ddl` names. */
+  private def emptyFrame(spark: SparkSession, ddl: String): DataFrame =
+    spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      org.apache.spark.sql.types.StructType.fromDDL(ddl))
+
+  /** True only when Catalyst's optimized plan of `df` is an empty
+    * LocalRelation — a fact the optimizer PROVED (a literal-op branch
+    * filtered to false, `limit(0)`, local rows with no match), never a
+    * caller's word. Planning only: runs no Spark job. A frame that is
+    * empty at runtime but not provably so answers false, and its
+    * writer observes the zero rows instead. */
+  private def provablyEmpty(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        l.data.isEmpty && !l.isStreaming
+      case _ => false
+    }
 
   /** One-row frame of literal columns over a LocalRelation — the shape
     * [[snap]] and [[loadState]] build stats from. A LocalRelation (not
@@ -647,6 +678,16 @@ object Maintenance {
     * text funds the negative correction, `Bm25Index.delete`'s
     * contract); stats-free doors ignore it.
     *
+    * `callerPersists`: the caller saves the returned state right after
+    * the tick (the streaming applyBatch). Its tombstones then skip the
+    * eager localCheckpoint — the save walks the one-batch lineage once
+    * and the next tick reloads a parquet scan, so the union tower the
+    * checkpoint guards against (the in-memory FrameStore soak shape)
+    * cannot form — and the compaction trigger is left to the caller,
+    * which reads the tombstone count off the save's observation instead
+    * of paying compactNeeded's separate count() job: same numbers, same
+    * decision, one fewer action per batch.
+    *
     * Cost: O(delta) index/stats work + tombstone-sized guard joins +
     * one tombstone-sized count; the store's existing rows are read only
     * by a fired compaction. */
@@ -654,9 +695,7 @@ object Maintenance {
            adds: DataFrame, deletes: DataFrame, updates: DataFrame,
            updatesOld: Option[DataFrame] = None,
            compactThresholdBytes: Long = 10L << 20,
-           checkpoint: DataFrame => DataFrame = _.localCheckpoint(),
-           deltaEmpty: Boolean = false,
-           deferCompaction: Boolean = false)
+           callerPersists: Boolean = false)
       : State = {
     val spark = st.tombstones.sparkSession
     val gen = st.nextGen
@@ -705,11 +744,13 @@ object Maintenance {
     // ---- one appended delta, one generation stamp; adds and fresh
     // updates each pass the door ONCE (indexWithStats) — their rows
     // feed the append and their stats feed the fold from the same
-    // parse, instead of tokenizing every delta a second time. A caller
-    // that KNOWS adds and updates are row-free (`deltaEmpty` — the
-    // streaming tailer's delete-only op census) skips the append job
-    // and the zero-contribution stats legs whole: a retention-
-    // enforcement feed pays no per-batch write at all.
+    // parse, instead of tokenizing every delta a second time. When the
+    // optimizer proves adds and updates row-free (a delete-only batch of
+    // local rows or literal-op branches) the append job and the
+    // zero-contribution stats legs drop whole: a retention-enforcement
+    // feed pays no per-batch write at all. Any other batch is indexed
+    // and appended (the versioned store drops a delta it observes to be
+    // empty).
     // REJECTED after measurement (r19): indexing the UNION in one
     // door pass (index(freshNewU ∪ adds)) is row-identical and was
     // briefly adopted to share one parse checkpoint — but it made the
@@ -718,7 +759,7 @@ object Maintenance {
     // measured 0.74 s -> 1.92 s with the union delta, A/B at sf0.1),
     // wiping out the saved action. Keep the two per-part passes.
     val (addStats, updStats) =
-      if (deltaEmpty) (None, None)
+      if (provablyEmpty(adds) && provablyEmpty(updates)) (None, None)
       else {
         val (addRows, aS) = door.indexWithStats(adds)
         val (updRows, uS) = door.indexWithStats(freshNewU)
@@ -745,16 +786,10 @@ object Maintenance {
     // store reporting physical fragmentation (add-heavy feeds, which
     // never grow tombstones but accrete one delta per batch — the
     // size-tiered bound that keeps the serving plan's width flat)
-    var tombs2 = checkpoint(
-      demoted.unionByName(delTombs).unionByName(updTombs))
+    var tombs2 = demoted.unionByName(delTombs).unionByName(updTombs)
+    if (!callerPersists) tombs2 = tombs2.localCheckpoint()
     var compactions = st.compactions
-    // `deferCompaction`: a caller that PERSISTS the state right after
-    // the tick (the streaming applyBatch) runs this same two-sided
-    // trigger itself, reading the tombstone count off the snapshot
-    // write's observation instead of paying compactNeeded's separate
-    // count() job — same numbers, same decision, one fewer action per
-    // batch. In-memory callers (FrameStore soaks) keep the inline check.
-    if (!deferCompaction &&
+    if (!callerPersists &&
         (Dedup.compactNeeded(tombs2, compactThresholdBytes) ||
           store.fragmented)) {
       store.rewrite(door.applyTombstones(store.rows, tombs2))

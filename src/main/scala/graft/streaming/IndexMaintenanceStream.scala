@@ -190,19 +190,6 @@ object IndexMaintenanceStream {
       }
     }
 
-  /** One state snapshot's raw meta properties — the replay-skip path's
-    * identity read (the normal path gets them from
-    * [[Maintenance.loadStateWithProps]] for free). */
-  private def readStateProps(spark: SparkSession, snapDir: String)
-      : java.util.Properties = {
-    val p = new org.apache.hadoop.fs.Path(s"$snapDir/state.meta")
-    val hfs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val props = new java.util.Properties()
-    val in = hfs.open(p)
-    try props.load(in) finally in.close()
-    props
-  }
-
   /** A [[Maintenance.Store]] over the versioned layout: rows = the
     * EFFECTIVE base (newest `base_*` named ≤ `upToBatch` — resolved by
     * listing, see the crash contract above) ∪ committed deltas
@@ -317,8 +304,7 @@ object IndexMaintenanceStream {
       // whose rows the guards dropped) leaves an empty partitioned dir
       // with no data files that every later read chokes on — drop it
       // by the observed count, without r14's recursive post-write
-      // listing walk. (A batch KNOWN delete-only skips this call
-      // entirely — the tick's deltaEmpty door.)
+      // listing walk.
       //
       // WRITER CONTRACT (the `writer` parameter of mutationStream /
       // applyBatch): it must execute exactly ONE Spark action over the
@@ -386,7 +372,6 @@ object IndexMaintenanceStream {
       * entirely if a LATER batch's pointer already committed (never
       * regress). */
     def finalizeCommit(): Unit = {
-      val (hfs, root) = fs
       val (base, baseBatch, _) = layout
       val ptrBatch = DocsStream.readPointer(spark, storeDir)
         .map(parseBatch).getOrElse(Long.MinValue)
@@ -395,19 +380,21 @@ object IndexMaintenanceStream {
         DocsStream.swapPointer(spark, storeDir, base)
       // the newest RETIRED base bounds the grace tier; with no retired
       // base yet (first compaction pending) nothing but .tmp is stale
-      val prevBatch = graceFloor
-      var swept = false
-      dirNames.foreach { n =>
-        val stale = n != base &&
-          (n.endsWith(".tmp") ||
-            (n.startsWith("base_") && parseBatch(n) < prevBatch) ||
-            (n.startsWith("delta_b") && parseBatch(n) <= prevBatch))
-        if (stale) {
-          hfs.delete(new org.apache.hadoop.fs.Path(root, n), true)
-          swept = true
-        }
-      }
-      if (swept) invalidate()
+      sweep(base, graceFloor)
+    }
+
+    /** Delete every dir but `base` that the base at batch `floor`
+      * supersedes: bases older than it, deltas at or below it, and
+      * `.tmp` stagings. */
+    private def sweep(base: String, floor: Long): Unit = {
+      val (hfs, root) = fs
+      val stale = dirNames.filter(n => n != base &&
+        (n.endsWith(".tmp") ||
+          (n.startsWith("base_") && parseBatch(n) < floor) ||
+          (n.startsWith("delta_b") && parseBatch(n) <= floor)))
+      stale.foreach(n =>
+        hfs.delete(new org.apache.hadoop.fs.Path(root, n), true))
+      if (stale.nonEmpty) invalidate()
     }
 
     /** The reader-grace boundary: batch of the newest RETIRED base —
@@ -435,20 +422,8 @@ object IndexMaintenanceStream {
       * BOTH halves so a later `viewAt` below the boundary fails fast
       * with the retention-window message it promises. */
     private[streaming] def vacuum(): Long = {
-      val (hfs, root) = fs
       val (base, baseBatch, _) = layout
-      var swept = false
-      dirNames.foreach { n =>
-        val stale = n != base &&
-          (n.endsWith(".tmp") ||
-            (n.startsWith("base_") && parseBatch(n) < baseBatch) ||
-            (n.startsWith("delta_b") && parseBatch(n) <= baseBatch))
-        if (stale) {
-          hfs.delete(new org.apache.hadoop.fs.Path(root, n), true)
-          swept = true
-        }
-      }
-      if (swept) invalidate()
+      sweep(base, baseBatch)
       baseBatch
     }
   }
@@ -481,11 +456,9 @@ object IndexMaintenanceStream {
     // every later batch's — applyBatch re-stamps it), so the identity
     // check rides the state read every apply/view already pays; the
     // full tables also persist as their own file for loadQuantizer
-    // initialState's tombstone table is the zero-row frame by
-    // construction — skip its parquet write (one Spark write action per
-    // bootstrapped store; loadState rebuilds the empty frame meta-side)
-    Maintenance.saveState(st, s"$dir/state/v_boot", quantizerProps(door),
-      tombstonesKnownEmpty = true)
+    // (initialState's tombstone table is provably empty, so the save
+    // writes no parquet for it)
+    Maintenance.saveState(st, s"$dir/state/v_boot", quantizerProps(door))
     door.quantizer.foreach { q =>
       Maintenance.Quantizer.save(spark, quantizerPath(dir), q)
     }
@@ -507,8 +480,7 @@ object IndexMaintenanceStream {
                  oldVersion: Option[DataFrame => DataFrame] = None,
                  compactThresholdBytes: Long = 10L << 20,
                  maxDeltas: Int = 16,
-                 maxDeltaBytesRatio: Double = 1.0,
-                 knownDeltaEmpty: Option[Boolean] = None): Unit = {
+                 maxDeltaBytesRatio: Double = 1.0): Unit = {
     val applied = DocsStream.readPointer(spark, s"$dir/state")
     val store = new VersionedStore(spark, s"$dir/store", writer, batchId,
       maxDeltas, maxDeltaBytesRatio)
@@ -517,7 +489,7 @@ object IndexMaintenanceStream {
       // between the state commit and the deferred store housekeeping
       // leaves a committed compaction unswept — finish it here (the
       // identity check rides the committed snapshot's meta)
-      requireQuantizerMatch(door, Option(readStateProps(spark,
+      requireQuantizerMatch(door, Option(Maintenance.stateMeta(spark,
         s"$dir/state/v_b$batchId").getProperty("quantizerHash")), dir)
       store.finalizeCommit()
       return
@@ -531,33 +503,14 @@ object IndexMaintenanceStream {
     def part(op: String) =
       batch.where(col("op") === op).select(payload: _*)
     val updates = part("update")
-    // a delete-only batch (the normal shape of a retention-enforcement
-    // feed) appends nothing — a caller that KNOWS the batch's op census
-    // says so (`knownDeltaEmpty`: Some(true) asserts NO add/update rows
-    // — violating that loses the rows; Some(false) asserts some may be
-    // present — always safe) and the probe job disappears; otherwise
-    // one short-circuiting delta-sized probe (limit 1 stops at the
-    // first add/update row) and the tick skips the delta write job
-    // whole: no empty parquet write, no delta dir to drop (r14 paid a
-    // full write-then-probe per such batch)
-    val deltaEmpty = knownDeltaEmpty.getOrElse(
-      batch.where(col("op").isin("add", "update"))
-        .limit(1).count() == 0L)
-    // checkpoint = identity: the tick's default eager localCheckpoint
-    // of the tombstone union costs one job per batch to truncate a
-    // lineage that HERE never accumulates — this batch's tombstones are
-    // persisted by saveState and the next batch reloads them as a
-    // parquet scan, so the union tower the checkpoint guards against
-    // (the in-memory FrameStore soak shape) cannot form. The
-    // saveState write walks the one-batch lineage once —
-    // delta/tombstone-sized.
+    // a delete-only batch the optimizer can prove so (local rows,
+    // literal-op branches) appends nothing; any other batch is indexed
+    // and appended, and append drops a delta it observes to be empty
     val st2 = Maintenance.tick(door, store, st,
       adds = part("add"), deletes = part("delete"), updates = updates,
       updatesOld = oldVersion.map(f => f(updates)),
       compactThresholdBytes = compactThresholdBytes,
-      checkpoint = identity,
-      deltaEmpty = deltaEmpty,
-      deferCompaction = true)
+      callerPersists = true)
     // persist the snapshot FIRST: the compaction trigger's tombstone
     // count is OBSERVED inside this same write action (guide §1.4 —
     // one action carries both numbers), so a non-compacting batch (the
@@ -583,8 +536,7 @@ object IndexMaintenanceStream {
       val cleared = st2.copy(
         tombstones = Maintenance.emptyTombstones(spark, door),
         compactions = st2.compactions + 1)
-      Maintenance.saveState(cleared, snapDir, qProps,
-        tombstonesKnownEmpty = true)
+      Maintenance.saveState(cleared, snapDir, qProps)
       // the superseded tombstone rows are unreachable (the meta now
       // says tombEmpty) — drop the dir rather than strand it
       val sp = new org.apache.hadoop.fs.Path(s"$snapDir/tombstones")
@@ -600,15 +552,22 @@ object IndexMaintenanceStream {
     // retired base's batch) stay until the next compaction advances
     // the floor — bounded by the same size-tiered trigger that bounds
     // the delta dirs, and state-sized (tombstones + 1 stats row) each.
-    val floor = store.graceFloor
+    // (This batch's own snapshot is never below the floor: the floor is
+    // a retired base's batch, older than the effective base ≤ batchId.)
+    sweepStates(spark, dir, store.graceFloor)
+    store.finalizeCommit()
+  }
+
+  /** Delete the state snapshots of batches below `floor`. */
+  private def sweepStates(spark: SparkSession, dir: String,
+                          floor: Long): Unit = {
     val stRoot = new org.apache.hadoop.fs.Path(s"$dir/state")
     val hfs = stRoot.getFileSystem(spark.sessionState.newHadoopConf())
     hfs.listStatus(stRoot).foreach { s0 =>
       val n = s0.getPath.getName
-      if (s0.isDirectory && n.startsWith("v") && n != s"v_b$batchId" &&
-          parseBatch(n) < floor) hfs.delete(s0.getPath, true)
+      if (s0.isDirectory && n.startsWith("v") && parseBatch(n) < floor)
+        hfs.delete(s0.getPath, true)
     }
-    store.finalizeCommit()
   }
 
   /** The tailer: one [[applyBatch]] per micro-batch. */
@@ -660,13 +619,7 @@ object IndexMaintenanceStream {
     val store = new VersionedStore(spark, s"$dir/store",
       (_, _, _) => sys.error("vacuum never writes"), committed)
     val boundary = store.vacuum()
-    val stRoot = new org.apache.hadoop.fs.Path(s"$dir/state")
-    val hfs = stRoot.getFileSystem(spark.sessionState.newHadoopConf())
-    hfs.listStatus(stRoot).foreach { s0 =>
-      val n = s0.getPath.getName
-      if (s0.isDirectory && n.startsWith("v") && parseBatch(n) < boundary)
-        hfs.delete(s0.getPath, true)
-    }
+    sweepStates(spark, dir, boundary)
     boundary
   }
 
@@ -758,9 +711,7 @@ object IndexMaintenanceStream {
               writer: (DataFrame, String, String) => Unit,
               fetch: Long => DataFrame, servingDir: String, asOf: Long,
               oldVersion: Option[DataFrame => DataFrame] = None,
-              graceMs: Long = 5000, pollMs: Long = 25,
-              knownDeltaEmpty: Long => Option[Boolean] = _ => None)
-      : Long = {
+              graceMs: Long = 5000, pollMs: Long = 25): Long = {
     val cur = DocsStream.readPointer(spark, servingDir)
     // a replay of a COMPLETED cutover is a no-op (crash after phase 5)
     if (cur.contains(newDir)) return committedBatch(spark, newDir)
@@ -771,12 +722,8 @@ object IndexMaintenanceStream {
     def drainTo(h: Long): Unit = {
       var b = math.max(head(newDir), asOf) + 1
       while (b <= h) {
-        // the replayed batch's op census is the FEED's knowledge
-        // (`fetch(b)` is its log): a feed that knows batch b carried no
-        // add/update rows passes the hint through and the replay skips
-        // the delta-empty probe job — same contract as applyBatch's
         applyBatch(spark, newDoor, newDir, writer, fetch(b), b,
-          oldVersion, knownDeltaEmpty = knownDeltaEmpty(b))
+          oldVersion)
         b += 1
       }
     }

@@ -835,7 +835,7 @@ class IndexMaintenanceStreamSpec extends AnyFunSuite {
     Bm25Index.write(restored, s"$dir/store/base_b0", "overwrite")
     Maintenance.saveState(
       Maintenance.State(Maintenance.emptyTombstones(spark, door), None, 2L),
-      s"$dir/state/v_b0", tombstonesKnownEmpty = true)
+      s"$dir/state/v_b0")
     graft.streaming.DocsStream.swapPointer(spark, s"$dir/state", "v_b0")
     // the effective base changed (base_boot -> base_b0): the cached
     // schema must NOT be applied — a stale-schema read would silently
@@ -847,5 +847,97 @@ class IndexMaintenanceStreamSpec extends AnyFunSuite {
     assert(v1.where(col("provenance") === "restore").count() ===
       restored.count())
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
+  test("batches the optimizer cannot prove delete-only take the append " +
+      "path and serve exactly what proven ones do: BM25 and IVF stores " +
+      "fed the same batches as local rows, as parquet reads, and with " +
+      "the proving rules excluded end identical, leave no empty delta " +
+      "dir and time out no observation") {
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import graft.pipeline.Similarity
+    def vec(id: Long, v: Int): Array[Float] =
+      Array.tabulate(6)(d => ((id * 31 + v * 7 + d * 13) % 100) / 50.0f - 1f)
+    val bmBatches = Seq(
+      (40L until 44L).map(id => ("add", id, 0, Option.empty[Int])) ++
+        (0L until 3L).map(id => ("delete", id, 0, None)) ++
+        (10L until 13L).map(id => ("update", id, 1, Some(0))),
+      (20L until 24L).map(id => ("delete", id, 0, None)))
+    val ivfBatches = Seq(
+      (40L until 44L).map(id => ("add", id, 0)) ++
+        (0L until 3L).map(id => ("delete", id, 0)) ++
+        (10L until 13L).map(id => ("update", id, 1)),
+      (20L until 24L).map(id => ("delete", id, 0)))
+    val cents = Similarity.centroids(
+      (0L until 40L).map(id => (id, vec(id, 0))).toDF("vec_id", "embedding"),
+      4)
+    val bmDoor = new Maintenance.Bm25Door(col("text"), nBuckets)
+    val ivfDoor = new Maintenance.IvfDoor(cents)
+    def ivfWrite(df: DataFrame, d: String, mode: String): Unit =
+      df.write.partitionBy("cell").mode(mode).parquet(d)
+    // the stores, fed through session `s`; `viaParquet` round-trips each
+    // batch through parquet so its `op` column is data
+    def feed(s: SparkSession, viaParquet: Boolean)
+        : Seq[Seq[Seq[Any]]] = {
+      import s.implicits._
+      val root = java.nio.file.Files.createTempDirectory("imunproven")
+        .toString
+      def in(df: DataFrame, name: String): DataFrame =
+        if (!viaParquet) df
+        else {
+          df.write.parquet(s"$root/in/$name")
+          s.read.parquet(s"$root/in/$name")
+        }
+      IndexMaintenanceStream.bootstrap(s, bmDoor, s"$root/bm",
+        Bm25Index.write, (0L until 40L).map(id => (id, text(id, 0)))
+          .toDF("doc_id", "text"))
+      IndexMaintenanceStream.bootstrap(s, ivfDoor, s"$root/ivf", ivfWrite,
+        (0L until 40L).map(id => (id, vec(id, 0))).toDF("vec_id", "embedding"))
+      bmBatches.zipWithIndex.foreach { case (rows, b) =>
+        IndexMaintenanceStream.applyBatch(s, bmDoor, s"$root/bm",
+          Bm25Index.write, in(rows.map { case (op, id, v, oldV) =>
+            (op, id, text(id, v), oldV.map(text(id, _)).orNull)
+          }.toDF("op", "doc_id", "text", "old_text"), s"bm$b"), b.toLong,
+          Some(oldVersion))
+      }
+      ivfBatches.zipWithIndex.foreach { case (rows, b) =>
+        IndexMaintenanceStream.applyBatch(s, ivfDoor, s"$root/ivf",
+          ivfWrite, in(rows.map { case (op, id, v) => (op, id, vec(id, v))
+          }.toDF("op", "vec_id", "embedding"), s"ivf$b"), b.toLong)
+      }
+      Seq("bm", "ivf").foreach(st => assert(
+        !new java.io.File(s"$root/$st/store/delta_b1").exists(),
+        s"the delete-only batch left a delta dir in the $st store"))
+      val (bmView, bmStats) =
+        IndexMaintenanceStream.currentView(s, bmDoor, s"$root/bm")
+      val (ivfView, _) =
+        IndexMaintenanceStream.currentView(s, ivfDoor, s"$root/ivf")
+      val served = Seq(sortedRows(bmView), sortedRows(bmStats.get),
+        sortedRows(ivfView))
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+      served
+    }
+    // a session whose optimizer cannot fold a filtered local relation
+    // to an empty one: nothing is proven there
+    val noProof = spark.newSession()
+    noProof.conf.set("spark.sql.optimizer.excludedRules",
+      Seq("ConvertToLocalRelation", "PropagateEmptyRelation",
+        "PruneFilters", "OptimizeLimitZero")
+        .map("org.apache.spark.sql.catalyst.optimizer." + _).mkString(","))
+    def addLegFolds(s: SparkSession): Boolean = {
+      import s.implicits._
+      Seq(("delete", 1L)).toDF("op", "doc_id").where(col("op") === "add")
+        .queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+    }
+    assert(addLegFolds(spark) && !addLegFolds(noProof),
+      "the rule exclusion must switch the proof off")
+    val timeouts0 = IndexMaintenanceStream.appendObserveTimeouts.get
+    val proven = feed(spark, viaParquet = false)
+    assert(feed(spark, viaParquet = true) === proven,
+      "parquet-read batches served differently from local rows")
+    assert(feed(noProof, viaParquet = false) === proven,
+      "batches served differently with the proving rules excluded")
+    assert(IndexMaintenanceStream.appendObserveTimeouts.get === timeouts0)
   }
 }

@@ -48,112 +48,132 @@ class JobBudgetSpec extends AnyFunSuite {
         (((i * 31 + d * 13) % 100) / 50.0f) - 1f))
     }.toDF("vec_id", "embedding")
 
-  test("applyBatch action budget: a mixed (non-compacting) mutation " +
-      "batch runs at most 5 Spark actions (4 with the op-census hint); " +
-      "delete-only at most 3 (2 with the hint)") {
+  /** `df` written to parquet at `path` and read back: its `op` column
+    * becomes data the optimizer cannot see through. */
+  private def viaParquet(df: DataFrame, path: String): DataFrame = {
+    df.write.mode("overwrite").parquet(path)
+    spark.read.parquet(path)
+  }
+
+  test("applyBatch action budget (BM25 door): a non-compacting batch " +
+      "the optimizer proves delete-only runs at most 2 Spark actions, " +
+      "any other batch at most 4") {
     val dir = java.nio.file.Files.createTempDirectory("jobbudget").toString
     val door = new Maintenance.Bm25Door(col("text"), nBuckets)
+    val corpus = docs((0L until 60L).map(_ -> 0))
     IndexMaintenanceStream.bootstrap(spark, door, dir, Bm25Index.write,
-      docs((0L until 60L).map(_ -> 0)))
-    val b0 = muts(
-      (60L until 63L).map(id => ("add", id, 0, None)) ++
-        (0L until 3L).map(id => ("delete", id, 0, None)) ++
-        (10L until 13L).map(id => ("update", id, 1, Some(0))))
-    val (acts, jobs) = countActions {
-      IndexMaintenanceStream.applyBatch(spark, door, dir,
-        Bm25Index.write, b0, 0L, Some(oldVersion),
-        maxDeltaBytesRatio = 1e9) // non-compacting by construction
+      corpus)
+    val stored = viaParquet(corpus, s"$dir/in/corpus")
+    var batchId = -1L
+    def acts(batch: DataFrame): (Int, Seq[String]) = {
+      batchId += 1
+      val (a, jobs, sites) = countActionsNamed {
+        IndexMaintenanceStream.applyBatch(spark, door, dir,
+          Bm25Index.write, batch, batchId, Some(oldVersion),
+          maxDeltaBytesRatio = 1e9) // non-compacting by construction
+      }
+      // raw job count is AQE-stage-inflated (one job per materialized
+      // stage) — bounded loosely so a runaway (per-row or per-tombstone
+      // job) still fails while plan-shape drift doesn't flake
+      assert(jobs <= 4 * a + 6, s"applyBatch ran $jobs raw jobs for $a " +
+        "actions")
+      (a, sites)
     }
-    // the r19 floor, itemized: delta-empty probe (1) + the shared
-    // tokenization's lazy checkpoint materializing under its own
-    // execution id (1) + delta append write (1) + stats fold collect
-    // (1) + saveState tombstone write (1) = 5. r19 removed r17's
-    // separate compactNeeded count: the trigger now reads the tombstone
-    // row count OBSERVED inside the saveState write itself (same
-    // number, same decision, one fewer action). r16 paid one more — a
-    // separate saveState stats parquet write; the 1-row stats now ride
-    // in state.meta. r15 paid 4 more on top: a load-time stats snap
-    // collect, an eager tombstone localCheckpoint, and two
-    // schema-inference footer jobs. A regression that adds a per-batch
-    // action must raise this number consciously.
-    assert(acts <= 5, s"applyBatch ran $acts actions — the fixed " +
-      "per-batch machinery budget is 5 (delta probe, checkpoint, " +
-      "append, stats fold, one observed state write)")
-    // raw job count is AQE-stage-inflated (one job per materialized
-    // stage) — bounded loosely so a runaway (per-row or per-tombstone
-    // job) still fails while plan-shape drift doesn't flake
-    assert(jobs <= 4 * acts + 6,
-      s"applyBatch ran $jobs raw jobs for $acts actions")
-    // a DELETE-ONLY batch skips the append write job AND the shared
-    // tokenization checkpoint whole: budget 3
-    val b1 = muts((20L until 23L).map(id => ("delete", id, 0, None)))
-    val (delActs, _) = countActions {
-      IndexMaintenanceStream.applyBatch(spark, door, dir,
-        Bm25Index.write, b1, 1L, Some(oldVersion),
-        maxDeltaBytesRatio = 1e9)
-    }
-    assert(delActs <= 3, s"delete-only applyBatch ran $delActs " +
-      "actions — the deltaEmpty door must skip the append write job")
-    // the OP-CENSUS HINT (knownDeltaEmpty): a caller that knows the
-    // batch's ops skips the probe job too — one fewer action on both
-    // shapes, same store contents (pinned below by the replay-identical
-    // store dirs)
-    val b2 = muts(
-      (70L until 73L).map(id => ("add", id, 0, None)) ++
-        (30L until 33L).map(id => ("delete", id, 0, None)))
-    val (hintActs, _, hintSites) = countActionsNamed {
-      IndexMaintenanceStream.applyBatch(spark, door, dir,
-        Bm25Index.write, b2, 2L, Some(oldVersion),
-        maxDeltaBytesRatio = 1e9, knownDeltaEmpty = Some(false))
-    }
-    assert(hintActs <= 4, s"hinted mixed applyBatch ran $hintActs " +
-      "actions — the op-census hint must remove the probe job: " +
-      hintSites.mkString("; "))
-    val b3 = muts((40L until 43L).map(id => ("delete", id, 0, None)))
-    val (hintDelActs, _) = countActions {
-      IndexMaintenanceStream.applyBatch(spark, door, dir,
-        Bm25Index.write, b3, 3L, Some(oldVersion),
-        maxDeltaBytesRatio = 1e9, knownDeltaEmpty = Some(true))
-    }
-    assert(hintDelActs <= 2, s"hinted delete-only applyBatch ran " +
-      s"$hintDelActs actions — probe and append must both disappear")
+    def mixed(base: Long) = muts(
+      (base + 60L until base + 63L).map(id => ("add", id, 0, None)) ++
+        (base until base + 3L).map(id => ("delete", id, 0, None)) ++
+        (base + 10L until base + 13L).map(id =>
+          ("update", id, 1, Some(0))))
+    def deletes(from: Long) =
+      muts((from until from + 3L).map(id => ("delete", id, 0, None)))
+    // the floor for a batch of local rows that carries add/update rows,
+    // itemized: delta append write (1, the shared tokenization's lazy
+    // checkpoint runs inside it) + stats fold collect (1) + saveState
+    // tombstone write (1) = 3. r19 paid a fourth, a limit-1 probe for
+    // add/update rows, now replaced by the optimizer's own proof. r19
+    // also removed r17's separate compactNeeded count: the trigger reads
+    // the tombstone row count OBSERVED inside the saveState write
+    // itself. r16 paid one more — a separate saveState stats parquet
+    // write; r15 paid 4 more on top: a load-time stats snap collect, an
+    // eager tombstone localCheckpoint, and two schema-inference footer
+    // jobs. A regression that adds a per-batch action must raise a
+    // number here consciously.
+    val (mixedLocal, s0) = acts(mixed(0L))
+    assert(mixedLocal <= 3, s"mixed local-rows applyBatch ran " +
+      s"$mixedLocal actions: ${s0.mkString("; ")}")
+    // delete-only local rows: the add/update legs fold to an empty
+    // LocalRelation, so the checkpoint and the append go: stats fold
+    // collect (1) + tombstone write (1)
+    val (delLocal, s1) = acts(deletes(20L))
+    assert(delLocal <= 2, s"delete-only local-rows applyBatch ran " +
+      s"$delLocal actions: ${s1.mkString("; ")}")
+    // literal-op delete branches over a parquet scan prove empty too
+    val (delLit, s2) = acts(stored
+      .where(col("doc_id") >= 30L && col("doc_id") < 33L)
+      .select(lit("delete").as("op"), col("doc_id"), col("text"),
+        lit(null).cast("string").as("old_text")))
+    assert(delLit <= 2, s"delete-only literal-op applyBatch ran " +
+      s"$delLit actions: ${s2.mkString("; ")}")
+    // op read from parquet: nothing is proven, every shape is indexed
+    // and appended, and over a scan the tokenization checkpoint runs
+    // under its own execution id: checkpoint (1) + append write (1) +
+    // stats fold collect (1) + tombstone write (1) = 4 (r19: 5, the
+    // probe)
+    val (mixedPq, s3) = acts(viaParquet(mixed(100L), s"$dir/in/mixed"))
+    assert(mixedPq <= 4, s"mixed parquet-op applyBatch ran $mixedPq " +
+      s"actions: ${s3.mkString("; ")}")
+    // a delete-only batch whose op is parquet data pays the same append
+    // path on zero rows: the empty tokenization checkpoint (1) + the
+    // append write, whose observed count of 0 drops the delta dir (1) +
+    // stats fold collect (1) + tombstone write (1) = 4 — one more than
+    // r19's probe (1) + stats (1) + tombstone write (1)
+    val (delPq, s4) = acts(viaParquet(deletes(40L), s"$dir/in/deletes"))
+    assert(delPq === 4, s"delete-only parquet-op applyBatch ran " +
+      s"$delPq actions: ${s4.mkString("; ")}")
+    assert(!new java.io.File(s"$dir/store/delta_b$batchId").exists(),
+      "the zero-row delta dir must be dropped by its observed count")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
-  test("knownDeltaEmpty hint changes no store content: hinted and " +
-      "probed replays of the same batches serve identical rows") {
-    val door = new Maintenance.Bm25Door(col("text"), nBuckets)
-    val b0 = muts(
-      (60L until 64L).map(id => ("add", id, 0, None)) ++
-        (0L until 3L).map(id => ("delete", id, 0, None)) ++
-        (10L until 13L).map(id => ("update", id, 1, Some(0))))
-    val b1 = muts((20L until 24L).map(id => ("delete", id, 0, None)))
-    def run(hints: Seq[Option[Boolean]]): (Seq[Seq[Any]], Seq[Seq[Any]]) = {
-      val dir = java.nio.file.Files
-        .createTempDirectory("jobbudget-hint").toString
-      IndexMaintenanceStream.bootstrap(spark, door, dir, Bm25Index.write,
-        docs((0L until 60L).map(_ -> 0)))
-      IndexMaintenanceStream.applyBatch(spark, door, dir,
-        Bm25Index.write, b0, 0L, Some(oldVersion),
-        knownDeltaEmpty = hints(0))
-      IndexMaintenanceStream.applyBatch(spark, door, dir,
-        Bm25Index.write, b1, 1L, Some(oldVersion),
-        knownDeltaEmpty = hints(1))
-      val (live, stats) =
-        IndexMaintenanceStream.currentView(spark, door, dir)
-      val rows = live.orderBy("doc_id", "term", "gen")
-        .collect().map(_.toSeq).toSeq
-      val st = stats.get.collect().map(_.toSeq).toSeq
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-      (rows, st)
+  test("applyBatch action budget (IVF door): the append write replaces " +
+      "the r19 probe — 1 action for a proven delete-only batch, 2 for " +
+      "any other") {
+    val dir = java.nio.file.Files.createTempDirectory("jobbudget-ivf")
+      .toString
+    def vmuts(rows: Seq[(String, Long)]): DataFrame =
+      rows.map { case (op, id) => (op, id,
+        Array.tabulate(8)(d => (((id * 31 + d * 13) % 100) / 50.0f) - 1f))
+      }.toDF("op", "vec_id", "embedding")
+    val emb = embeddings(60)
+    val door = new Maintenance.IvfDoor(Similarity.centroids(emb, 4))
+    def cellWrite(df: DataFrame, dst: String, mode: String): Unit =
+      df.write.partitionBy("cell").mode(mode).parquet(dst)
+    IndexMaintenanceStream.bootstrap(spark, door, dir, cellWrite, emb)
+    var batchId = -1L
+    def acts(batch: DataFrame): (Int, Seq[String]) = {
+      batchId += 1
+      val (a, _, sites) = countActionsNamed {
+        IndexMaintenanceStream.applyBatch(spark, door, dir, cellWrite,
+          batch, batchId, maxDeltaBytesRatio = 1e9)
+      }
+      (a, sites)
     }
-    val (probedRows, probedStats) = run(Seq(None, None))
-    val (hintedRows, hintedStats) =
-      run(Seq(Some(false), Some(true)))
-    assert(hintedRows === probedRows,
-      "the op-census hint changed the served rows")
-    assert(hintedStats === probedStats,
-      "the op-census hint changed the corpus stats")
+    // no stats door: the tombstone write (1), plus the delta append
+    // write (1) unless the optimizer proves the batch delete-only. r19
+    // paid a probe on top of each: 2, 3, 2
+    val (delLocal, s0) = acts(vmuts((0L until 3L).map("delete" -> _)))
+    assert(delLocal === 1, s0.mkString("; "))
+    val (mixedPq, s1) = acts(viaParquet(vmuts(
+      (60L until 63L).map("add" -> _) ++ (3L until 6L).map("delete" -> _)),
+      s"$dir/in/mixed"))
+    assert(mixedPq === 2, s1.mkString("; "))
+    // op as parquet data on a delete-only batch: the write observes
+    // zero rows and drops its dir
+    val (delPq, s2) = acts(viaParquet(
+      vmuts((6L until 9L).map("delete" -> _)), s"$dir/in/deletes"))
+    assert(delPq === 2, s2.mkString("; "))
+    assert(!new java.io.File(s"$dir/store/delta_b$batchId").exists())
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
   test("scalar single-query door: same answer as the DataFrame door " +

@@ -672,17 +672,18 @@ class MaintenanceSpec extends AnyFunSuite {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
-  test("saveState(tombstonesKnownEmpty): no tombstone parquet is " +
-      "written, loadState rebuilds the empty frame from the meta, and " +
-      "the first tick over the reloaded state equals the tick over the " +
-      "in-memory state") {
+  test("saveState writes no tombstone parquet for a provably empty " +
+      "table (loadState rebuilds it from the meta), writes and " +
+      "round-trips one that is only empty at runtime, and the first " +
+      "tick over the reloaded state equals the tick over the in-memory " +
+      "state") {
     val dir = java.nio.file.Files.createTempDirectory("mtombs0").toString
     val ids = (0L until 40L).map(_ -> 0)
     val door = new Maintenance.Bm25Door(col("text"), nBuckets)
     val (p0, s0) = Bm25Index.build(docs(ids), col("doc_id"),
       col("text"), nBuckets)
     val st = Maintenance.initialState(spark, door, Some(s0))
-    Maintenance.saveState(st, s"$dir/state", tombstonesKnownEmpty = true)
+    assert(Maintenance.saveState(st, s"$dir/state") === 0L)
     assert(!new java.io.File(s"$dir/state/tombstones").exists(),
       "the empty tombstone table must not be written as parquet")
     val st2 = Maintenance.loadState(spark, s"$dir/state")
@@ -690,6 +691,20 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(st2.tombstones.count() === 0L)
     assert(st2.nextGen === st.nextGen)
     assert(st2.stats.get.collect().toSeq === st.stats.get.collect().toSeq)
+    // zero rows the optimizer cannot see (a filter over a parquet scan):
+    // the save writes the parquet and observes the zero itself
+    val tombPath = s"$dir/tombs_in"
+    door.tombstones(docs(Seq(7L -> 0)).select(col("doc_id")), 3L)
+      .write.parquet(tombPath)
+    val runtimeEmpty = spark.read.parquet(tombPath)
+      .where(col("upto_gen") > 3L)
+    val stR = st.copy(tombstones = runtimeEmpty)
+    assert(Maintenance.saveState(stR, s"$dir/stateR") === 0L)
+    assert(new java.io.File(s"$dir/stateR/tombstones").exists(),
+      "a tombstone table not proven empty must be written")
+    val stR2 = Maintenance.loadState(spark, s"$dir/stateR")
+    assert(stR2.tombstones.schema === runtimeEmpty.schema)
+    assert(stR2.tombstones.count() === 0L)
     // the reloaded empty tombstones behave exactly like the in-memory
     // zero-row frame under a real tick (guard joins, demotion, fold)
     val storeA = new Maintenance.FrameStore(Bm25Index.stampGen(p0, 0L))

@@ -5,11 +5,15 @@ Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
 
 For each query in oracle_sql.json: run the SQL in DuckDB (tables registered
 as views over the sfDir parquet files), load the Spark result parquet, sort
-columns by name, sort rows, and compare cell values.
+columns by name, sort rows, and compare cell values. The DuckDB connection
+runs under a fixed memory limit (MEMORY_LIMIT); a query that exceeds it is
+reported as a failure by name.
 """
 import json, sys, glob
 import duckdb
 import pandas as pd
+
+MEMORY_LIMIT = "4GB"
 
 def norm(df: pd.DataFrame) -> pd.DataFrame:
     df = df.reindex(sorted(df.columns), axis=1)
@@ -20,6 +24,9 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
 
 def main(sf_dir: str, out_dir: str) -> int:
     con = duckdb.connect()
+    # bounded, so a query that outgrows it fails by name (a DuckDB
+    # out-of-memory error) instead of exhausting a shared host
+    con.execute(f"SET memory_limit='{MEMORY_LIMIT}'")
     for t in ["region","nation","customer","supplier","part","orders",
               "lineitem","events","documents","embeddings"]:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
